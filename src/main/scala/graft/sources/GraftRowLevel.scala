@@ -51,6 +51,14 @@ class GraftRowLevelOperation(path: String, tableSchema: StructType,
 
   override def command(): RowLevelOperation.Command = cmd
 
+  // the main version the statement reads AND commits against, pinned
+  // once: the commit lands on it by the merge-on-read rebase rule, so a
+  // row another writer commits for one of the statement's keys between
+  // the scan and the commit fails the statement instead of being
+  // silently hidden by its delete file
+  private lazy val pinned: Option[Long] =
+    Some(ManifestTable.latestVersion(path)).filter(_ > 0)
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // branch-session DML: the discovery scan resolves the REF's
     // snapshot, so chained corrections see their own earlier branch
@@ -59,7 +67,7 @@ class GraftRowLevelOperation(path: String, tableSchema: StructType,
     val snap = org.apache.spark.sql.SparkSession.active.conf
       .getOption("spark.graft.branch").map(_.trim).filter(_.nonEmpty)
       .flatMap(b => ManifestTable.resolveBranch(path, b))
-    new GraftScanBuilder(path, snap, tableSchema)
+    new GraftScanBuilder(path, snap.orElse(pinned), tableSchema)
   }
 
   override def rowId(): Array[NamedReference] =
@@ -68,22 +76,25 @@ class GraftRowLevelOperation(path: String, tableSchema: StructType,
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder = {
     val keySchema = info.rowIdSchema().orElse(
       StructType(keyCols.map(k => tableSchema(k).copy(nullable = false))))
-    new GraftDeltaWriteBuilder(path, info.schema(), keySchema, keyCols)
+    new GraftDeltaWriteBuilder(path, info.schema(), keySchema, keyCols,
+      pinned)
   }
 }
 
 class GraftDeltaWriteBuilder(path: String, rowSchema: StructType,
-    keySchema: StructType, keyCols: Seq[String]) extends DeltaWriteBuilder {
+    keySchema: StructType, keyCols: Seq[String],
+    baseVersion: Option[Long]) extends DeltaWriteBuilder {
   override def build(): DeltaWrite =
-    new GraftDeltaWrite(path, rowSchema, keySchema, keyCols)
+    new GraftDeltaWrite(path, rowSchema, keySchema, keyCols, baseVersion)
 }
 
 class GraftDeltaWrite(path: String, rowSchema: StructType,
-    keySchema: StructType, keyCols: Seq[String]) extends DeltaWrite
+    keySchema: StructType, keyCols: Seq[String],
+    baseVersion: Option[Long]) extends DeltaWrite
   with RequiresDistributionAndOrdering {
 
   override def toBatch: DeltaBatchWrite =
-    new GraftDeltaBatchWrite(path, rowSchema, keySchema, keyCols)
+    new GraftDeltaBatchWrite(path, rowSchema, keySchema, keyCols, baseVersion)
 
   // OPTIMIZED WRITES (Delta's optimizeWrite / Iceberg's distribution
   // mode): cluster the delta rows by merge key before the writers run,
@@ -109,7 +120,8 @@ final case class GraftDeltaCommitMessage(upsertFiles: Seq[String],
     deleteFiles: Seq[String]) extends WriterCommitMessage
 
 class GraftDeltaBatchWrite(path: String, rowSchema: StructType,
-    keySchema: StructType, keyCols: Seq[String]) extends DeltaBatchWrite {
+    keySchema: StructType, keyCols: Seq[String],
+    baseVersion: Option[Long]) extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     // logical → physical names (column mapping): the delta files must
@@ -125,7 +137,8 @@ class GraftDeltaBatchWrite(path: String, rowSchema: StructType,
       .flatten.toSeq.sorted
     val dels = messages.collect { case m: GraftDeltaCommitMessage => m.deleteFiles }
       .flatten.toSeq.sorted
-    try ManifestTable.commitStagedDelta(SparkSession.active, path, ups, dels, keyCols)
+    try ManifestTable.commitStagedDelta(SparkSession.active, path, ups, dels,
+      keyCols, baseVersion)
     catch { case e: Throwable => cleanup(ups ++ dels); throw e }
   }
 

@@ -1404,11 +1404,6 @@ object ManifestTable {
     latest(path).map(_.constraints)
       .getOrElse(GraftCatalog.readDeclaredConstraints(Paths.get(path)))
 
-  /** Declare table CHECK constraints — a metadata-only commit (same
-    * files, stats, seqs, deletes). Existing rows validate FIRST (one
-    * fail-fast scan — the ALTER TABLE ADD CONSTRAINT rule); every
-    * subsequent append/overwrite/merge enforces in-scan. Replaces the
-    * previous constraint set; pass Seq.empty to drop all constraints. */
   /** The table's declared generated columns (empty if none/absent):
     * manifest metadata once any commit landed, the CREATE-time DDL
     * declaration before. */
@@ -1424,83 +1419,55 @@ object ManifestTable {
     * validate (their sources carry the table schema); appends and
     * overwrites compute. An empty list drops all definitions. */
   def setGeneratedColumns(spark: SparkSession, path: String,
-      gens: Seq[(String, String)]): Long = {
-    require(latest(path).isDefined, s"no table at $path")
-    var attempts = 0
-    // full reconciled validation once; a lost race re-proves ONLY the
-    // files added since (the setConstraints delta economy — see there)
-    var validatedVersion = -1L
-    var validatedFiles = Set.empty[String]
-    while (attempts < 64) {
-      attempts += 1
-      val base = latest(path).get
-      if (gens.nonEmpty && base.version != validatedVersion) {
-        val delta = base.files.filterNot(validatedFiles)
-        if (validatedVersion < 0 ||
-            !filesSatisfy(spark, path, delta, Seq.empty, gens,
-              base.renames, base.droppedCols)) {
-          val df = read(spark, path, Some(base.version))
-          gens.foreach { case (c, _) =>
-            require(df.columns.contains(c),
-              s"generated column '$c' does not exist in the table — " +
-                "declare it over a table that already carries the column") }
-          applyGenerated(df, gens).count() // fail-fast mismatch scan
-        }
-        validatedVersion = base.version
-        validatedFiles = base.files.toSet
+      gens: Seq[(String, String)]): Long =
+    commitContract(spark, path, Seq.empty, gens,
+      Change(generated = Some(gens), dataChange = false)) { m =>
+        val df = read(spark, path, Some(m.version))
+        gens.foreach { case (c, _) =>
+          require(df.columns.contains(c),
+            s"generated column '$c' does not exist in the table — " +
+              "declare it over a table that already carries the column") }
+        applyGenerated(df, gens).count() // fail-fast mismatch scan
       }
-      val m = base.copy(version = base.version + 1, parent = base.version,
-        commitId = None, generated = gens, commitTs = None)
-      val target = manifestDir(path).resolve(f"v${m.version}%08d.json")
-      beforePublishHook() // race-injection seam (specs/gates; no-op live)
-      try { publish(target, render(path, m)); return m.version }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-    throw new IllegalStateException(
-      s"commit contention in setGeneratedColumns: gave up after $attempts attempts")
-  }
 
+  /** Declare table CHECK constraints — a metadata-only commit (same
+    * files, stats, seqs, deletes). Existing rows validate FIRST (one
+    * fail-fast scan — the ALTER TABLE ADD CONSTRAINT rule); every
+    * subsequent append/overwrite/merge enforces in-scan. Replaces the
+    * previous constraint set; pass Seq.empty to drop all constraints. */
   def setConstraints(spark: SparkSession, path: String,
-      cons: Seq[String]): Long = {
-    require(latest(path).isDefined, s"no table at $path")
-    var attempts = 0
-    // existing rows validate against the EXACT version the constraint
-    // commit lands on: a lost publish race means a concurrent write
-    // slipped in between, and its rows must be scanned too — otherwise
-    // the table would assert an invariant its data was never checked
-    // against (the ALTER TABLE ADD CONSTRAINT race). The FIRST pass is
-    // a full reconciled-table scan; a lost race re-validates ONLY the
-    // files added since (deletes can't introduce violations), so a
-    // nightly constraint pass racing the ingest cadence costs O(delta)
-    // per retry, not O(table) — the metadata×data conflict scope. A
-    // raw delta file may carry MoR-hidden rows, so a delta refusal
-    // falls back to the exact reconciled scan before giving up.
-    var validatedVersion = -1L
-    var validatedFiles = Set.empty[String]
-    while (attempts < 64) {
-      attempts += 1
-      val base = latest(path).get
-      if (cons.nonEmpty && base.version != validatedVersion) {
-        val delta = base.files.filterNot(validatedFiles)
-        if (validatedVersion < 0 ||
-            !filesSatisfy(spark, path, delta, cons, Seq.empty,
-              base.renames, base.droppedCols))
-          enforceConstraints(read(spark, path, Some(base.version)), cons).count()
-        validatedVersion = base.version
-        validatedFiles = base.files.toSet
+      cons: Seq[String]): Long =
+    commitContract(spark, path, cons, Seq.empty,
+      Change(constraints = Some(cons), dataChange = false)) { m =>
+        enforceConstraints(read(spark, path, Some(m.version)), cons).count()
       }
-      // commitTs = None: render() stamps THIS commit's wall time — copying
-      // the parent's would misdate the constraints commit for
-      // TIMESTAMP AS OF between the parent and this version
-      val m = base.copy(version = base.version + 1, parent = base.version,
-        commitId = None, constraints = cons, commitTs = None)
-      val target = manifestDir(path).resolve(f"v${m.version}%08d.json")
-      beforePublishHook() // race-injection seam (specs/gates; no-op live)
-      try { publish(target, render(path, m)); return m.version }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-    throw new IllegalStateException(
-      s"commit contention in setConstraints: gave up after $attempts attempts")
+
+  /** Land a contract commit (`c` re-declares constraints or generated
+    * columns) only once every live row satisfies `cons` and `gens`:
+    * `fullCheck` scans the reconciled version the claim lands on. The
+    * FIRST check is the full scan at the base; a lost claim re-proves
+    * ONLY the files added since (deletes can't introduce violations), so
+    * a nightly constraint pass racing the ingest cadence costs O(delta)
+    * per retry, not O(table) — the metadata×data conflict scope. A raw
+    * delta file may carry MoR-hidden rows, so a delta refusal falls back
+    * to the full scan at that head before failing. Without this, the
+    * table could assert an invariant a racing write's rows were never
+    * checked against (the ALTER TABLE ADD CONSTRAINT race). */
+  private def commitContract(spark: SparkSession, path: String,
+      cons: Seq[String], gens: Seq[(String, String)], c: Change)(
+      fullCheck: Manifest => Unit): Long = {
+    val base = latest(path)
+    require(base.isDefined, s"no table at $path")
+    val checks = cons.nonEmpty || gens.nonEmpty
+    if (checks) fullCheck(base.get)
+    var proven = base.get.files.toSet
+    claim(path, base, c, Rebase(None, (head, _) => {
+      if (checks && !filesSatisfy(spark, path,
+          head.files.filterNot(proven), cons, gens, head.renames,
+          head.droppedCols)) fullCheck(head)
+      proven = head.files.toSet
+      None
+    }))
   }
 
   // ───────────────────────── column mapping ─────────────────────────
@@ -1546,33 +1513,26 @@ object ManifestTable {
     * spans a rename compares frames under different logical names and
     * fails loudly at analysis — drain up to the rename, then from it. */
   def renameColumn(spark: SparkSession, path: String, from: String,
-      to: String): Long = {
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
-      val base = latest(path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val logical = schemaAt(spark, path, Some(base.version)).fieldNames.toSeq
-      require(logical.contains(from), s"no column '$from' at $path")
-      require(!logical.exists(_.equalsIgnoreCase(to)),
-        s"column '$to' already exists")
-      requireUnreferenced(base, from, "rename")
-      val physical = base.renames.getOrElse(from, from)
-      val frozen = logical.map(n => base.renames.getOrElse(n, n)).toSet ++
-        base.droppedCols ++ base.renames.values
-      require(physical == to || !frozen.exists(_.equalsIgnoreCase(to)),
-        s"'$to' collides with a live or historical physical column name")
-      val nr =
-        if (physical == to) base.renames - from
-        else base.renames - from + (to -> physical)
-      val m = base.copy(version = base.version + 1, parent = base.version,
-        commitId = None, commitTs = None, dataChange = false, renames = nr)
-      val target = manifestDir(path).resolve(f"v${m.version}%08d.json")
-      try { publish(target, render(path, m)); return m.version }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-    throw new IllegalStateException(
-      s"commit contention in renameColumn: gave up after $attempts attempts")
+      to: String): Long = rerun {
+    val base = latest(path).getOrElse(
+      throw new IllegalStateException(s"no committed version at $path"))
+    val logical = schemaAt(spark, path, Some(base.version)).fieldNames.toSeq
+    require(logical.contains(from), s"no column '$from' at $path")
+    require(!logical.exists(_.equalsIgnoreCase(to)),
+      s"column '$to' already exists")
+    requireUnreferenced(base, from, "rename")
+    val physical = base.renames.getOrElse(from, from)
+    val frozen = logical.map(n => base.renames.getOrElse(n, n)).toSet ++
+      base.droppedCols ++ base.renames.values
+    require(physical == to || !frozen.exists(_.equalsIgnoreCase(to)),
+      s"'$to' collides with a live or historical physical column name")
+    val nr =
+      if (physical == to) base.renames - from
+      else base.renames - from + (to -> physical)
+    // the mapping is computed from this exact base: a moved head re-runs
+    // the checks against the new one
+    claim(path, Some(base), Change(mapping = Some((nr, base.droppedCols)),
+      dataChange = false), Rebase.Strict)
   }
 
   /** DROP COLUMN as a metadata-only commit: the physical column is
@@ -1580,27 +1540,18 @@ object ManifestTable {
     * bytes must go). The dropped physical name stays frozen — a later
     * ADD COLUMN may not re-use it, or the hidden bytes would resurface
     * under the new column. */
-  def dropColumn(spark: SparkSession, path: String, name: String): Long = {
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
-      val base = latest(path).getOrElse(
-        throw new IllegalStateException(s"no committed version at $path"))
-      val logical = schemaAt(spark, path, Some(base.version)).fieldNames.toSeq
-      require(logical.contains(name), s"no column '$name' at $path")
-      require(logical.size > 1, "cannot drop a table's only column")
-      requireUnreferenced(base, name, "drop")
-      val physical = base.renames.getOrElse(name, name)
-      val m = base.copy(version = base.version + 1, parent = base.version,
-        commitId = None, commitTs = None, dataChange = false,
-        renames = base.renames - name,
-        droppedCols = (base.droppedCols :+ physical).distinct)
-      val target = manifestDir(path).resolve(f"v${m.version}%08d.json")
-      try { publish(target, render(path, m)); return m.version }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-    throw new IllegalStateException(
-      s"commit contention in dropColumn: gave up after $attempts attempts")
+  def dropColumn(spark: SparkSession, path: String, name: String): Long =
+      rerun {
+    val base = latest(path).getOrElse(
+      throw new IllegalStateException(s"no committed version at $path"))
+    val logical = schemaAt(spark, path, Some(base.version)).fieldNames.toSeq
+    require(logical.contains(name), s"no column '$name' at $path")
+    require(logical.size > 1, "cannot drop a table's only column")
+    requireUnreferenced(base, name, "drop")
+    val physical = base.renames.getOrElse(name, name)
+    claim(path, Some(base), Change(mapping = Some((base.renames - name,
+      (base.droppedCols :+ physical).distinct)), dataChange = false),
+      Rebase.Strict)
   }
 
   /** Frozen physical names that may never be (re-)introduced as new
@@ -2151,135 +2102,253 @@ object ManifestTable {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** The append/overwrite successor manifest of `cur` — the shared
-    * construction between the single-table [[commit]] loop and the
-    * multi-table [[commitTxn]] protocol (which must build each table's
-    * next manifest BEFORE claiming its version slot). */
-  private def buildNext(path: String, cur: Option[Manifest], next: Long,
-      newFiles: Seq[String], replace: Boolean, commitId: Option[String],
-      newStats: Map[String, Map[String, ColStats]],
-      newRows: Map[String, Long],
-      appTxn: Option[(String, Long)] = None,
-      resetMapping: Boolean = false): Manifest = {
-    val files = if (replace) newFiles
-      else cur.map(_.files).getOrElse(Seq.empty) ++ newFiles
-    val stats = if (replace) newStats
-      else cur.map(_.stats).getOrElse(Map.empty) ++ newStats
-    // append: carried files keep their seq and the MoR delete files
-    // still apply to them; overwrite replaces everything, deletes too
-    val seqs = (if (replace) Map.empty[String, Long]
-      else cur.map(_.seqs).getOrElse(Map.empty)) ++ newFiles.map(_ -> next)
-    val deletes = if (replace) Seq.empty[(String, Long)]
-      else cur.map(_.deletes).getOrElse(Seq.empty)
-    val delStats = if (replace) Map.empty[String, Map[String, ColStats]]
-      else cur.map(_.deleteStats).getOrElse(Map.empty)
-    // constraints are TABLE metadata: they survive overwrite (the data
-    // is replaced, the table's contract is not); the FIRST commit seeds
-    // from the CREATE-time DDL declaration
-    val cons = cur.map(_.constraints)
-      .getOrElse(GraftCatalog.readDeclaredConstraints(Paths.get(path)))
-    val rowsM = (if (replace) Map.empty[String, Long]
-      else cur.map(_.rows).getOrElse(Map.empty)) ++ newRows
-    Manifest(next, files, commitId,
-      cur.map(_.version).getOrElse(0L), stats, seqs, deletes, cons,
-      deleteStats = delStats, rows = rowsM,
-      mergeKeys = cur.map(_.mergeKeys).getOrElse(Seq.empty),
-      generated = cur.map(_.generated)
-        .getOrElse(GraftCatalog.readDeclaredGenerated(Paths.get(path))),
+  // ── LOGICAL COMMIT-CONFLICT RESOLUTION: THE ONE COMMIT LOOP ──────
+  //
+  // Every single-table commit is a [[Change]] — the files it adds (with
+  // their seqs), the files it removes, the delete files it adds, the
+  // table metadata it re-declares, its dataChange flag — landed by ONE
+  // loop, [[claim]]: read the head, build its [[successor]], fire
+  // [[beforePublishHook]], and claim `v<head+1>.json` through
+  // [[publish]] (the atomic create: whoever links the version first
+  // wins). A lost claim re-reads the head and either REBASES — the same
+  // change applied to the new head, zero bytes re-staged — or reports a
+  // [[CommitConflict]] to the caller, which re-plans through [[rerun]]
+  // or refuses loudly (a user's [[TableTxn]], a DML fast-forward).
+  //
+  // The rebase rule is exact, not heuristic. Against the base the
+  // change was planned on, a moved head is adopted iff:
+  //
+  //   1. a REWRITE's inputs (the files it consumed) are still live at
+  //      the head — the winner didn't rewrite/remove what we read;
+  //   2. for a rewrite, the MoR delete ledger and the merge keys are
+  //      unchanged — a delete landing mid-rewrite would be folded away
+  //      by our staged files' fresh seq, silently resurrecting the
+  //      winner's deleted rows;
+  //   3. staged rows re-prove against a drifted contract (constraints,
+  //      generated columns) with one O(staged) scan — the metadata
+  //      commit validated every other row at its own version; column
+  //      mapping drift is free (physical names are frozen at birth);
+  //   4. the change's own check ([[Rebase.admits]]) accepts the files
+  //      the winner ADDED: a predicate-scoped rewrite proves none holds
+  //      an in-scope row, a keyed write that none holds one of its keys
+  //      — scans over only the winner's delta, O(winner's commit).
+  //
+  // Appends and overwrites are BLIND (their staged files are
+  // head-independent: only rule 3 applies); metadata-only commits re-run
+  // their own proof on the winner's delta; commits whose change is
+  // computed from the exact base (column mapping, restore, a DML
+  // fast-forward's pinned seqs) are STRICT — any moved head conflicts.
+  // Rebase is an optimization, never a semantics change: a refused
+  // rebase re-runs, and a re-run is what the claim race always was.
+
+  /** One commit's change, independent of the head it lands on. */
+  private final case class Change(
+      // data files added; each lands at the claimed version's seq unless
+      // `seqs` pins it (a branch fast-forward keeps its commits' order)
+      added: Seq[String] = Seq.empty,
+      seqs: Map[String, Long] = Map.empty,
+      // footer stats of the added data files; row counts and recorded
+      // sizes of every added file, delete files included
+      stats: Map[String, Map[String, ColStats]] = Map.empty,
+      rows: Map[String, Long] = Map.empty,
+      bytes: Map[String, Long] = Map.empty,
+      // head files the commit drops — a rewrite's consumed inputs
+      removed: Set[String] = Set.empty,
+      // overwrite: every head file and the whole delete ledger go
+      replace: Boolean = false,
+      // merge-on-read delete files added, each with its seq
+      deletes: Seq[(String, Long)] = Seq.empty,
+      deleteStats: Map[String, Map[String, ColStats]] = Map.empty,
+      // the rewrite carries the ledger's effect in data: drop the ledger
+      foldDeletes: Boolean = false,
+      // table metadata the commit re-declares; None carries the head's
+      constraints: Option[Seq[String]] = None,
+      generated: Option[Seq[(String, String)]] = None,
+      mapping: Option[(Map[String, String], Seq[String])] = None,
+      mergeKeys: Option[Seq[String]] = None,
+      txn: Option[(String, Long)] = None,
+      commitId: Option[String] = None,
+      dataChange: Boolean = true)
+
+  /** The manifest `c` makes of `head` at version `next` — the one place
+    * a next manifest is built. Kept files carry their seq, stats, row
+    * count and recorded size (render's one stat per file fills the new
+    * sizes); added files land at `next` unless pinned. The FIRST commit
+    * (no head) seeds the contract from the CREATE-time DDL declaration.
+    * dataChange and rebasedFrom are always this commit's own, never
+    * inherited. */
+  private def successor(path: String, head: Option[Manifest], next: Long,
+      c: Change, rebasedFrom: Option[Long] = None): Manifest = {
+    val h = head.getOrElse(Manifest(0L, Seq.empty, None, 0L,
+      constraints = GraftCatalog.readDeclaredConstraints(Paths.get(path)),
+      generated = GraftCatalog.readDeclaredGenerated(Paths.get(path))))
+    // per-file maps update by the change alone — O(change), not
+    // O(table): render writes entries for live files only
+    def carry[V](m: Map[String, V]) = if (c.replace) Map.empty[String, V]
+      else m -- c.removed
+    val clearLedger = c.replace || c.foldDeletes
+    Manifest(next,
+      (if (c.replace) Seq.empty else h.files.filterNot(c.removed)) ++ c.added,
+      c.commitId, h.version,
+      stats = carry(h.stats) ++ c.stats,
+      seqs = carry(h.seqs) ++ c.added.map(f => f -> c.seqs.getOrElse(f, next)),
+      deletes = (if (clearLedger) Seq.empty else h.deletes) ++ c.deletes,
+      constraints = c.constraints.getOrElse(h.constraints),
+      deleteStats =
+        if (clearLedger) c.deleteStats else h.deleteStats ++ c.deleteStats,
+      rows = carry(h.rows) ++ c.rows,
+      mergeKeys = c.mergeKeys.getOrElse(h.mergeKeys),
+      dataChange = c.dataChange,
+      generated = c.generated.getOrElse(h.generated),
       // the txn ledger carries forward (overwrite included: replay
-      // protection must survive a Complete-mode epoch replacing the
-      // data), updated by this commit's app transaction if it has one
-      txns = cur.map(_.txns).getOrElse(Map.empty) ++ appTxn,
-      // column mapping is table metadata like constraints: staged files
-      // were translated to PHYSICAL names on the way in, so the mapping
-      // survives append AND overwrite. The one reset is REPLACE TABLE
-      // AS SELECT: its staged files carry the replacement query's own
-      // names as fresh physical names (`resetMapping`).
-      renames = if (resetMapping) Map.empty
-        else cur.map(_.renames).getOrElse(Map.empty),
-      droppedCols = if (resetMapping) Seq.empty
-        else cur.map(_.droppedCols).getOrElse(Seq.empty),
-      // carried files keep their recorded sizes (no re-stat per commit);
-      // the NEW files' sizes are filled by render's one-stat-per-file
-      bytes = if (replace) Map.empty
-        else cur.map(_.bytes).getOrElse(Map.empty))
+      // protection must survive a Complete-mode epoch replacing the data)
+      txns = h.txns ++ c.txn,
+      renames = c.mapping.fold(h.renames)(_._1),
+      droppedCols = c.mapping.fold(h.droppedCols)(_._2),
+      bytes = carry(h.bytes) ++ c.bytes,
+      rebasedFrom = rebasedFrom)
   }
 
-  private def commit(path: String, newFiles: Seq[String], replace: Boolean,
-      commitId: Option[String],
-      appTxn: Option[(String, Long)] = None,
-      resetMapping: Boolean = false,
-      // the manifest the caller's staging validated against: when the
-      // head this commit lands on carries a DIFFERENT contract
-      // (constraints/generated — a metadata commit raced us), the staged
-      // files re-validate against the head's contract before adoption.
-      // Without this, an append racing ADD CONSTRAINT could land rows
-      // the table's invariant never checked. None = caller has no
-      // staged-validation context (legacy/metadata-only paths).
-      stagedUnder: Option[Manifest] = None): Long =
-      CommitProfile.timed("commit") {
-    Files.createDirectories(manifestDir(path))
-    val (newStats, newRows) = footerHarvest(path, newFiles)
-    var attempts = 0
+  /** How a claim resolves against a head that moved past its base.
+    * `inputs` marks a REWRITE: those files must still be live and the
+    * delete ledger and merge keys unmoved. `admits` receives the head
+    * and the files it added since the base; Some(reason) is a conflict. */
+  private final case class Rebase(inputs: Option[Set[String]],
+      admits: (Manifest, Seq[String]) => Option[String])
+
+  private object Rebase {
+    val Blind = Rebase(None, (_, _) => None)
+    val Strict = Rebase(None, (_, _) => Some("a concurrent commit landed first"))
+    def rewrite(inputs: Set[String],
+        admits: (Manifest, Seq[String]) => Option[String] = (_, _) => None) =
+      Rebase(Some(inputs), admits)
+  }
+
+  /** A lost claim the change cannot rebase across: nothing landed. An
+    * IllegalArgumentException — the type bundle refusals always had —
+    * so [[rerun]] tells it from every other failure by type. */
+  private[graft] final class CommitConflict(msg: String)
+    extends IllegalArgumentException(msg)
+
+  /** TEST SEAM: invoked before every claim of a next version — lets
+    * specs and gates inject a racing commit at the exact point where
+    * the optimistic claim will be lost. Reset it in the injected body
+    * (one-shot) or the racing commit recurses. */
+  private[graft] var beforePublishHook: () => Unit = () => ()
+
+  private val ClaimAttempts = 64
+  private val RerunAttempts = 8
+
+  /** Land `c` as the next version of `path`; returns that version (or,
+    * with `replay`, the version an earlier landing of the same txn
+    * epoch / commit id took). `base` is the manifest the change was
+    * planned against: the first claim goes straight for its successor
+    * and a moved head is judged by `rebase`. Without a base the commit
+    * is blind and reads the head on every attempt. `stagedUnder` is the
+    * contract the staged rows validated against when it is not the
+    * base's (None without a base: no re-validation context). */
+  private def claim(path: String, base: Option[Manifest], c: Change,
+      rebase: Rebase = Rebase.Blind, stagedUnder: Option[Manifest] = None,
+      replay: Boolean = false): Long = {
+    if (base.isEmpty) Files.createDirectories(manifestDir(path))
+    val under = stagedUnder.orElse(base)
+    val baseFiles = base.map(_.files.toSet).getOrElse(Set.empty[String])
+    def conflict(why: String) =
+      throw new CommitConflict(s"commit conflict at $path: $why")
+    // contracts the staged rows were already proven against
     var proven = Set.empty[(Seq[String], Seq[(String, String)])]
-    while (attempts < 64) {
+    var attempts = 0
+    while (attempts < ClaimAttempts) {
       attempts += 1
-      val cur = latest(path)
+      val head = if (attempts == 1 && base.isDefined) base else latest(path)
+      if (replay) {
+        // O(1) idempotent replay for transactional writers from the
+        // head's txn ledger; otherwise the O(versions) commit-id scan
+        for ((app, epoch) <- c.txn; h <- head if h.txns.get(app).exists(_ >= epoch))
+          return h.version
+        CommitProfile.timed("replayScan") {
+          if (c.txn.isDefined) None else c.commitId.flatMap(id =>
+            versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
+        }.foreach(m => return m.version)
+      }
+      val rebasedFrom = for (b <- base; h <- head if h.version != b.version)
+        yield {
+          rebase.inputs.foreach { in =>
+            val live = h.files.toSet
+            if (!in.forall(live)) conflict(
+              "a concurrent commit rewrote files this commit consumed")
+            if (h.deletes != b.deletes || h.deleteStats != b.deleteStats ||
+                h.mergeKeys != b.mergeKeys) conflict(
+              "the delete ledger or merge keys moved under this commit")
+          }
+          rebase.admits(h, h.files.filterNot(baseFiles)).foreach(conflict)
+          b.version
+        }
       for {
-        su <- stagedUnder
-        c <- cur
-        if newFiles.nonEmpty &&
-          (c.constraints != su.constraints || c.generated != su.generated) &&
-          !proven((c.constraints, c.generated))
+        u <- under
+        h <- head
+        contract = (h.constraints, h.generated)
+        if c.added.nonEmpty && contract != ((u.constraints, u.generated)) &&
+          !proven(contract)
       } {
-        // drift detected with rows staged: validation is mandatory — a
-        // missing session must fail the commit, not silently skip the
-        // exact check this parameter exists to run
+        // drift with rows staged: validation is mandatory — a missing
+        // session must fail the commit, not skip the exact check
         val spark = SparkSession.getActiveSession
           .orElse(SparkSession.getDefaultSession)
           .getOrElse(throw new IllegalStateException(
             s"a contract commit landed at $path while this write was " +
               "staging and no SparkSession is available to re-validate " +
               "the staged rows - refusing to commit unvalidated"))
-        require(filesSatisfy(spark, path, newFiles, c.constraints,
-            c.generated, c.renames, c.droppedCols),
-          s"a constraint/generated-column commit landed at $path while " +
+        if (!filesSatisfy(spark, path, c.added, h.constraints, h.generated,
+            h.renames, h.droppedCols))
+          conflict("a constraint/generated-column commit landed while " +
             "this write was staging, and the staged rows do not satisfy " +
-            "the new contract " + c.constraints.mkString("[", "; ", "]"))
-        proven += ((c.constraints, c.generated))
+            "the new contract " + h.constraints.mkString("[", "; ", "]"))
+        proven += contract
       }
-      // O(1) idempotent replay for transactional writers: the latest
-      // manifest's txn ledger answers from ONE read (the commit-id scan
-      // below is O(versions) — fine for one-shot jobs, not for a
-      // streaming epoch check that runs per batch forever)
-      val txnReplayed = for {
-        (app, epoch) <- appTxn
-        c <- cur
-        if c.txns.get(app).exists(_ >= epoch)
-      } yield c.version
-      if (txnReplayed.isDefined) return txnReplayed.get
-      // idempotent replay: an already-landed commit id wins immediately
-      // (skipped when the txn ledger owns replay protection)
-      val replayed = CommitProfile.timed("replayScan") {
-        if (appTxn.isDefined) None else commitId.flatMap(id =>
-          versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
-      }
-      if (replayed.isDefined) return replayed.get.version
-      val next = cur.map(_.version + 1).getOrElse(1L)
-      val m = buildNext(path, cur, next, newFiles, replace, commitId,
-        newStats, newRows, appTxn, resetMapping)
-      val target = manifestDir(path).resolve(f"v$next%08d.json")
+      val next = head.fold(1L)(_.version + 1)
       beforePublishHook() // race-injection seam (specs/gates; no-op live)
       try {
-        // publish is the optimistic lock: exactly one writer can link
-        // v<next>; losers re-read latest and retry on top
-        publish(target, render(path, m))
+        publish(manifestDir(path).resolve(f"v$next%08d.json"),
+          render(path, successor(path, head, next, c, rebasedFrom)))
         return next
       } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // lost the race
+        case _: java.nio.file.FileAlreadyExistsException => () // lost the claim
       }
     }
-    throw new IllegalStateException(s"commit contention: gave up after $attempts attempts")
+    throw new IllegalStateException(
+      s"commit contention at $path: gave up after $attempts attempts")
+  }
+
+  /** Re-run `attempt` — re-plan, re-stage, re-claim from a fresh base —
+    * while its claim reports a [[CommitConflict]]: the one retry for
+    * commits whose staged work cannot rebase onto the winner (the
+    * abandoned files are vacuum's). Any other failure propagates. */
+  private def rerun[A](attempt: => A, left: Int = RerunAttempts): A =
+    try attempt catch {
+      case _: CommitConflict if left > 1 => rerun(attempt, left - 1)
+    }
+
+  /** Append (or, `replace`, overwrite) staged files: a blind claim,
+    * re-checking replay on every attempt. `stagedUnder` is the manifest
+    * whose contract the staging validated against — a head carrying a
+    * DIFFERENT contract (a metadata commit raced us) re-validates the
+    * staged files before adoption, so an append racing ADD CONSTRAINT
+    * can never land rows the invariant never checked. None = no
+    * staged-validation context. `resetMapping` is REPLACE TABLE AS
+    * SELECT: its files carry the query's own names as fresh physical
+    * names. */
+  private def commit(path: String, newFiles: Seq[String], replace: Boolean,
+      commitId: Option[String],
+      appTxn: Option[(String, Long)] = None,
+      resetMapping: Boolean = false,
+      stagedUnder: Option[Manifest] = None): Long =
+      CommitProfile.timed("commit") {
+    val (newStats, newRows) = footerHarvest(path, newFiles)
+    claim(path, None, Change(added = newFiles, stats = newStats,
+        rows = newRows, replace = replace, txn = appTxn, commitId = commitId,
+        mapping = if (resetMapping) Some((Map.empty, Seq.empty)) else None),
+      stagedUnder = stagedUnder, replay = true)
   }
 
   /** Append-commit: new version = old files + df's files. */
@@ -2410,8 +2479,10 @@ object ManifestTable {
         writes.indices.foreach { i =>
           val md = manifestDir(writes(i).path)
           Files.writeString(md.resolve(stagedNames(i)),
-            render(writes(i).path, buildNext(writes(i).path, curs(i), nexts(i), stagedData(i),
-              writes(i).replace, commitId, statsRows(i)._1, statsRows(i)._2)))
+            render(writes(i).path, successor(writes(i).path, curs(i), nexts(i),
+              Change(added = stagedData(i), replace = writes(i).replace,
+                stats = statsRows(i)._1, rows = statsRows(i)._2,
+                commitId = commitId))))
           // non-coordinator tables get a pointer so recovery starting
           // from ANY table of the txn finds the one decision marker
           if (i != 0)
@@ -2538,13 +2609,6 @@ object ManifestTable {
     }
   }
 
-  /** Run a compaction attempt, RETRYING from a fresh base when a
-    * concurrent commit claims the version first (the same optimistic
-    * loop merge commits run): each attempt re-reads the head, re-plans
-    * its scope against it, re-stages, and tries the next slot — never
-    * clobbering the winner's rows; the loser's staged files are
-    * abandoned for vacuum. Attempts are bounded small because each one
-    * re-stages data (unlike a metadata-only merge retry). */
   // ─────────────── single-table multi-action transactions ───────────
   //
   // Iceberg's `table.newTransaction()` (public API; Delta has no
@@ -2582,7 +2646,10 @@ object ManifestTable {
   }
 
   final class TableTxn private[ManifestTable] (spark: SparkSession,
-      path: String, commitId: Option[String]) {
+      path: String, commitId: Option[String],
+      // re-check the commit id at commit (a bundle may stay open long);
+      // a one-action standalone rewrite checks once, at open
+      replayAtCommit: Boolean = true) {
     import org.apache.spark.sql.functions.{assert_true, coalesce, col, lit, when}
 
     private val base: Manifest = latest(path).getOrElse(
@@ -2689,10 +2756,11 @@ object ManifestTable {
         val upserts = deleteWhen.map(c => raw.where(!coalesce(c, lit(false))))
           .getOrElse(raw).select(cols.map(col): _*)
         requireKeyedSplits(upserts, tombstones, keyCols)
-        val srcKeys = tombstones.select(keyCols.map(col): _*)
+        val keys = tombstones.select(keyCols.map(col): _*)
           .unionByName(upserts.select(keyCols.map(col): _*)).distinct()
-          .coalesce(1) // key-set-sized: one block, not one per core
-          .localCheckpoint()
+        // sized by the key set's bytes (the CDF pin's rule): a few
+        // blocks for a correction batch, never one serial task at scale
+        val srcKeys = keys.coalesce(stageTasks(keys)).localCheckpoint()
         try {
         val touched =
           if (pending.files.isEmpty) Set.empty[String]
@@ -2734,9 +2802,18 @@ object ManifestTable {
       this
     }
 
-    /** The shared copy-on-write rewrite against the PENDING snapshot —
-      * the same candidate/must-match/touched/rewrite shape as the
-      * standalone [[rewriteWhereAttempt]], minus the publish. */
+    /** The copy-on-write rewrite against the PENDING snapshot — also
+      * the whole of the standalone [[ManifestTable.deleteWhere]] /
+      * [[ManifestTable.updateWhere]] / [[ManifestTable.replaceWhere]],
+      * which run as one-action transactions. Stats fast paths when the
+      * predicate rides the Condition algebra: (a) files whose stats
+      * prove NO row matches never join the discovery scan; (b) for
+      * DELETE/REPLACE, files whose stats prove EVERY row matches drop
+      * from the manifest WITHOUT being read (MoR-safe: hidden rows are a
+      * subset of the physical rows the proof covers). UPDATE rewrites
+      * its full-match files (values change). replaceWhere's inserted
+      * rows are gated in-scan to SATISFY the replaced predicate — a
+      * stray row outside the scope would survive the next replace. */
     private def rewriteWhere(cond: org.apache.spark.sql.Column,
         set: Option[Map[String, org.apache.spark.sql.Column]],
         insert: Option[DataFrame],
@@ -2796,223 +2873,123 @@ object ManifestTable {
 
     /** Publish the whole bundle as ONE version. Idempotent through
       * `commitId`; a moved head triggers the whole-bundle rebase or a
-      * loud refusal — never a partial landing. */
+      * loud refusal ([[CommitConflict]]) — never a partial landing. */
     def commit(): Long = {
       committed.foreach(v => return v)
-      def replayed: Option[Long] = commitId.flatMap(id =>
-        versions(path).map(manifestAt(path, _))
-          .find(_.commitId.contains(id)).map(_.version))
-      replayed.foreach { v => committed = Some(v); return v }
       if (pending == base) { // every action no-opped: nothing to commit
         committed = Some(base.version); return base.version
       }
       val baseFiles = base.files.toSet
-      val removedByTxn = baseFiles -- pending.files.toSet
+      val removedByTxn = baseFiles -- pending.files
       val addedByTxn = pending.files.filterNot(baseFiles)
-      var attempts = 0
-      var proven = Set.empty[(Seq[String], Seq[(String, String)])]
-      while (attempts < 16) {
-        attempts += 1
-        val head = latest(path).get
-        val next = head.version + 1
-        val m: Manifest =
-          if (head.version == base.version)
-            pending.copy(version = next, parent = head.version,
-              commitId = commitId, commitTs = None, rebasedFrom = None)
-          else {
-            // WHOLE-BUNDLE REBASE: one decision for all N actions.
-            require(removedByTxn.subsetOf(head.files.toSet),
-              s"transaction conflict at $path: a concurrent commit " +
-                "rewrote files this bundle consumed - re-run the bundle")
-            require(head.deletes == base.deletes &&
-              head.deleteStats == base.deleteStats &&
-              head.mergeKeys == base.mergeKeys,
-              s"transaction conflict at $path: the delete ledger or " +
-                "merge keys moved under this bundle - re-run the bundle")
-            require(!(consChanged && (head.constraints != base.constraints
-                || head.generated != base.generated)),
-              s"transaction conflict at $path: both this bundle and a " +
-                "concurrent commit changed the table contract")
-            val winnerAdded = (head.files.toSet -- baseFiles).toSeq
-            require(!(hasMerge && winnerAdded.nonEmpty),
-              s"transaction conflict at $path: the bundle carries a " +
-                "keyed merge and a concurrent commit added rows - their " +
-                "keys cannot be proven disjoint; re-run the bundle")
-            if (rewriteScopes.nonEmpty && winnerAdded.nonEmpty) {
-              val anyScope = rewriteScopes
-                .map(c => coalesce(c, lit(false))).reduce(_ || _)
-              require(spark.read
-                .schema(physicalSchemaAt(spark, path, head))
-                .parquet(winnerAdded.map(f =>
-                  dataDir(path).resolve(f).toString): _*)
-                .where(anyScope).limit(1).collect().isEmpty,
-                s"transaction conflict at $path: a concurrent commit " +
-                  "added rows inside this bundle's rewrite scope - " +
-                  "re-run the bundle")
-            }
-            // drift in the OTHER direction too: the bundle's new
-            // contract must hold for rows the winner added — the same
-            // delta proof the standalone setConstraints runs on a lost
-            // race, or the landed contract would assert an invariant
-            // the winner's rows were never checked against
-            if (consChanged && winnerAdded.nonEmpty) {
-              require(filesSatisfy(spark, path, winnerAdded,
-                pending.constraints, pending.generated, head.renames,
-                head.droppedCols),
-                s"transaction conflict at $path: rows a concurrent " +
-                  "commit added violate this bundle's new contract " +
-                  pending.constraints.mkString("[", "; ", "]"))
-            }
-            if ((head.constraints != base.constraints ||
-                head.generated != base.generated) && addedByTxn.nonEmpty &&
-                !proven((head.constraints, head.generated))) {
-              require(filesSatisfy(spark, path, addedByTxn,
-                head.constraints, head.generated, head.renames,
-                head.droppedCols),
-                s"a contract commit landed at $path during this " +
-                  "transaction and the bundle's staged rows do not " +
-                  "satisfy it " + head.constraints.mkString("[", "; ", "]"))
-              proven += ((head.constraints, head.generated))
-            }
-            Manifest(next,
-              head.files.filterNot(removedByTxn) ++ addedByTxn,
-              commitId, head.version,
-              stats = (head.stats -- removedByTxn) ++ addedByTxn.flatMap(
-                f => pending.stats.get(f).map(f -> _)),
-              seqs = (head.seqs -- removedByTxn) ++
-                addedByTxn.map(_ -> next),
-              deletes = head.deletes,
-              constraints =
-                if (consChanged) pending.constraints else head.constraints,
-              deleteStats = head.deleteStats,
-              rows = head.rows ++ addedByTxn.flatMap(f =>
-                pending.rows.get(f).map(f -> _)),
-              mergeKeys = keysSet.getOrElse(head.mergeKeys),
-              generated = head.generated,
-              txns = head.txns, renames = head.renames,
-              droppedCols = head.droppedCols, bytes = head.bytes,
-              rebasedFrom = Some(base.version))
-          }
-        // seqs of the bundle's files retarget to the slot actually
-        // claimed (MoR ordering: staged rows must outrank every
-        // pre-existing delete key)
-        val mSeq = m.copy(seqs = m.seqs ++ addedByTxn.map(_ -> next))
-        beforePublishHook()
-        try {
-          publish(manifestDir(path).resolve(f"v$next%08d.json"),
-            render(path, mSeq))
-          committed = Some(next); return next
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            replayed.foreach { v => committed = Some(v); return v }
-        }
-      }
-      throw new IllegalStateException(
-        s"commit contention in transaction at $path: " +
-          s"gave up after $attempts attempts")
+      // WHOLE-BUNDLE REBASE: one decision for all N actions, on top of
+      // the loop's input/ledger/contract rules
+      val admits = (head: Manifest, winnerAdded: Seq[String]) =>
+        if (consChanged && (head.constraints != base.constraints ||
+            head.generated != base.generated))
+          Some("both this bundle and a concurrent commit changed the " +
+            "table contract")
+        else if (hasMerge && winnerAdded.nonEmpty)
+          Some("the bundle carries a keyed merge and a concurrent commit " +
+            "added rows - their keys cannot be proven disjoint; re-run " +
+            "the bundle")
+        else if (rewriteScopes.nonEmpty && winnerAdded.nonEmpty &&
+            spark.read.schema(physicalSchemaAt(spark, path, head))
+              .parquet(winnerAdded.map(f =>
+                dataDir(path).resolve(f).toString): _*)
+              .where(rewriteScopes.map(c => coalesce(c, lit(false)))
+                .reduce(_ || _)).limit(1).collect().nonEmpty)
+          Some("a concurrent commit added rows inside this bundle's " +
+            "rewrite scope - re-run the bundle")
+        // drift in the OTHER direction too: the bundle's new contract
+        // must hold for rows the winner added — the delta proof the
+        // standalone setConstraints runs on a lost race
+        else if (consChanged && winnerAdded.nonEmpty &&
+            !filesSatisfy(spark, path, winnerAdded, pending.constraints,
+              pending.generated, head.renames, head.droppedCols))
+          Some("rows a concurrent commit added violate this bundle's new " +
+            "contract " + pending.constraints.mkString("[", "; ", "]"))
+        else None
+      val v = claim(path, Some(base), Change(added = addedByTxn,
+          stats = addedByTxn.flatMap(f => pending.stats.get(f).map(f -> _)).toMap,
+          rows = addedByTxn.flatMap(f => pending.rows.get(f).map(f -> _)).toMap,
+          removed = removedByTxn,
+          constraints = if (consChanged) Some(pending.constraints) else None,
+          mergeKeys = keysSet, commitId = commitId),
+        Rebase.rewrite(removedByTxn, admits), replay = replayAtCommit)
+      committed = Some(v)
+      v
     }
   }
 
-  private def retryCompaction(what: String)(attempt: () => Option[Long]): Long = {
-    var attempts = 0
-    while (attempts < 8) {
-      attempts += 1
-      attempt() match {
-        case Some(v) => return v
-        case None => () // lost the slot race: re-plan against the new head
-      }
-    }
-    throw new IllegalStateException(
-      s"commit contention in $what: gave up after $attempts attempts")
+  /** Run a one-action [[TableTxn]] — the standalone row-level rewrites —
+    * reopened on the head and re-run while its claim conflicts. */
+  private def rewriteTxn(spark: SparkSession, path: String,
+      commitId: Option[String])(action: TableTxn => Unit): Long = rerun {
+    val txn = new TableTxn(spark, path, commitId, replayAtCommit = false)
+    action(txn)
+    txn.commit()
+  }
+
+  /** The file layout a compaction rewrites `df` (about `bytes` of input)
+    * into — ~targetBytes files. ZORDER BY lays the rows along the curve,
+    * so freshly harvested stats prune on every z-ordered column. A
+    * DECLARED layout (the SQL catalog's PARTITIONED BY sidecar)
+    * range-clusters on the partition columns + row hash: the staging
+    * writer cuts one file per partition value per task, and the blind
+    * repartition would smear every value across every task — nFiles ×
+    * values files. */
+  private def compactionLayout(df: DataFrame, path: String, bytes: Long,
+      targetBytes: Long, zorderBy: Seq[String]): DataFrame = {
+    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+    lazy val declared = GraftCatalog.readDeclaredParts(Paths.get(path))
+      .filter(df.columns.contains)
+    if (zorderBy.nonEmpty) graft.operators.ZOrder.layout(df, zorderBy, nFiles)
+    else if (declared.nonEmpty) df.repartitionByRange(nFiles,
+      declared.map(df.col) :+ org.apache.spark.sql.functions.xxhash64(
+        df.columns.map(df.col): _*): _*)
+    else df.repartition(nFiles)
+  }
+
+  /** Land a compaction: `staged` replaces `inputs` in a dataChange=false
+    * commit (streams skip it). Its scope is exactly its inputs, so a
+    * winner that touched none of them (an append, a disjoint backfill)
+    * rebases metadata-only — its files carry, ours adopt, zero bytes
+    * re-staged; the folded ledger stays sound because winner-added
+    * files' seqs exceed every base delete's. Overlap re-plans. */
+  private def landCompaction(path: String, base: Manifest,
+      inputs: Seq[String], staged: Seq[String], foldDeletes: Boolean,
+      id: String): Long = {
+    val (stats, rows) = footerHarvest(path, staged)
+    claim(path, Some(base), Change(added = staged, stats = stats,
+        rows = rows, removed = inputs.toSet, foldDeletes = foldDeletes,
+        commitId = Some(id), dataChange = false),
+      Rebase.rewrite(inputs.toSet))
   }
 
   /** OPTIMIZE: rewrite the CURRENT version's rows into ~targetBytes
     * files and commit the compacted file set as a new version — old
     * versions keep their files, so time travel is intact (vacuum after
-    * retention reclaims them). Conflict-safe: if any commit lands
-    * between reading the base version and publishing, the attempt is
-    * abandoned (never clobbering the concurrent writer's files) and the
-    * compaction re-plans against the new head — Delta's OPTIMIZE
-    * conflict rule, with the retry lifted into the operation. */
+    * retention reclaims them). Conflict-safe: a commit landing between
+    * reading the base version and the claim is never clobbered — a
+    * winner that left the inputs and the ledger alone is rebased over
+    * ([[landCompaction]]), any other makes the compaction re-plan
+    * against the new head (Delta's OPTIMIZE conflict rule, with the
+    * retry lifted into the operation). */
   def compactCommit(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
-      zorderBy: Seq[String] = Seq.empty): Long =
-    retryCompaction("compaction")(() => compactCommitOnce(
-      spark, path, targetBytes, zorderBy))
-
-  private def compactCommitOnce(spark: SparkSession, path: String,
-      targetBytes: Long, zorderBy: Seq[String]): Option[Long] = {
+      zorderBy: Seq[String] = Seq.empty): Long = rerun {
     val base = latest(path).getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
-    val df = read(spark, path, Some(base.version))
-    val bytes = base.files.map(f => sizeOf(path, base, f)).sum
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    // OPTIMIZE ... ZORDER BY: the rewrite doubles as a re-clustering
-    // pass — freshly harvested per-file stats become selective on every
-    // z-ordered column (Delta's OPTIMIZE ZORDER, on this manifest
-    // format). A DECLARED layout (the SQL catalog's PARTITIONED BY
-    // sidecar) survives compaction the same way: range-recluster on the
-    // partition columns + row hash instead of the blind repartition that
-    // would smear every value across every file.
-    val declared =
-      if (zorderBy.nonEmpty) Seq.empty
-      else GraftCatalog.readDeclaredParts(Paths.get(path))
-        .filter(df.columns.contains)
-    val arranged =
-      if (zorderBy.nonEmpty) graft.operators.ZOrder.layout(df, zorderBy, nFiles)
-      else if (declared.nonEmpty) df.repartitionByRange(nFiles,
-        declared.map(df.col) :+ org.apache.spark.sql.functions.xxhash64(
-          df.columns.map(df.col): _*): _*)
-      else df.repartition(nFiles)
-    val staged = stage(arranged, path)
-    val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val next = base.version + 1
-    val target = manifestDir(path).resolve(f"v$next%08d.json")
-    beforePublishHook()
-    try {
-      // the rewrite read was MoR-reconciled, so the compacted files carry
-      // the deletes' effect in data — the new manifest folds them away
-      publish(target, render(path,
-        Manifest(next, staged, Some(s"compact-of-v${base.version}"), base.version,
-          stagedStats, staged.map(_ -> next).toMap, Seq.empty,
-          base.constraints, rows = stagedRows,
-          mergeKeys = base.mergeKeys, dataChange = false,
-          generated = base.generated, txns = base.txns,
-          renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)))
-      Some(next)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost the claim: a compaction's scope is exactly its input
-        // file set, so a winner that touched NONE of those files
-        // (an append, a disjoint backfill) rebases metadata-only —
-        // its files carry, ours adopt, zero bytes re-staged. The
-        // folded-away ledger stays sound: winner-added files' seqs
-        // exceed every base delete's. Overlapping winners re-plan.
-        rebasePublish(spark, path, base, base.files.toSet, staged,
-            stagedStats, stagedRows, Some(s"compact-of-v${base.version}"),
-            dataChange = false, Seq.empty, Map.empty, _ => true)
-          .map(v => Some(v)).getOrElse {
-            // abandon our staged files (vacuum reclaims them) and
-            // re-plan against the new head
-            None
-          }
-    }
+    val staged = stage(compactionLayout(read(spark, path, Some(base.version)),
+      path, base.files.map(f => sizeOf(path, base, f)).sum, targetBytes,
+      zorderBy), path)
+    // the rewrite read was MoR-reconciled, so the compacted files carry
+    // the deletes' effect in data — the new manifest folds them away
+    landCompaction(path, base, base.files, staged, foldDeletes = true,
+      s"compact-of-v${base.version}")
   }
 
-  /** INCREMENTAL OPTIMIZE: fold only the files that need it — files
-    * under `minFill · targetBytes` (appended since the last optimize, or
-    * leftovers of small commits) are bin-packed into ~targetBytes files;
-    * every file already at target size is CARRIED untouched. A second
-    * OPTIMIZE after a small append therefore rewrites O(append), not the
-    * table — the difference between a nightly maintenance job that costs
-    * minutes and one that rewrites 100 TB. With `zorderBy`, the rewritten
-    * subset is laid along the curve (fresh stats prune on those dims);
-    * already-compacted files keep their existing clustering and stats.
-    * MoR delete files are folded INTO the rewritten rows (they re-land at
-    * the new commit seq, above every delete) and stay in force for the
-    * carried files. Returns the new version, or the current one when
-    * fewer than two files qualify (idempotence: re-running is a no-op). */
   /** SCOPED compaction — `OPTIMIZE t WHERE <pred>`: rewrite ONLY the
     * files whose manifest stats-range intersects the predicate (the
     * same pruning [[statsSurvivors]] serves reads with), leaving every
@@ -3028,13 +3005,7 @@ object ManifestTable {
       conds: Seq[graft.conditions.Condition],
       targetBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Seq.empty,
-      minFill: Option[Double] = None): Long =
-    retryCompaction("scoped compaction")(() => compactWhereOnce(
-      spark, path, conds, targetBytes, zorderBy, minFill))
-
-  private def compactWhereOnce(spark: SparkSession, path: String,
-      conds: Seq[graft.conditions.Condition], targetBytes: Long,
-      zorderBy: Seq[String], minFill: Option[Double]): Option[Long] = {
+      minFill: Option[Double] = None): Long = rerun {
     require(conds.nonEmpty, "compactWhere needs at least one condition " +
       "(use compactCommit for the whole table)")
     // a predicate on a column the table does not carry matches EVERY
@@ -3072,61 +3043,32 @@ object ManifestTable {
       case None => scope0
     }
     if (scope.isEmpty || (minFill.isDefined && scope.size <= 1))
-      return Some(base.version)
-    val carried = base.files.filterNot(scope.toSet)
-    val df = reconcile(spark, path, base, scope)
-    val bytes = scope.map(f => sizeOf(path, base, f)).sum
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val declared =
-      if (zorderBy.nonEmpty) Seq.empty
-      else GraftCatalog.readDeclaredParts(Paths.get(path))
-        .filter(df.columns.contains)
-    val arranged =
-      if (zorderBy.nonEmpty) graft.operators.ZOrder.layout(df, zorderBy, nFiles)
-      else if (declared.nonEmpty) df.repartitionByRange(nFiles,
-        declared.map(df.col) :+ org.apache.spark.sql.functions.xxhash64(
-          df.columns.map(df.col): _*): _*)
-      else df.repartition(nFiles)
-    val staged = stage(arranged, path)
-    val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val next = base.version + 1
-    val m = Manifest(next, carried ++ staged,
-      Some(s"compact-where-of-v${base.version}"), base.version,
-      carried.flatMap(f => base.stats.get(f).map(f -> _)).toMap ++
-        stagedStats,
-      carried.map(f => f -> base.seqs.getOrElse(f, 0L)).toMap ++
-        staged.map(_ -> next).toMap,
-      base.deletes, base.constraints, deleteStats = base.deleteStats,
-      rows = base.rows ++ stagedRows,
-      mergeKeys = base.mergeKeys, dataChange = false,
-      generated = base.generated, txns = base.txns,
-      renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)
-    beforePublishHook()
-    try {
-      publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-      Some(next)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // disjoint-winner rebase: scope = the rewritten file subset
-        rebasePublish(spark, path, base, scope.toSet, staged, stagedStats,
-            stagedRows, Some(s"compact-where-of-v${base.version}"),
-            dataChange = false, base.deletes, base.deleteStats, _ => true)
-          .map(v => Some(v)).getOrElse(None)
-    }
+      return base.version
+    val staged = stage(compactionLayout(reconcile(spark, path, base, scope),
+      path, scope.map(f => sizeOf(path, base, f)).sum, targetBytes,
+      zorderBy), path)
+    landCompaction(path, base, scope, staged, foldDeletes = false,
+      s"compact-where-of-v${base.version}")
   }
 
+  /** INCREMENTAL OPTIMIZE: fold only the files that need it — files
+    * under `minFill · targetBytes` (appended since the last optimize, or
+    * leftovers of small commits) are bin-packed into ~targetBytes files;
+    * every file already at target size is CARRIED untouched. A second
+    * OPTIMIZE after a small append therefore rewrites O(append), not the
+    * table — the difference between a nightly maintenance job that costs
+    * minutes and one that rewrites 100 TB. With `zorderBy`, the rewritten
+    * subset is laid along the curve (fresh stats prune on those dims);
+    * already-compacted files keep their existing clustering and stats.
+    * MoR delete files are folded INTO the rewritten rows (they re-land at
+    * the new commit seq, above every delete) and stay in force for the
+    * carried files. Returns the new version, or the current one when
+    * fewer than two files qualify (idempotence: re-running is a no-op). */
   def compactIncremental(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Seq.empty,
       minFill: Double = 0.5,
-      maxOverlap: Int = 4): Long =
-    retryCompaction("incremental compaction")(() => compactIncrementalOnce(
-      spark, path, targetBytes, zorderBy, minFill, maxOverlap))
-
-  private def compactIncrementalOnce(spark: SparkSession, path: String,
-      targetBytes: Long, zorderBy: Seq[String], minFill: Double,
-      maxOverlap: Int): Option[Long] = {
+      maxOverlap: Int = 4): Long = rerun {
     val base = latest(path).getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
     val sized = base.files.map(f => f -> sizeOf(path, base, f))
@@ -3162,41 +3104,12 @@ object ManifestTable {
     // re-laying it along the curve splits it into z-range pieces whose
     // boxes are small, restoring pruning without touching its neighbors
     if (toFold.size <= 1 && violating.isEmpty)
-      return Some(base.version) // nothing worth folding
-    val carried = base.files.filterNot(toFold.toSet)
-    val df = reconcile(spark, path, base, toFold)
-    val bytes = sized.filter(p => toFold.contains(p._1)).map(_._2).sum
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val arranged =
-      if (zorderBy.nonEmpty) graft.operators.ZOrder.layout(df, zorderBy, nFiles)
-      else df.repartition(nFiles)
-    val staged = stage(arranged, path)
-    val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val next = base.version + 1
-    val m = Manifest(next, carried ++ staged,
-      Some(s"compact-incr-of-v${base.version}"), base.version,
-      carried.flatMap(f => base.stats.get(f).map(f -> _)).toMap ++
-        stagedStats,
-      carried.map(f => f -> base.seqs.getOrElse(f, 0L)).toMap ++
-        staged.map(_ -> next),
-      base.deletes, base.constraints, deleteStats = base.deleteStats,
-      rows = base.rows ++ stagedRows,
-      mergeKeys = base.mergeKeys, dataChange = false,
-      generated = base.generated, txns = base.txns,
-      renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)
-    beforePublishHook()
-    try {
-      publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-      Some(next)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // disjoint-winner rebase: scope = the folded file subset
-        rebasePublish(spark, path, base, toFold.toSet, staged, stagedStats,
-            stagedRows, Some(s"compact-incr-of-v${base.version}"),
-            dataChange = false, base.deletes, base.deleteStats, _ => true)
-          .map(v => Some(v)).getOrElse(None)
-    }
+      return base.version // nothing worth folding
+    val staged = stage(compactionLayout(reconcile(spark, path, base, toFold),
+      path, sized.filter(p => toFold.contains(p._1)).map(_._2).sum,
+      targetBytes, zorderBy), path)
+    landCompaction(path, base, toFold, staged, foldDeletes = false,
+      s"compact-incr-of-v${base.version}")
   }
 
   /** Fold the MoR delete ledger WITHOUT a full rewrite: rewrite only the
@@ -3209,7 +3122,7 @@ object ManifestTable {
     * 0.1% of the keyspace folds ~0.1% of files, where [[compactCommit]]
     * would rewrite the table. Returns the new version (unchanged when
     * the ledger is already empty). */
-  def compactDeletes(spark: SparkSession, path: String): Long = {
+  def compactDeletes(spark: SparkSession, path: String): Long = rerun {
     import org.apache.spark.sql.functions._
     val base = latest(path).getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
@@ -3271,36 +3184,14 @@ object ManifestTable {
   }
 
   /** The fold itself: rewrite `affected` (MoR-reconciled), carry the
-    * rest, publish a delete-free manifest. */
+    * rest, land a delete-free manifest — rebasing across a winner that
+    * left the affected files and the ledger alone. */
   private def compactDeletesOf(spark: SparkSession, path: String,
-      base: Manifest, affected: Seq[String]): Long = {
-    val carried = base.files.filterNot(affected.toSet)
-    val staged =
+      base: Manifest, affected: Seq[String]): Long =
+    landCompaction(path, base, affected,
       if (affected.isEmpty) Seq.empty
-      else stage(reconcile(spark, path, base, affected), path)
-    val next = base.version + 1
-    val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val m = Manifest(next, carried ++ staged,
-      Some(s"fold-deletes-of-v${base.version}"), base.version,
-      carried.flatMap(f => base.stats.get(f).map(f -> _)).toMap ++
-        stagedStats,
-      carried.map(f => f -> base.seqs.getOrElse(f, 0L)).toMap ++
-        staged.map(_ -> next),
-      Seq.empty, base.constraints,
-      rows = base.rows ++ stagedRows,
-      mergeKeys = base.mergeKeys, dataChange = false,
-      generated = base.generated, txns = base.txns,
-      renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)
-    try {
-      publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"concurrent commit during delete-fold of v${base.version}; retry")
-    }
-  }
+      else stage(reconcile(spark, path, base, affected), path),
+      foldDeletes = true, s"fold-deletes-of-v${base.version}")
 
   /** MERGE INTO — the upsert/delete commit every sync loop needs once a
     * target is a versioned table, with Delta/Iceberg's copy-on-write
@@ -3343,92 +3234,8 @@ object ManifestTable {
       evolveSchema: Boolean = false,
       appTxn: Option[(String, Long)] = None): Long = {
     requireNoWapSession(spark, "merge")
-    retryMerge("merge")(mergeAttempt(spark, path, source, keyCols,
+    rerun(mergeAttempt(spark, path, source, keyCols,
       deleteWhen, commitId, evolveSchema, appTxn))
-  }
-
-  /** Bounded optimistic retry around one merge attempt — the same
-    * contention discipline [[commit]] has: a concurrent commit landing
-    * between the base read and the publish (another CDC writer, an
-    * OPTIMIZE job, an auto-compaction cadence) must NOT kill the
-    * caller; the attempt recomputes against the new latest and its
-    * abandoned staged files become vacuum-able orphans. Non-contention
-    * failures propagate untouched. */
-  private def retryMerge(what: String, maxAttempts: Int = 5)(
-      attempt: => Long): Long = {
-    var n = 0
-    while (true) {
-      n += 1
-      try return attempt
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.startsWith("concurrent commit") &&
-              n < maxAttempts => () // recompute on the new latest
-      }
-    }
-    throw new IllegalStateException(s"unreachable: $what retry loop")
-  }
-
-  // ── LOGICAL COMMIT-CONFLICT RESOLUTION ────────────────────────────
-  //
-  // The optimistic version claim serializes ALL writers on a table:
-  // whoever loses the v<next> race re-runs its attempt, RE-STAGING real
-  // data. Correct, but at 100 TB with several writers per table
-  // (backfills on disjoint days, compaction racing ingest) every
-  // conflict costs a full rewrite pass. The fix is the Delta/Iceberg
-  // logical-conflict model: a file-level rewrite (replaceWhere /
-  // delete / update / OPTIMIZE) whose SCOPE is disjoint from whatever
-  // the winner committed REBASES metadata-only — the loser's staged
-  // files are adopted onto the new head, zero bytes re-staged. The
-  // scope check is exact, not heuristic:
-  //
-  //   1. every INPUT file the rewrite consumed is still live at the
-  //      head (the winner didn't rewrite/remove what we read);
-  //   2. the MoR delete ledger is unchanged (a delete landing mid-
-  //      rewrite would be folded-away by our staged files' fresh seq —
-  //      silently resurrecting the winner's deleted rows);
-  //   3. table metadata (constraints, column mapping, generated
-  //      columns, merge keys) is unchanged — our staged files were
-  //      validated against the base's contract;
-  //   4. an operation with a PREDICATE scope (replaceWhere/delete/
-  //      update) additionally proves no winner-ADDED file holds an
-  //      in-scope row, by scanning ONLY the delta files with the
-  //      predicate pushed down — O(winner's commit), not O(table).
-  //
-  // Any check failing falls back to the old abandon-and-re-run loop —
-  // rebase is an optimization, never a semantics change. Plain appends
-  // already rebase metadata-only in [[commit]]'s retry loop (the staged
-  // file set is version-independent); this extends the same economy to
-  // every file-level rewrite.
-
-  /** TEST SEAM: invoked between a rewrite attempt's staging and its
-    * publish — lets specs/gates inject a racing commit at the exact
-    * point where the optimistic claim will be lost. Reset it in the
-    * injected body (one-shot) or the racing commit recurses. */
-  private[graft] var beforePublishHook: () => Unit = () => ()
-
-  /** All scope checks except the predicate-delta scan (which only
-    * predicate-scoped rewrites need). `inputs` = files the rewrite
-    * consumed at `base`.
-    *
-    * METADATA drift is no longer an automatic refusal: constraint and
-    * generated-column changes are commutative with a disjoint data
-    * rewrite PROVIDED the staged files satisfy the head's contract —
-    * [[rebasePublish]] proves that with one O(staged) scan
-    * ([[filesSatisfy]]). Column-mapping drift (renames/droppedCols) is
-    * commutative unconditionally: physical names are frozen at birth,
-    * so files staged under the base's mapping carry exactly the
-    * physical schema the head's mapping resolves against. What still
-    * refuses here: the MoR delete ledger moved (our fresh seqs would
-    * fold the winner's delete away) or the merge keys changed. */
-  private def rebaseSafe(base: Manifest, head: Manifest,
-      inputs: Set[String]): Boolean = {
-    val headFiles = head.files.toSet
-    inputs.forall(headFiles) &&
-      head.deletes == base.deletes &&
-      head.deleteStats == base.deleteStats &&
-      head.mergeKeys == base.mergeKeys
   }
 
   /** Do `files`' rows satisfy `cons` and `gens` (the head's contract)?
@@ -3466,78 +3273,40 @@ object ManifestTable {
       .reduce(_ && _)).limit(1).collect().isEmpty
   }
 
-  /** Adopt an already-staged rewrite (`inputs` → `staged`) onto the
-    * CURRENT head after a lost version claim, when the winner's
-    * commit(s) are provably disjoint from the rewrite's scope. Returns
-    * the published version, or None when the scopes overlap (caller
-    * falls back to re-running the attempt). `deltaSafe` receives the
-    * files ADDED since `base` and must prove none holds an in-scope
-    * row (predicate-scoped rewrites scan them; compactions — whose
-    * scope is exactly `inputs` — pass a constant true). The publish
-    * itself loops: losing AGAIN to another disjoint commit just
-    * re-checks against the newer head, still zero re-staging. */
-  private def rebasePublish(spark: SparkSession, path: String, base: Manifest,
-      inputs: Set[String], staged: Seq[String],
-      stagedStats: Map[String, Map[String, ColStats]],
-      stagedRows: Map[String, Long],
-      commitId: Option[String], dataChange: Boolean,
-      newDeletes: Seq[(String, Long)],
-      newDeleteStats: Map[String, Map[String, ColStats]],
-      deltaSafe: Seq[String] => Boolean,
-      // the rebased commit's own ledger/keying updates (merges): the
-      // txn epoch it records, and the merge keys it establishes
-      extraTxn: Option[(String, Long)] = None,
-      newMergeKeys: Option[Seq[String]] = None): Option[Long] = {
-    val baseFiles = base.files.toSet
-    var attempts = 0
-    // contract drift already proven against: staged files scan at most
-    // once per distinct (constraints, generated) the loop encounters
-    var provenAgainst: Option[(Seq[String], Seq[(String, String)])] = None
-    while (attempts < 16) {
-      attempts += 1
-      val head = latest(path).getOrElse(return None)
-      if (head.version == base.version)
-        return None // claim lost to a non-manifest cause: re-run
-      if (!rebaseSafe(base, head, inputs)) return None
-      // metadata×data conflict scope: a constraint/generated commit
-      // raced our rewrite. Our staged files validated against the BASE
-      // contract — adopt them under the head's contract only after ONE
-      // O(staged) scan proves they satisfy it (the metadata commit
-      // itself validated every pre-existing row at its own version).
-      if (head.constraints != base.constraints ||
-          head.generated != base.generated) {
-        val contract = (head.constraints, head.generated)
-        if (!provenAgainst.contains(contract)) {
-          if (!filesSatisfy(spark, path, staged, head.constraints,
-              head.generated, head.renames, head.droppedCols)) return None
-          provenAgainst = Some(contract)
-        }
-      }
-      if (!deltaSafe(head.files.filterNot(baseFiles))) return None
-      val next = head.version + 1
-      val carried = head.files.filterNot(inputs)
-      val m = Manifest(next, carried ++ staged, commitId, head.version,
-        carried.flatMap(f => head.stats.get(f).map(f -> _)).toMap ++
-          stagedStats,
-        carried.map(f => f -> head.seqs.getOrElse(f, 0L)).toMap ++
-          staged.map(_ -> next),
-        newDeletes, head.constraints, deleteStats = newDeleteStats,
-        rows = head.rows ++ stagedRows,
-        mergeKeys = newMergeKeys.getOrElse(head.mergeKeys),
-        dataChange = dataChange,
-        generated = head.generated, txns = head.txns ++ extraTxn,
-        renames = head.renames, droppedCols = head.droppedCols,
-        bytes = head.bytes, rebasedFrom = Some(base.version))
-      try {
-        publish(manifestDir(path).resolve(f"v$next%08d.json"),
-          render(path, m))
-        return Some(next)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          () // lost again — re-check against the newer head
-      }
-    }
-    None
+  /** A keyed write's rebase check: the files a winner ADDED hold none of
+    * `keys` — one pushed-down semi-join over only the delta. A key
+    * overlap conflicts (the winner's row may be a new match). */
+  private def keyFree(spark: SparkSession, path: String, keys: => DataFrame,
+      keyCols: Seq[String]): (Manifest, Seq[String]) => Option[String] =
+    (head, added) =>
+      if (added.isEmpty || spark.read.schema(physicalSchemaAt(spark, path, head))
+          .parquet(added.map(f => dataDir(path).resolve(f).toString): _*)
+          .join(keys, keyCols, "left_semi").limit(1).collect().isEmpty) None
+      else Some("a concurrent commit added rows with keys this write touches")
+
+  /** Land a merge-on-read commit — `upserts` as new data files, `delFiles`
+    * holding every written key — on `base`. The ledger entry pins its seq
+    * at base.version+1, so a rebase across a winner that ONLY ADDED
+    * key-disjoint files stays exact: the winner's first file sits at that
+    * same seq, not below it, and keeps its rows only because reconcile's
+    * hide rule is STRICTLY dseq > fseq (relaxing it to >= would hide
+    * winner rows the key check proved disjoint); the key check is the
+    * second, independent guard. Anything else — a delete landed, files
+    * removed, key overlap, unproven contract drift — conflicts. */
+  private def landMoR(spark: SparkSession, path: String,
+      base: Option[Manifest], upserts: Seq[String], delFiles: Seq[String],
+      delKeys: => DataFrame, keyCols: Seq[String],
+      appTxn: Option[(String, Long)], commitId: Option[String]): Long = {
+    val (upStats, upRows) = footerHarvest(path, upserts)
+    val (delStats, delRows) = footerHarvest(path, delFiles)
+    val dseq = base.fold(0L)(_.version) + 1
+    claim(path, base, Change(added = upserts, stats = upStats,
+        rows = upRows ++ delRows, deletes = delFiles.map(_ -> dseq),
+        deleteStats = delStats, mergeKeys = Some(keyCols), txn = appTxn,
+        commitId = commitId),
+      Rebase.rewrite(base.fold(Set.empty[String])(_.files.toSet),
+        if (delFiles.isEmpty) (_, _) => None
+        else keyFree(spark, path, delKeys, keyCols)))
   }
 
   /** Column names a predicate references, resolved against `df` —
@@ -3626,7 +3395,6 @@ object ManifestTable {
       .select(col("__file")).distinct().collect()
       .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
       .toSet
-    val untouchedFiles = base.files.filterNot(f => touched(baseName(f)))
 
     // (2) rewrite ONLY the touched files
     // reconcile: a DV-hidden row in a touched file must not resurrect
@@ -3653,50 +3421,22 @@ object ManifestTable {
       .select(allCols.map(c =>
         when(col("__u").isNotNull, col(s"__u.$c")).otherwise(col(c)).as(c)): _*)
 
-    // (4) stage + publish (optimistic, conflict-checked like compactCommit)
+    // (4) stage + claim: untouched files CARRY their stats, seqs, and
+    // any delete files that apply to them; rewritten files sit at the
+    // claimed seq, above every existing delete, so old deletes can never
+    // re-hide rewritten rows. A merge's scope is its touched files PLUS
+    // its source keys: a winner that touched none of our files, landed
+    // no delete, and added no source key cannot change this merge's
+    // result under either ordering — the staged rewrite adopts
+    // metadata-only.
     val staged = stage(rewritten, path)
     val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val next = base.version + 1
-    // untouched files CARRY their stats, seqs, and any delete files that
-    // apply to them; rewritten files sit at seq `next`, above every
-    // existing delete, so old deletes can never re-hide rewritten rows
-    val m = Manifest(next, untouchedFiles ++ staged, commitId, base.version,
-      untouchedFiles.flatMap(f => base.stats.get(f).map(f -> _)).toMap ++
-        stagedStats,
-      untouchedFiles.map(f => f -> base.seqs.getOrElse(f, 0L)).toMap ++
-        staged.map(_ -> next),
-      base.deletes, base.constraints, deleteStats = base.deleteStats,
-      rows = base.rows ++ stagedRows,
-      mergeKeys = keyCols, generated = base.generated,
-      txns = base.txns ++ appTxn,
-      renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)
-    beforePublishHook()
-    try {
-      publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost the claim. A merge's scope is its touched files PLUS its
-        // source keys: a winner that touched none of our files, landed
-        // no delete, and whose ADDED files hold no source key (checked
-        // with one pushed-down semi-join over only the delta) cannot
-        // change this merge's result under either ordering — adopt the
-        // staged rewrite metadata-only. Key overlap re-runs (the
-        // winner's row might be a new match).
-        val srcKeys = src.select(keyCols.map(col): _*)
-        val deltaSafe = (added: Seq[String]) => added.isEmpty || {
-          spark.read.schema(physicalSchemaAt(spark, path, base))
-            .parquet(added.map(f => dataDir(path).resolve(f).toString): _*)
-            .join(srcKeys, keyCols, "left_semi").limit(1).collect().isEmpty
-        }
-        rebasePublish(spark, path, base, base.files.toSet -- untouchedFiles,
-            staged, stagedStats, stagedRows, commitId, dataChange = true,
-            base.deletes, base.deleteStats, deltaSafe,
-            extraTxn = appTxn, newMergeKeys = Some(keyCols))
-          .getOrElse(throw new IllegalStateException(
-            s"concurrent commit during merge onto v${base.version}; retry"))
-    }
+    val consumed = base.files.filter(f => touched(baseName(f))).toSet
+    claim(path, Some(base), Change(added = staged, stats = stagedStats,
+        rows = stagedRows, removed = consumed, mergeKeys = Some(keyCols),
+        txn = appTxn, commitId = commitId),
+      Rebase.rewrite(consumed,
+        keyFree(spark, path, src.select(keyCols.map(col): _*), keyCols)))
     } finally graft.operators.IndexScope.release(raw)
   }
 
@@ -3733,7 +3473,7 @@ object ManifestTable {
         deleteWhen, commitId).toLong
     }
     requireNoWapSession(spark, "mergeMoR")
-    retryMerge("mergeMoR")(mergeMoRAttempt(spark, path, source, keyCols,
+    rerun(mergeMoRAttempt(spark, path, source, keyCols,
       deleteWhen, commitId, evolveSchema, appTxn))
   }
 
@@ -3786,102 +3526,9 @@ object ManifestTable {
       // delete-then-reinsert batch repeats its key across the two splits.
       val delKeys = tombstones.select(keyCols.map(col): _*)
         .unionByName(upserts.select(keyCols.map(col): _*)).distinct()
-      val next = base.version + 1
       val delFiles = stageDeletes(delKeys, path)
-      val staged = stage(upserts, path)
-      val (stagedStats, stagedDataRows) = footerHarvest(path, staged)
-      val (delStats, delFileRows) = footerHarvest(path, delFiles)
-      val stagedRows = stagedDataRows ++ delFileRows
-      val m = Manifest(next, base.files ++ staged, commitId, base.version,
-        base.stats ++ stagedStats,
-        base.seqs ++ (base.files.filterNot(base.seqs.contains).map(_ -> 0L)) ++
-          staged.map(_ -> next),
-        base.deletes ++ delFiles.map(_ -> next), base.constraints,
-        // per-delete-file key stats: what lets every future read scope
-        // this delete to the data files its key range can actually hit
-        deleteStats = base.deleteStats ++ delStats,
-        rows = base.rows ++ stagedRows,
-        mergeKeys = keyCols, generated = base.generated,
-        txns = base.txns ++ appTxn,
-        renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)
-      beforePublishHook()
-      try {
-        publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-        next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // lost the claim. Rebase is exact when the winner ONLY ADDED
-          // key-disjoint files: nothing we read changed, and our delete
-          // ledger entry pins its seq at base.version+1 — EQUAL to the
-          // first winner's file seq, not below it. The winner's rows stay
-          // visible only because reconcile's hide rule is STRICTLY
-          // dseq > fseq (relaxing it to >= would hide winner rows this
-          // rebase proved key-disjoint); the keyFree check below is the
-          // second, independent guard. Anything else (a delete landed,
-          // files removed, key overlap) re-runs the merge at the new head.
-          val keyFree = (added: Seq[String]) => added.isEmpty || {
-            spark.read.schema(physicalSchemaAt(spark, path, base))
-              .parquet(added.map(f => dataDir(path).resolve(f).toString): _*)
-              .join(delKeys, keyCols, "left_semi").limit(1).collect().isEmpty
-          }
-          def tryRebase(): Option[Long] = {
-            var attempts = 0
-            val baseFiles = base.files.toSet
-            var provenAgainst: Option[(Seq[String], Seq[(String, String)])] = None
-            while (attempts < 16) {
-              attempts += 1
-              val head = latest(path).getOrElse(return None)
-              if (head.version == base.version) return None
-              val ok = baseFiles.forall(head.files.toSet) &&
-                head.deletes == base.deletes &&
-                head.deleteStats == base.deleteStats &&
-                (head.mergeKeys.isEmpty || head.mergeKeys == keyCols)
-              if (!ok) return None
-              // contract drift (racing constraint/generated commit):
-              // adopt only after one O(staged) scan proves the merge's
-              // output rows satisfy the head's contract — same scope
-              // rule as rebasePublish; column-mapping drift is free
-              // (physical names are frozen)
-              if (head.constraints != base.constraints ||
-                  head.generated != base.generated) {
-                val contract = (head.constraints, head.generated)
-                if (!provenAgainst.contains(contract)) {
-                  if (!filesSatisfy(spark, path, staged, head.constraints,
-                      head.generated, head.renames, head.droppedCols))
-                    return None
-                  provenAgainst = Some(contract)
-                }
-              }
-              if (!keyFree(head.files.filterNot(baseFiles))) return None
-              val n2 = head.version + 1
-              val m2 = Manifest(n2, head.files ++ staged, commitId,
-                head.version,
-                head.stats ++ stagedStats,
-                head.seqs ++
-                  (head.files.filterNot(head.seqs.contains).map(_ -> 0L)) ++
-                  staged.map(_ -> n2),
-                head.deletes ++ delFiles.map(_ -> (base.version + 1)),
-                head.constraints,
-                deleteStats = head.deleteStats ++ delStats,
-                rows = head.rows ++ stagedRows,
-                mergeKeys = keyCols, generated = head.generated,
-                txns = head.txns ++ appTxn,
-                renames = head.renames, droppedCols = head.droppedCols,
-                bytes = head.bytes, rebasedFrom = Some(base.version))
-              try {
-                publish(manifestDir(path).resolve(f"v$n2%08d.json"),
-                  render(path, m2))
-                return Some(n2)
-              } catch {
-                case _: java.nio.file.FileAlreadyExistsException => ()
-              }
-            }
-            None
-          }
-          tryRebase().getOrElse(throw new IllegalStateException(
-            s"concurrent commit during merge onto v${base.version}; retry"))
-      }
+      landMoR(spark, path, Some(base), stage(upserts, path), delFiles,
+        delKeys, keyCols, appTxn, commitId)
     } finally graft.operators.IndexScope.release(raw)
   }
 
@@ -3996,12 +3643,20 @@ object ManifestTable {
     * nothing is visible until the publish; on ANY failure the caller
     * owns cleanup (the files simply stay orphans for vacuum otherwise).
     *
+    * `baseVersion` is the version the statement's scan read: the commit
+    * lands on it with [[mergeMoR]]'s rebase rule (delete seq pinned at
+    * base+1, ledger unmoved, no winner-added row with a written key,
+    * contract drift re-proven) — a row another writer committed for one
+    * of the statement's keys after the scan fails the statement loudly
+    * instead of being hidden by its delete file. None (an empty table
+    * at scan time) lands on the head.
+    *
     * Validation is O(delta), reading ONLY the staged files: CHECK
     * constraints and duplicate-upsert-key probes run as one scan over
     * the new upserts — never the table. */
   private[sources] def commitStagedDelta(spark: SparkSession, path: String,
       upsertFiles: Seq[String], deleteFiles: Seq[String],
-      keyCols: Seq[String]): Long = {
+      keyCols: Seq[String], baseVersion: Option[Long]): Long = {
     import org.apache.spark.sql.functions._
     requireNoWap(spark, "a row-level DML commit")
     require(keyCols.nonEmpty, "delta commit needs the table's merge keys")
@@ -4027,47 +3682,15 @@ object ManifestTable {
       require(dup.isEmpty,
         s"write produces duplicate merge key ${dup.headOption.map(_.get(0))}")
     }
-    val (upStats, upRows) = footerHarvest(path, upsertFiles)
-    val (delStats, delRows) = footerHarvest(path, deleteFiles)
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
-      val base = latest(path)
-      require(base.forall(b => b.mergeKeys.isEmpty || b.mergeKeys == keyCols),
-        s"table is keyed on ${base.map(_.mergeKeys).getOrElse(Seq.empty)
-          .mkString("(", ",", ")")}; delta write on ${keyCols
-          .mkString("(", ",", ")")} rejected")
-      val next = base.map(_.version + 1).getOrElse(1L)
-      val m = Manifest(next,
-        base.map(_.files).getOrElse(Seq.empty) ++ upsertFiles, None,
-        base.map(_.version).getOrElse(0L),
-        base.map(_.stats).getOrElse(Map.empty) ++ upStats,
-        base.map(b => b.seqs ++
-          b.files.filterNot(b.seqs.contains).map(_ -> 0L))
-          .getOrElse(Map.empty) ++ upsertFiles.map(_ -> next),
-        base.map(_.deletes).getOrElse(Seq.empty) ++ deleteFiles.map(_ -> next),
-        base.map(_.constraints)
-          .getOrElse(GraftCatalog.readDeclaredConstraints(Paths.get(path))),
-        deleteStats =
-          base.map(_.deleteStats).getOrElse(Map.empty) ++ delStats,
-        rows = base.map(_.rows).getOrElse(Map.empty) ++ upRows ++ delRows,
-        mergeKeys = keyCols,
-        generated = base.map(_.generated)
-          .getOrElse(GraftCatalog.readDeclaredGenerated(Paths.get(path))),
-        txns = base.map(_.txns).getOrElse(Map.empty),
-        renames = base.map(_.renames).getOrElse(Map.empty),
-        droppedCols = base.map(_.droppedCols).getOrElse(Seq.empty),
-        bytes = base.map(_.bytes).getOrElse(Map.empty))
-      Files.createDirectories(manifestDir(path))
-      try {
-        publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // lost the race
-      }
-    }
-    throw new IllegalStateException(
-      s"commit contention: gave up after $attempts attempts")
+    val base = baseVersion.fold(latest(path))(v => Some(manifestAt(path, v)))
+    require(base.forall(b => b.mergeKeys.isEmpty || b.mergeKeys == keyCols),
+      s"table is keyed on ${base.map(_.mergeKeys).getOrElse(Seq.empty)
+        .mkString("(", ",", ")")}; delta write on ${keyCols
+        .mkString("(", ",", ")")} rejected")
+    landMoR(spark, path, base, upsertFiles, deleteFiles,
+      spark.read.parquet(
+        deleteFiles.map(f => dataDir(path).resolve(f).toString): _*),
+      keyCols, None, None)
   }
 
   /** Whether a version is a DATA change (true) or a maintenance commit
@@ -4513,9 +4136,7 @@ object ManifestTable {
         branchDmlKeys(path, name), commitId).toLong
     }
     requireNoWapSession(spark, "deleteWhere")
-    retryMerge("deleteWhere")(
-      rewriteWhereAttempt(spark, path, cond, None, commitId,
-        scopeConds = scopeConds))
+    rewriteTxn(spark, path, commitId)(_.deleteWhere(cond, scopeConds))
   }
 
   /** UPDATE … SET … WHERE — same copy-on-write shape as [[deleteWhere]]:
@@ -4533,8 +4154,7 @@ object ManifestTable {
         branchDmlKeys(path, name), commitId).toLong
     }
     requireNoWapSession(spark, "updateWhere")
-    retryMerge("updateWhere")(
-      rewriteWhereAttempt(spark, path, cond, Some(set), commitId))
+    rewriteTxn(spark, path, commitId)(_.updateWhere(cond, set))
   }
 
   /** REPLACE WHERE (Delta's replaceWhere, the canonical backfill):
@@ -4551,9 +4171,7 @@ object ManifestTable {
       commitId: Option[String] = None,
       scopeConds: Seq[graft.conditions.Condition] = Seq.empty): Long = {
     requireNoWapSession(spark, "replaceWhere")
-    retryMerge("replaceWhere")(
-      rewriteWhereAttempt(spark, path, cond, None, commitId, Some(data),
-        scopeConds = scopeConds))
+    rewriteTxn(spark, path, commitId)(_.replaceWhere(cond, data, scopeConds))
   }
 
   /** Best-effort STRICT translation of a Column predicate into the
@@ -4633,121 +4251,6 @@ object ManifestTable {
     }
     conv(cond).getOrElse(Seq.empty)
   } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-
-  private def rewriteWhereAttempt(spark: SparkSession, path: String,
-      cond: org.apache.spark.sql.Column,
-      set: Option[Map[String, org.apache.spark.sql.Column]],
-      commitId: Option[String],
-      insert: Option[DataFrame] = None,
-      scopeConds: Seq[graft.conditions.Condition] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions._
-    val replayed = commitId.flatMap(id =>
-      versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
-    if (replayed.isDefined) return replayed.get.version
-    val base = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    set.foreach(m => m.keys.foreach(c =>
-      require(read(spark, path, Some(base.version)).columns.contains(c),
-        s"SET column '$c' not in table")))
-    // callers that pass only a Column still get the fast paths when the
-    // predicate translates strictly (the SQL doors pass conds directly)
-    val effConds =
-      if (scopeConds.nonEmpty) scopeConds
-      else columnToConditions(spark,
-        schemaAt(spark, path, Some(base.version)), cond)
-    val physConds = toPhysicalConds(base, effConds)
-    // stats fast paths when the predicate rides the Condition algebra:
-    //  (a) files whose stats prove NO row matches never join the
-    //      discovery scan at all — at 100 TB a one-day DELETE reads one
-    //      day's files, not the table;
-    //  (b) DELETE/REPLACE scope only: files whose stats prove EVERY row
-    //      matches (fileMustMatch) drop from the manifest WITHOUT being
-    //      read — the partition-aligned metadata-only delete. MoR-safe:
-    //      hidden rows are a subset of the physical rows the proof
-    //      covers. UPDATE rewrites its full-match files (values change).
-    val candidates =
-      if (physConds.isEmpty) base.files
-      else base.files.filter(f => fileMightMatch(base.stats.get(f), physConds))
-    val dropped: Set[String] =
-      if (set.isDefined || physConds.isEmpty) Set.empty
-      else candidates.filter(f =>
-        fileMustMatch(base.stats.get(f), base.rows.get(f), physConds)).toSet
-    val scanFiles = candidates.filterNot(dropped)
-    // (1) which files hold a matching row? predicate pushdown reaches
-    // the parquet scan; only file NAMES come back
-    val touched =
-      if (scanFiles.isEmpty) Set.empty[String]
-      else spark.read.schema(physicalSchemaAt(spark, path, base))
-        .parquet(scanFiles.map(f => dataDir(path).resolve(f).toString): _*)
-        .withColumn("__file", input_file_name())
-        .where(cond)
-        .select(col("__file")).distinct().collect()
-        .map(r => baseName(r.getString(0))).toSet
-    if (touched.isEmpty && dropped.isEmpty && insert.isEmpty)
-      return base.version // nothing matches: no commit
-    val untouched = base.files.filterNot(f =>
-      touched(baseName(f)) || dropped(f))
-    // (2) rewrite only those files (MoR-reconciled first)
-    val matches = coalesce(cond, lit(false))
-    val rewriteStaged =
-      if (touched.isEmpty) Seq.empty[String]
-      else {
-        val rows = reconcile(spark, path, base,
-          base.files.filter(f => touched(baseName(f))))
-        val rewritten = set match {
-          case None => rows.where(!matches)
-          case Some(m) => rows.select(rows.columns.map(c =>
-            m.get(c).map(nc => when(matches, nc).otherwise(col(c)).as(c))
-              .getOrElse(col(c))): _*)
-        }
-        stage(rewritten, path)
-      }
-    // (3) replaceWhere's insert leg: new rows land in the SAME commit,
-    // each gated in-scan to SATISFY the replaced predicate (Delta's
-    // replaceWhere constraint — a stray row outside the scope would
-    // silently survive the next replace of the same scope)
-    val insertStaged = insert.map { ins =>
-      stage(ins.where(gated(assert_true(coalesce(cond, lit(false)),
-        lit("replaceWhere: an inserted row does not satisfy the " +
-          "replaced predicate")).isNull)), path)
-    }.getOrElse(Seq.empty)
-    val staged = rewriteStaged ++ insertStaged
-    val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val next = base.version + 1
-    val m = Manifest(next, untouched ++ staged, commitId, base.version,
-      untouched.flatMap(f => base.stats.get(f).map(f -> _)).toMap ++
-        stagedStats,
-      untouched.map(f => f -> base.seqs.getOrElse(f, 0L)).toMap ++
-        staged.map(_ -> next),
-      base.deletes, base.constraints, deleteStats = base.deleteStats,
-      rows = base.rows ++ stagedRows,
-      mergeKeys = base.mergeKeys, generated = base.generated, txns = base.txns,
-      renames = base.renames, droppedCols = base.droppedCols,
-      bytes = base.bytes)
-    beforePublishHook()
-    try {
-      publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost the version claim. If the winner's commit(s) are
-        // provably DISJOINT from this rewrite's scope — none of our
-        // input files touched, no delete landed, and no winner-added
-        // file holds a row matching our predicate (scanned pushed-down,
-        // O(winner's delta)) — adopt the staged files onto the new
-        // head metadata-only instead of re-running the whole rewrite.
-        val deltaSafe = (added: Seq[String]) => added.isEmpty || {
-          spark.read.schema(physicalSchemaAt(spark, path, base))
-            .parquet(added.map(f => dataDir(path).resolve(f).toString): _*)
-            .where(cond).limit(1).collect().isEmpty
-        }
-        rebasePublish(spark, path, base, base.files.toSet -- untouched,
-            staged, stagedStats, stagedRows, commitId, dataChange = true,
-            base.deletes, base.deleteStats, deltaSafe)
-          .getOrElse(throw new IllegalStateException(
-            s"concurrent commit during rewrite onto v${base.version}; retry"))
-    }
-  }
 
   /** DESCRIBE HISTORY: one row per committed version — commit time/id,
     * file and delete-file counts, recorded row totals, and what changed
@@ -4938,35 +4441,33 @@ object ManifestTable {
     * Time travel that moves the table FORWARD: history is never
     * rewritten (every intermediate version stays readable, a second
     * restore can undo the undo), which is what separates RESTORE from a
-    * reset. Constraints and merge keys keep the CURRENT values — they
-    * are table contract, not data state. Optimistic-retry like any
+    * reset. Constraints, merge keys and the txn ledger keep the CURRENT
+    * values — they are table contract and writer progress, not data
+    * state. The restore is a data change of its own (never K's flag or
+    * rebase mark). Optimistic-retry like any
     * commit; `commitId` gives replayed callers exactly-once. Fails
     * loudly if version K was expired. */
   def restore(path: String, toVersion: Long,
       commitId: Option[String] = None): Long = {
     val k = manifestAt(path, toVersion)
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
+    rerun {
       val base = latest(path).getOrElse(
         throw new IllegalStateException(s"no committed version at $path"))
-      val replayed = commitId.flatMap(id =>
-        versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
-      if (replayed.isDefined) return replayed.get.version
-      val next = base.version + 1
-      val m = k.copy(version = next, parent = base.version,
-        commitId = commitId.orElse(Some(s"restore-to-v$toVersion@$next")),
-        commitTs = None,
-        constraints = base.constraints, mergeKeys = base.mergeKeys)
-      try {
-        publish(manifestDir(path).resolve(f"v$next%08d.json"), render(path, m))
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => ()
-      }
+      commitId.flatMap(id => versions(path).map(manifestAt(path, _))
+        .find(_.commitId.contains(id))).foreach(m => return m.version)
+      // K's data state replaces the head's; the contract (constraints,
+      // merge keys) and the txn ledger stay the head's. The label names
+      // the slot, so a moved head re-runs (Strict) rather than rebases.
+      claim(path, Some(base), Change(replace = true, added = k.files,
+          seqs = k.files.map(f => f -> k.seqs.getOrElse(f, 0L)).toMap,
+          stats = k.stats, rows = k.rows, bytes = k.bytes,
+          deletes = k.deletes, deleteStats = k.deleteStats,
+          generated = Some(k.generated),
+          mapping = Some((k.renames, k.droppedCols)),
+          commitId = commitId.orElse(
+            Some(s"restore-to-v$toVersion@${base.version + 1}"))),
+        Rebase.Strict)
     }
-    throw new IllegalStateException(
-      s"commit contention in restore: gave up after $attempts attempts")
   }
 
   /** SHALLOW CLONE (Delta's SHALLOW CLONE, on this manifest format):
@@ -6068,36 +5569,22 @@ object ManifestTable {
     if (b.deleteFiles.nonEmpty) {
       // DML branch: the ledger's seqs are computed against the parent
       // chain, and a racing commit's files could land BELOW a branch
-      // delete seq — commit()'s append rebase would be UNSOUND here, so
-      // the publish is STRICT: claim exactly head+1 or unseal + refuse.
+      // delete seq — an append-style rebase would be UNSOUND here, so
+      // the claim is STRICT: exactly the parent's successor, each branch
+      // commit at its own seq, or unseal + refuse.
       val parentM = manifestAt(path, b.parent)
       val (st, rws) = footerHarvest(path, files)
       val (dst, drws) = footerHarvest(path, b.deleteFiles)
-      val next = head + 1
-      val m = parentM.copy(version = next, parent = head,
-        commitId = Some(id), commitTs = None,
-        files = parentM.files ++ files,
-        seqs = parentM.seqs ++
-          (parentM.files.filterNot(parentM.seqs.contains).map(_ -> 0L)) ++
-          b.commits.zipWithIndex.flatMap { case (c, i) =>
-            c.files.map(_ -> (b.parent + i + 1)) },
-        stats = parentM.stats ++ st,
-        deletes = parentM.deletes ++
-          b.commits.zipWithIndex.flatMap { case (c, i) =>
-            c.deletes.map(_ -> (b.parent + i + 1)) },
-        deleteStats = parentM.deleteStats ++ dst,
-        rows = parentM.rows ++ rws ++ drws,
-        mergeKeys =
-          if (parentM.mergeKeys.nonEmpty) parentM.mergeKeys else b.keys,
-        rebasedFrom = None)
-      beforePublishHook()
-      try {
-        publish(manifestDir(path).resolve(f"v$next%08d.json"),
-          render(path, m))
-        removeBranchRef(path, name)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
+      def bySeq(of: BranchCommit => Seq[String]) =
+        b.commits.zipWithIndex.flatMap { case (c, i) =>
+          of(c).map(_ -> (b.parent + i + 1)) }
+      val v = try claim(path, Some(parentM), Change(added = files,
+          seqs = bySeq(_.files).toMap, stats = st, rows = rws ++ drws,
+          deletes = bySeq(_.deletes), deleteStats = dst,
+          mergeKeys = if (parentM.mergeKeys.nonEmpty) None else Some(b.keys),
+          commitId = Some(id)), Rebase.Strict)
+      catch {
+        case _: CommitConflict =>
           landed(id).foreach { v => removeBranchRef(path, name); return v }
           unsealRef(b).foreach(v => return v)
           throw new IllegalStateException(
@@ -6105,6 +5592,8 @@ object ManifestTable {
               s"'$name' at $path; the ref has been unsealed - re-audit " +
               "(rebase is refused for keyed-DML branches), or DROP it")
       }
+      removeBranchRef(path, name)
+      return v
     }
     // (commit() fires beforePublishHook in the sealed-not-yet-committed
     // window — the race-injection seam BranchSpec's seal test drives)

@@ -246,4 +246,39 @@ class GraftRowLevelSpec extends SparkSpecBase {
     assert(ManifestTable.versions(out).size == vBefore,
       "a constraint-violating epoch must not commit")
   }
+
+  test("SQL UPDATE commits against the version its scan read: a racing " +
+      "same-key merge fails it loudly, a key-disjoint racer lets both land") {
+    val wh = freshWh()
+    val s2 = catalogSession(wh)
+    import s2.implicits._
+    val path = s"$wh/t"
+    s2.sql("CREATE TABLE graft.t (k BIGINT, v DOUBLE) TBLPROPERTIES ('merge.keys'='k')")
+    s2.sql("INSERT INTO graft.t VALUES (1, 10.0), (2, 20.0), (3, 30.0)")
+    def arm(winner: => Unit): Unit =
+      ManifestTable.beforePublishHook = () => {
+        ManifestTable.beforePublishHook = () => ()
+        winner
+      }
+    def rows(): Map[Long, Double] = s2.sql("SELECT k, v FROM graft.t")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // same key: another writer re-commits k=1 between the UPDATE's scan
+    // and its commit — the UPDATE's delete file would hide that row
+    arm { ManifestTable.mergeMoR(spark, path, Seq((1L, 111.0)).toDF("k", "v"),
+      Seq("k")) }
+    val e = try intercept[Exception] {
+      s2.sql("UPDATE graft.t SET v = -1.0 WHERE k = 1")
+    } finally ManifestTable.beforePublishHook = () => ()
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("conflict"), s"want a commit conflict, got: $msgs")
+    assert(rows() == Map(1L -> 111.0, 2L -> 20.0, 3L -> 30.0),
+      "the winner's row must survive the refused UPDATE")
+    // key-disjoint: an append of a new key rebases under the UPDATE
+    arm { ManifestTable.append(Seq((4L, 40.0)).toDF("k", "v"), path) }
+    try s2.sql("UPDATE graft.t SET v = -2.0 WHERE k = 2")
+    finally ManifestTable.beforePublishHook = () => ()
+    assert(rows() == Map(1L -> 111.0, 2L -> -2.0, 3L -> 30.0, 4L -> 40.0),
+      "both the racing append and the UPDATE must land")
+  }
 }
