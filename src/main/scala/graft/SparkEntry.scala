@@ -5339,10 +5339,9 @@ object SparkEntry {
       s2.sql("UPDATE graft.t SET price = price * 2 WHERE k % 5 = 0")
       s2.sql("OPTIMIZE graft.t").collect()
       def codecOf(f: String): String = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(s"$t/data/$f"),
-            new org.apache.hadoop.conf.Configuration()))
+        val r = graft.sources.v2.CursorSource.openReader(
+          new org.apache.hadoop.fs.Path(s"$t/data/$f"),
+          new org.apache.hadoop.conf.Configuration())
         try r.getFooter.getBlocks.get(0).getColumns.get(0).getCodec.toString
         finally r.close()
       }

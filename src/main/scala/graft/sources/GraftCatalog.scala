@@ -2158,8 +2158,8 @@ class GraftAppendTaskWriter(dataDir: String, schema: StructType,
     out.write(row)
   }
 
-  /** Files written so far (used by the stage-side aligned path, which
-    * drives this writer from `mapPartitions` instead of a DSv2 task). */
+  /** Files written so far (used by [[StageTask]], which drives this
+    * writer from a staging job instead of a DSv2 task). */
   def files: Seq[String] = names.reverse
 
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {

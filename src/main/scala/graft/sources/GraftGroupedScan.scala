@@ -290,20 +290,13 @@ final class GroupFilesReader(files: Seq[String], required: StructType)
   private var row: InternalRow = _
 
   private def openFooter(file: String): Unit = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file),
-      new org.apache.hadoop.conf.Configuration()))
-    try {
-      groupsInFile = r.getFooter.getBlocks.size()
-      val names = r.getFooter.getFileMetaData.getSchema.getFields
-      val have = new scala.collection.mutable.HashSet[String]
-      names.forEach(f => have += f.getName)
-      present = reqNames.filter(have)
-      mapping = reqNames.map(n => present.indexOf(n)).toArray
-      exact = present == reqNames
-    } finally r.close()
+    val footer = ManifestTable.footerOf(java.nio.file.Paths.get(file))
+    groupsInFile = footer.getBlocks.size()
+    val have = new scala.collection.mutable.HashSet[String]
+    footer.getFileMetaData.getSchema.getFields.forEach(f => have += f.getName)
+    present = reqNames.filter(have)
+    mapping = reqNames.map(n => present.indexOf(n)).toArray
+    exact = present == reqNames
   }
 
   private def advance(): Boolean = {

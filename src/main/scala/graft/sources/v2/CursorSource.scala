@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -80,8 +81,15 @@ object CursorSource {
       .map(_.getPath).sortBy(_.getName)
   }
 
+  /** Open a parquet file at a user path (any Hadoop filesystem) with
+    * read options built on `conf` — `ParquetFileReader.open(InputFile)`
+    * alone would build (and XML-parse) a second default conf per open. */
+  private[graft] def openReader(file: HPath, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+
   def footerSchema(file: HPath, conf: Configuration): MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val r = openReader(file, conf)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
 
@@ -254,7 +262,7 @@ case class CursorScan(dir: String, fullSchema: StructType, required: StructType,
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val preds = cursorPreds ++ pushedPreds
     CursorSource.listParquet(dir, conf).flatMap { file =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val r = CursorSource.openReader(file, conf)
       try {
         r.getFooter.getBlocks.asScala.zipWithIndex.collect {
           case (block, i) if RowGroupStats.mightMatch(block, preds) =>
@@ -350,9 +358,8 @@ class RowGroupReader(file: String, rowGroup: Int, readNames: Seq[String],
     outNames: Seq[String], cursorPreds: Seq[SourcePredicate])
   extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new HPath(file), conf))
+  private val reader =
+    CursorSource.openReader(new HPath(file), new Configuration())
   private val projection =
     CursorSource.projectionOf(reader.getFooter.getFileMetaData.getSchema, readNames)
   reader.setRequestedSchema(projection)

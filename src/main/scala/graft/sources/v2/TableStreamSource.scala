@@ -1,12 +1,9 @@
 package graft.sources.v2
 
+import java.nio.file.Paths
 import java.util
 
 import graft.sources.ManifestTable
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -52,7 +49,7 @@ class TableStreamSource extends TableProvider with DataSourceRegister {
       throw new IllegalArgumentException(
         s"graft-table: no committed version at $path to infer a schema from"))
     val base = CursorSource.toStruct(
-      CursorSource.footerSchema(new HPath(file), new Configuration()))
+      ManifestTable.footerOf(Paths.get(file)).getFileMetaData.getSchema)
     if (options.getBoolean("readchangefeed", false))
       StructType(base.fields :+
         StructField("_change_type", StringType, nullable = false) :+
@@ -171,11 +168,8 @@ class TableMicroBatchStream(dir: String, tableSchema: StructType,
   override def deserializeOffset(json: String): Offset =
     VersionOffset(json.trim.toLong)
 
-  private def rowGroupsOf(file: String, conf: Configuration): Seq[Int] = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file), conf))
-    try r.getFooter.getBlocks.asScala.indices.toList finally r.close()
-  }
+  private def rowGroupsOf(file: String): Seq[Int] =
+    ManifestTable.footerOf(Paths.get(file)).getBlocks.asScala.indices.toList
 
   /** One partition per row group of the files the batch's commits
     * added (driver-side footer opens, the same planning granularity as
@@ -188,14 +182,13 @@ class TableMicroBatchStream(dir: String, tableSchema: StructType,
     val s = start.asInstanceOf[VersionOffset].v
     val e = end.asInstanceOf[VersionOffset].v
     if (e <= s) return Array.empty
-    val conf = new Configuration()
     if (!readChangeFeed) {
       if (s == 0) {
         // initial snapshot: final-state seq semantics against the END
         // manifest — a maintenance rewrite's files ARE the snapshot's
         // rows here, and files a rewrite removed are correctly absent
         ManifestTable.appendSlice(dir, s, e, ignoreChanges).flatMap { file =>
-          rowGroupsOf(file, conf)
+          rowGroupsOf(file)
             .map(i => RowGroupPartition(file, i): InputPartition)
         }.toArray
       } else {
@@ -210,7 +203,7 @@ class TableMicroBatchStream(dir: String, tableSchema: StructType,
           if (!ManifestTable.dataChangeAt(dir, v)) Seq.empty
           else ManifestTable.appendSlice(dir, v - 1, v, ignoreChanges)
             .flatMap { file =>
-              rowGroupsOf(file, conf)
+              rowGroupsOf(file)
                 .map(i => RowGroupPartition(file, i): InputPartition)
             }
         }.toArray
@@ -222,11 +215,11 @@ class TableMicroBatchStream(dir: String, tableSchema: StructType,
           // maintenance commit: no logical change, nothing to emit
           Seq.empty[InputPartition]
         } else if (java.nio.file.Files.exists(cdf)) {
-          rowGroupsOf(cdf.toString, conf)
+          rowGroupsOf(cdf.toString)
             .map(i => CdfFilePartition(cdf.toString, i): InputPartition)
         } else if (ManifestTable.isAppendOnly(dir, v)) {
           ManifestTable.appendSlice(dir, v - 1, v, ignoreChanges = true)
-            .flatMap(f => rowGroupsOf(f, conf)
+            .flatMap(f => rowGroupsOf(f)
               .map(i => CdfAppendPartition(f, i, v): InputPartition))
         } else throw new IllegalStateException(
           s"version $v of $dir is not append-only and has no materialized " +

@@ -1,41 +1,63 @@
 package org.apache.spark.sql.graft
 
+import java.nio.file.Paths
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types.StructType
 
 /** Executor-side parquet writing of [[InternalRow]]s, for writers that
   * receive rows imperatively instead of as a DataFrame action — the SQL
   * row-level delta path ([[org.apache.spark.sql.connector.write
   * .DeltaWriter]] hands each task its delete/update/insert rows one at a
-  * time). Wraps Spark's own [[ParquetOutputWriter]]/[[ParquetWriteSupport]]
-  * (the exact row→parquet codec every DataFrame write uses, so staged
-  * files are byte-compatible with the rest of the table: same logical
-  * types, same footer stats the manifest harvests), configured the way
+  * time) and every stage-side task writer. Rows go through Spark's own
+  * [[ParquetWriteSupport]] (the exact row→parquet codec every DataFrame
+  * write uses, so staged files are byte-identical to what Spark's
+  * `ParquetOutputWriter` writes: same logical types, same footer stats
+  * the manifest harvests), configured the way
   * `ParquetFileFormat.prepareWrite` would. Lives in this bridge package
-  * for the `private[sql]` surface. */
+  * for the `private[sql]` surface.
+  *
+  * The file is created through java.nio ([[LocalOutputFile]]), not a
+  * Hadoop `FileSystem`: graft tables live on the local filesystem (the
+  * data dir is a `java.nio.file.Path`, publish is `Files.createLink`),
+  * and the Hadoop route cost a defaults-parsing `new Configuration()`
+  * plus, without the native hadoop lib, a forked `chmod` per staged
+  * file. The conf below is built WITHOUT Hadoop's default resources: it
+  * carries only the keys pinned here, all the write support reads.
+  * Not used: parquet's `MemoryManager`, which shrinks row groups when
+  * the writers of one JVM together exceed 95% of the heap. Staging
+  * sizes each task to about one 128 MB row group, and the equivalence
+  * spec pins the bytes of files below that size. */
 object ParquetRowWriter {
 
   final class Writer private[ParquetRowWriter] (
-      underlying: ParquetOutputWriter) {
+      underlying: ParquetWriter[InternalRow]) {
     private var rows = 0L
     def write(row: InternalRow): Unit = { rows += 1; underlying.write(row) }
     def rowCount: Long = rows
     def close(): Unit = underlying.close()
   }
 
-  /** Open a parquet writer at `file` (an absolute path on the table's
-    * filesystem) for rows of `schema`. The file becomes readable only
-    * when closed; callers own cleanup on abort. */
+  private final class Builder(file: OutputFile)
+    extends ParquetWriter.Builder[InternalRow, Builder](file) {
+    override protected def self(): Builder = this
+    override protected def getWriteSupport(conf: Configuration)
+        : ParquetWriteSupport = new ParquetWriteSupport
+  }
+
+  /** Open a parquet writer at `file` (an absolute local path) for rows
+    * of `schema`. The file becomes readable only when closed; callers
+    * own cleanup on abort. */
   def open(file: String, schema: StructType,
       codec: Option[String] = None): Writer = {
     import org.apache.spark.sql.internal.SQLConf
-    val conf = new Configuration()
-    conf.set("parquet.write.support.class", classOf[ParquetWriteSupport].getName)
+    val conf = new Configuration(false)
     ParquetWriteSupport.setSchema(schema, conf)
     // the write-path session confs ParquetWriteSupport/the schema
     // converter read (they Configuration.get these with no fallback) —
@@ -55,18 +77,12 @@ object ParquetRowWriter {
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     // the table's declared write.compression (resolved driver-side and
     // passed through the writer factory); "none" is parquet UNCOMPRESSED
-    conf.set("parquet.compression",
+    val codecName = CompressionCodecName.fromConf(
       codec.map(c => if (c == "none") "uncompressed" else c)
         .getOrElse("snappy"))
-    // RAW local fs: no `.<name>.crc` checksum sidecars (a second write
-    // per file that nothing reads back — manifest-tracked tables carry
-    // integrity in the parquet footer itself). The cache bypass matters:
-    // FileSystem.get caches per scheme and would otherwise ignore the
-    // impl override when a checksummed LocalFileSystem was created first.
-    conf.set("fs.file.impl",
-      classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    val ctx = new TaskAttemptContextImpl(conf, new TaskAttemptID())
-    new Writer(new ParquetOutputWriter(file, ctx))
+    new Writer(new Builder(new LocalOutputFile(Paths.get(file)))
+      .withConf(conf)
+      .withCompressionCodec(codecName)
+      .build())
   }
 }

@@ -270,3 +270,79 @@ class CommitLoopSpec extends SparkSpecBase {
       "the refused ref must be unsealed for re-audit")
   }
 }
+
+/** The contract a commit lands under must hold over the rows it makes
+  * visible: a restore re-proves the CURRENT constraints over the
+  * restored version's rows, and a multi-table transaction re-proves its
+  * staged rows against a contract that landed after its staging (and
+  * fires the same race seam as every other claim). */
+class CommitContractSpec extends SparkSpecBase {
+
+  private def table(rows: Seq[Double]): String = {
+    val path = Files.createTempDirectory("graft-cc-").toString + "/t"
+    import spark.implicits._
+    ManifestTable.append(rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("k", "v"), path)
+    path
+  }
+
+  override def afterAll(): Unit = {
+    ManifestTable.beforePublishHook = () => ()
+    super.afterAll()
+  }
+
+  test("restore refuses a version whose rows break the current constraints") {
+    import spark.implicits._
+    val path = table(Seq(1.0, 2.0))
+    ManifestTable.append(Seq((10L, -1.0), (11L, -2.0), (12L, -3.0),
+      (13L, -4.0), (14L, -5.0)).toDF("k", "v"), path)
+    val bad = ManifestTable.latestVersion(path)
+    ManifestTable.deleteWhere(spark, path, col("v") < 0)
+    ManifestTable.setConstraints(spark, path, Seq("v >= 0"))
+    val head = ManifestTable.latestVersion(path)
+    val e = intercept[IllegalArgumentException](ManifestTable.restore(path, bad))
+    assert(e.getMessage.contains("v >= 0"), e.getMessage)
+    assert(ManifestTable.latestVersion(path) == head, "nothing may land")
+    assert(ManifestTable.read(spark, path).where(col("v") < 0).isEmpty)
+    // a version whose rows do satisfy the new constraint still restores
+    ManifestTable.restore(path, 1L)
+    assert(ManifestTable.read(spark, path).count() == 2)
+    assert(ManifestTable.constraints(path) == Seq("v >= 0"))
+  }
+
+  /** A txn of `rows` onto table a and one row onto table b, with a
+    * `setConstraints(cons)` on a injected at the txn's first claim. */
+  private def txnRacing(cons: String, rows: Seq[Double]) = {
+    import spark.implicits._
+    val (a, b) = (table(Seq(1.0, 2.0)), table(Seq(3.0)))
+    var fired = false
+    ManifestTable.beforePublishHook = () => {
+      ManifestTable.beforePublishHook = () => ()
+      fired = true
+      ManifestTable.setConstraints(spark, a, Seq(cons))
+    }
+    val out = try scala.util.Try(ManifestTable.commitTxn(Seq(
+      ManifestTable.TxnWrite(rows.map(v => (100L, v)).toDF("k", "v"), a),
+      ManifestTable.TxnWrite(Seq((100L, 9.0)).toDF("k", "v"), b))))
+    finally ManifestTable.beforePublishHook = () => ()
+    assert(fired, "the txn's claim must fire the hook")
+    (a, b, out)
+  }
+
+  test("a txn whose staged rows break a contract that landed mid-commit fails whole") {
+    val (a, b, out) = txnRacing("v >= 0", Seq(-7.0))
+    assert(out.isFailure, s"the txn must refuse, got $out")
+    assert(out.failed.get.getMessage.contains("v >= 0"), out.failed.get)
+    // a holds its seed and the constraint commit; b only its seed
+    assert(ManifestTable.latestVersion(a) == 2 && ManifestTable.latestVersion(b) == 1)
+    assert(ManifestTable.read(spark, a).where(col("v") < 0).isEmpty)
+    assert(ManifestTable.read(spark, b).count() == 1)
+  }
+
+  test("a txn lands across a compatible contract that landed mid-commit") {
+    val (a, b, out) = txnRacing("v >= -100", Seq(-7.0))
+    assert(out.get == Seq(3L, 2L))
+    assert(ManifestTable.read(spark, a).where(col("v") === -7.0).count() == 1)
+    assert(ManifestTable.read(spark, b).count() == 2)
+  }
+}
