@@ -1,4 +1,7 @@
 package graft
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 object Bench {
 
@@ -61,16 +64,24 @@ object Bench {
     // the first q1xx streaming query pays the state-store/checkpoint
     // stack's, and the first transactional query the manifest commit
     // path's — one-time costs the rest of the suite never sees (guide
-    // §1: measure the computation, not the compiler). sf0.001 keeps the
-    // warm-up itself to a few seconds; it is untimed either way.
-    // warm-up data: the smallest sibling SF of the bench dir (falls back
-    // to the bench dir itself) — hardcoding one path silently no-ops on a
-    // machine without it, reintroducing the first-query JIT skew
+    // §1: measure the computation, not the compiler). The smallest SF
+    // keeps the warm-up itself to a few seconds; it is untimed either way.
+    // warm-up data: the smallest `sf<scale>` sibling of the bench dir (the
+    // bench dir itself when it is the smallest or has none) — hardcoding
+    // one path silently fell back to the full-scale dir on a machine
+    // without it
     val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir)
-      Option(p.getParent).map(_.resolve("sf0.001"))
-        .filter(java.nio.file.Files.isDirectory(_))
-        .map(_.toString).getOrElse(sfDir)
+      val p = java.nio.file.Paths.get(sfDir).toAbsolutePath
+      val siblings = Option(p.getParent).toSeq.flatMap(d =>
+        scala.util.Using.resource(java.nio.file.Files.list(d))(
+          _.iterator().asScala.toSeq))
+      (p +: siblings).filter(java.nio.file.Files.isDirectory(_))
+        .flatMap(d => d.getFileName.toString match {
+          case n if n.startsWith("sf") =>
+            n.stripPrefix("sf").toDoubleOption.map(_ -> d)
+          case _ => None
+        })
+        .minByOption(_._1).map(_._2.toString).getOrElse(sfDir)
     }
     Seq(
       (s: SparkSession) => SparkEntry.entry(s),

@@ -3596,7 +3596,15 @@ object SparkEntry {
       import graft.sources.ManifestTable
       val base = java.nio.file.Files.createTempDirectory("graft-q175-")
         .toString + "/t"
-      val o = Tables(s, dir, "orders").select(
+      // the 16 files cut at the EXACT day quantiles: with every row in
+      // the range sample (62500 x 16 partitions is Spark's one-million
+      // cap) the layout, and so the file counts the gates below check,
+      // no longer hangs on the sample's seed, which Spark derives from
+      // the RDD id, i.e. from how many RDDs earlier queries created
+      val exact = s.newSession()
+      exact.conf.set("spark.sql.execution.rangeExchange.sampleSizePerPartition",
+        "62500")
+      val o = Tables(exact, dir, "orders").select(
         col("o_orderkey").cast("long").as("k"),
         to_date(col("o_orderdate")).as("day"),
         col("o_totalprice").cast("double").as("price"),

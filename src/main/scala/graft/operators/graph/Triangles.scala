@@ -40,7 +40,10 @@ object Triangles {
     *  [[graft.operators.LoopScale]] instead of the session default —
     *  a gate-scale graph (thousands of edges) then runs its five
     *  shuffles at 1-2 partitions instead of one near-empty partition
-    *  per core, while a billion-edge graph keeps full parallelism. */
+    *  per core, while a billion-edge graph keeps full parallelism. The
+    *  returned frame stays bound to that down-sized session (it is NOT
+    *  rebound to the caller's): joins and aggregations a caller builds
+    *  on the result also run at the derived partition count. */
   def perVertex(edges: DataFrame, srcCol: String, dstCol: String,
       edgesHint: Long = -1L): DataFrame = {
     val sized =

@@ -631,8 +631,13 @@ object ManifestTable {
     * history) that want to skip recomputing a batch's derived state
     * before the commit's own idempotence would discard it anyway. */
   def commitLanded(path: String, commitId: String): Boolean =
-    versions(path).exists(v =>
-      manifestAt(path, v).commitId.contains(commitId))
+    landedAt(path, commitId).isDefined
+
+  /** The version a commit with this id landed at — the one commit-id
+    * replay scan, O(versions) (txn-ledger writers answer O(1) from the
+    * head instead). */
+  private def landedAt(path: String, commitId: String): Option[Long] =
+    versions(path).find(v => manifestAt(path, v).commitId.contains(commitId))
 
   /** The LATEST version's commit id (None for an absent table or an
     * id-less commit) — one manifest read. Callers whose commit ids are
@@ -811,15 +816,18 @@ object ManifestTable {
     else conds.map(c => c.copy(field = m.renames.getOrElse(c.field, c.field)))
 
   /** Merged PHYSICAL schema of a version's data files, cached by
-    * manifest identity. Every `spark.read.option("mergeSchema", …)`
-    * scan runs a distributed footer-inference job at PLAN time — and
-    * one reconcile used to run several (reference schema, dirty branch,
-    * clean branch), so a single MoR read cost a handful of Spark jobs
-    * before any data moved. The manifest is immutable once published
-    * and names its files, so the union schema is a pure function of the
-    * manifest: infer once, serve every later scan with an explicit
-    * schema (the parquet reader null-fills columns a file lacks — the
-    * same semantics mergeSchema produced, minus the per-read jobs). */
+    * manifest identity, so every scan of the version runs with an
+    * explicit schema (the parquet reader null-fills columns a file
+    * lacks). It is what `spark.read.option("mergeSchema", "true")` over
+    * the files infers, folded on the driver: each file's footer schema
+    * ([[fileSchema]]), merged in manifest order by Spark's own rule.
+    * Spark's inference runs a distributed footer job per call, and
+    * every commit makes a new manifest, so a read after each write paid
+    * one job over the whole table; files are immutable, so here a new
+    * manifest opens only the footers of files not seen before. A
+    * WIDENED table (metadata-only ALTER COLUMN TYPE) lifts each file's
+    * narrower era to the declared type first: files may legitimately
+    * mix narrow and wide physical types, which the merge refuses. */
   private val physSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
@@ -829,15 +837,35 @@ object ManifestTable {
     val hit = physSchemaCache.get(key)
     if (hit != null) return hit
     val widen = GraftCatalog.readDeclaredWiden(Paths.get(path))
-    val sc =
-      if (widen.isEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(m.files.map(f => dataDir(path).resolve(f).toString): _*)
-          .schema
-      else widenMergedSchema(spark, path, m.files, widen)
+    val sc = org.apache.spark.sql.graft.ColumnBridge.mergeSchemas(spark,
+      m.files.map { f =>
+        val s = fileSchema(spark, path, f)
+        if (widen.isEmpty) s
+        else org.apache.spark.sql.types.StructType(s.map(c =>
+          widen.get(c.name).filter(GraftCatalog.isWidening(c.dataType, _))
+            .fold(c)(wide => c.copy(dataType = wide))))
+      })
     if (physSchemaCache.size > 65536) physSchemaCache.clear()
     physSchemaCache.put(key, sc)
     sc
+  }
+
+  /** One data file's footer schema, cached by its absolute path: files
+    * are immutable and uniquely named. */
+  private val fileSchemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.types.StructType]()
+
+  private def fileSchema(spark: SparkSession, path: String,
+      f: String): org.apache.spark.sql.types.StructType = {
+    val file = dataDir(path).resolve(f)
+    val key = file.toAbsolutePath.toString
+    val hit = fileSchemaCache.get(key)
+    if (hit != null) return hit
+    val s = org.apache.spark.sql.graft.ColumnBridge.footerSchema(spark, key,
+      footerOf(file))
+    if (fileSchemaCache.size > 262144) fileSchemaCache.clear()
+    fileSchemaCache.put(key, s)
+    s
   }
 
   /** A WIDENING ALTER invalidates every cached schema of the table (the
@@ -847,51 +875,6 @@ object ManifestTable {
   private[sources] def invalidateSchemaCaches(path: String): Unit = {
     schemaCache.clear()
     physSchemaCache.clear()
-  }
-
-  /** Footer-merged schema of a WIDENED table, driver-side: files may
-    * legitimately MIX narrow (pre-ALTER) and wide (post-ALTER) physical
-    * types for a column, which Spark's own mergeSchema refuses to
-    * merge. Per column the WIDEST representation wins, then the
-    * declared overrides apply — so a pruned read keeps the same shape
-    * an unpruned one has, whatever era its files are from. One footer
-    * open per file, once per manifest (the cache above). */
-  private def widenMergedSchema(spark: SparkSession, path: String,
-      files: Seq[String],
-      widen: Map[String, org.apache.spark.sql.types.DataType])
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val conv = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    val order = scala.collection.mutable.LinkedHashMap[String, StructField]()
-    files.foreach { name =>
-      conv.convert(footerOf(dataDir(path).resolve(name))
-        .getFileMetaData.getSchema).fields.foreach { f =>
-        order.get(f.name) match {
-          case None => order(f.name) = f.copy(nullable = true)
-          case Some(cur) if cur.dataType == f.dataType => ()
-          case Some(cur) if GraftCatalog.isWidening(cur.dataType, f.dataType) =>
-            order(f.name) = cur.copy(dataType = f.dataType)
-          case Some(cur) if GraftCatalog.isWidening(f.dataType, cur.dataType) =>
-            () // current is already the wider era
-          case Some(cur) => throw new IllegalStateException(
-            s"column '${f.name}' mixes un-widenable physical types " +
-              s"${cur.dataType.simpleString} and ${f.dataType.simpleString} " +
-              s"across files of $path")
-        }
-      }
-    }
-    widen.foreach { case (c, wide) =>
-      order.get(c).foreach { cur =>
-        if (cur.dataType != wide) {
-          require(GraftCatalog.isWidening(cur.dataType, wide),
-            s"declared widening of '$c' to ${wide.simpleString} no longer " +
-              s"covers the files' ${cur.dataType.simpleString}")
-          order(c) = cur.copy(dataType = wide)
-        }
-      }
-    }
-    StructType(order.values.toSeq)
   }
 
   private def reconcileRaw(spark: SparkSession, path: String, m: Manifest,
@@ -1619,25 +1602,75 @@ object ManifestTable {
   // footer statistics, so time-window predicates over an INT96 table
   // could never skip a file.)
 
-  /** One-job dup-key guard over both merge splits. Grouping includes the
-    * side tag, so a delete-then-reinsert key (once per side — the
-    * legitimate CDC shape) passes while a duplicate WITHIN either side
-    * fails: the same semantics as the two per-side guard jobs this
-    * replaces, at half the action count (the guard runs on EVERY merge,
-    * so the saved job is paid dozens of times per pipeline run). */
-  private def requireKeyedSplits(upserts: DataFrame, tombstones: DataFrame,
-      keyCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val dup = upserts
-      .select(lit("upsert").as("__side") +: keyCols.map(col): _*)
-      .unionByName(tombstones
-        .select(lit("tombstone").as("__side") +: keyCols.map(col): _*))
-      .groupBy(("__side" +: keyCols).map(col): _*).count()
-      .where(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty, s"source has duplicate " +
-      s"${dup.headOption.map(_.getString(0)).getOrElse("")} merge key " +
-      s"${dup.headOption.map(_.get(1))}")
+  /** A keyed merge's source split once: `upserts` and `tombstones` over
+    * `cols` (the target's columns plus, with schema evolution, the
+    * source's extra ones), and `keys`, every distinct source key. */
+  private final case class KeyedSource(upserts: DataFrame,
+      tombstones: DataFrame, keys: DataFrame, cols: Seq[String])
+
+  /** The source handling every keyed merge shares — CoW, MoR, bundle and
+    * branch. Validates the keys against the target's columns `cols` and
+    * the table's existing keys (a table keyed by an earlier merge stays
+    * keyed on THE SAME columns: re-keying would orphan every delete
+    * file's semantics), pins the source with `localCheckpoint` for its
+    * several consumers and RELEASES it after `body` (a long-running
+    * service must not accumulate checkpoint blocks), and splits it on
+    * `deleteWhen`, which may reference columns outside the table (an op
+    * marker — never evolved into it).
+    *
+    * The keyed contract holds AFTER the split: a delete and a re-insert
+    * of one key in one batch is the legitimate CDC shape (delete first,
+    * then upsert-as-insert), a duplicate WITHIN either split would make
+    * "the" update ambiguous. One guard job: grouping includes the side
+    * tag, so a key once per side passes. */
+  private def withKeyedSource[A](source: DataFrame, cols: Seq[String],
+      tableKeys: Seq[String], keyCols: Seq[String],
+      deleteWhen: Option[org.apache.spark.sql.Column],
+      evolveSchema: Boolean = false)(body: KeyedSource => A): A = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    require(keyCols.nonEmpty, "merge needs at least one key column")
+    require(tableKeys.isEmpty || tableKeys == keyCols,
+      s"table is keyed on ${tableKeys.mkString("(", ",", ")")}; " +
+        s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
+    require(keyCols.forall(cols.contains), s"key not in target: $keyCols")
+    require(cols.forall(source.columns.contains),
+      s"source is missing target columns: ${cols.diff(source.columns.toSeq)}")
+    val allCols = cols ++ (if (!evolveSchema) Seq.empty else {
+      val delRefs = deleteWhen.map(refNames(source, _)).getOrElse(Set.empty)
+      source.columns.toSeq.filterNot(c => cols.contains(c) || delRefs(c))
+    })
+    val raw = source.localCheckpoint()
+    try {
+      val tombstones = deleteWhen.map(raw.where(_)).getOrElse(raw.limit(0))
+        .select(allCols.map(col): _*)
+      val upserts = deleteWhen.map(c => raw.where(!coalesce(c, lit(false))))
+        .getOrElse(raw).select(allCols.map(col): _*)
+      def keysOf(df: DataFrame, side: String) =
+        df.select(lit(side).as("__side") +: keyCols.map(col): _*)
+      val dup = keysOf(upserts, "upsert")
+        .unionByName(keysOf(tombstones, "tombstone"))
+        .groupBy(("__side" +: keyCols).map(col): _*).count()
+        .where(col("count") > 1).limit(1).collect()
+      require(dup.isEmpty, s"source has duplicate " +
+        s"${dup.headOption.map(_.getString(0)).getOrElse("")} merge key " +
+        s"${dup.headOption.map(_.get(1))}")
+      body(KeyedSource(upserts, tombstones,
+        (tombstones.select(keyCols.map(col): _*)
+          .unionByName(upserts.select(keyCols.map(col): _*))).distinct(),
+        allCols))
+    } finally graft.operators.IndexScope.release(raw)
   }
+
+  /** Column names a predicate references, resolved against `df` —
+    * Spark 4 Columns are lazy sql-api nodes whose `references` are
+    * empty until analysis, so the names come from an analyzed
+    * throwaway Filter over the actual frame. */
+  private def refNames(df: DataFrame,
+      c: org.apache.spark.sql.Column): Set[String] =
+    df.where(c).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.references.map(_.name).toSet
+    }.getOrElse(Set.empty)
 
   /** Staging parallelism sized by DATA, not cores: ceil(estimated bytes /
     * target file size) write tasks. Frames entering stage() default to
@@ -1733,16 +1766,19 @@ object ManifestTable {
     // whenever the value tuple changes — every staged file carries
     // exactly ONE partition value (the invariant the read side needs to
     // report a KeyGroupedPartitioning for storage-partitioned joins).
-    // RDD-level coalesce (sizing) concatenates the in-task-sorted runs;
-    // the roll writer still emits one partition value per file (it
-    // rolls on value change), only the file count shrinks.
+    // The data-sized coalesce runs BEFORE the sort, so each task sorts
+    // all of its rows and writes one file per value; coalescing sorted
+    // tasks afterwards would concatenate their runs, one file per
+    // (input partition, value).
     val declaredParts = GraftCatalog.readDeclaredParts(Paths.get(path))
-    val (frame, parts) =
+    val (frame, parts, sized) =
       if (declaredParts.nonEmpty &&
-          declaredParts.forall(processed.columns.contains))
-        (processed.sortWithinPartitions(
-          declaredParts.map(processed.col): _*), declaredParts)
-      else (processed, Seq.empty)
+          declaredParts.forall(processed.columns.contains)) {
+        val cut = if (keepLayout) processed
+          else processed.coalesce(stageTasks(processed))
+        (cut.sortWithinPartitions(declaredParts.map(cut.col): _*),
+          declaredParts, true)
+      } else (processed, Seq.empty, keepLayout)
     // committer-free staging: each non-empty task streams its rows
     // straight to UUID-named files in the data dir — invisible until the
     // manifest commit references them, a failed task deletes its own
@@ -1751,7 +1787,7 @@ object ManifestTable {
     // profiled as the single largest term of the local commit floor
     // (~0.3 s/action — see CommitFloorSpec).
     val task = new StageTask(dd, frame.schema, parts, None, codec)
-    val rdd = sizedRdd(frame, keepLayout)
+    val rdd = sizedRdd(frame, sized)
     val staged = CommitProfile.timed("stageJob") { runStage(rdd, task) }
     if (staged.nonEmpty) staged
     else {
@@ -2106,14 +2142,14 @@ object ManifestTable {
   // head-independent: only rule 3 applies); metadata-only commits re-run
   // their own proof on the winner's delta; commits whose change is
   // computed from the exact base (column mapping, restore, a DML
-  // fast-forward's pinned seqs) are STRICT — any moved head conflicts.
+  // fast-forward's audited ledger) are STRICT — any moved head conflicts.
   // Rebase is an optimization, never a semantics change: a refused
   // rebase re-runs, and a re-run is what the claim race always was.
 
   /** One commit's change, independent of the head it lands on. */
   private final case class Change(
       // data files added; each lands at the claimed version's seq unless
-      // `seqs` pins it (a branch fast-forward keeps its commits' order)
+      // `seqs` pins it (a restore keeps version K's seqs)
       added: Seq[String] = Seq.empty,
       seqs: Map[String, Long] = Map.empty,
       // footer stats of the added data files; row counts and recorded
@@ -2235,9 +2271,8 @@ object ManifestTable {
         for ((app, epoch) <- c.txn; h <- head if h.txns.get(app).exists(_ >= epoch))
           return h.version
         CommitProfile.timed("replayScan") {
-          if (c.txn.isDefined) None else c.commitId.flatMap(id =>
-            versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
-        }.foreach(m => return m.version)
+          if (c.txn.isDefined) None else c.commitId.flatMap(landedAt(path, _))
+        }.foreach(v => return v)
       }
       val rebasedFrom = for (b <- base; h <- head if h.version != b.version)
         yield {
@@ -2348,8 +2383,7 @@ object ManifestTable {
     requireNoWapSession(df.sparkSession, "append")
     if (txnLanded(path, appTxn)) // O(1) ledger replay: skip the staging
       return commit(path, Seq.empty, replace = false, commitId, appTxn)
-    if (appTxn.isEmpty && commitId.exists(id =>
-        versions(path).map(manifestAt(path, _)).exists(_.commitId.contains(id))))
+    if (appTxn.isEmpty && commitId.exists(commitLanded(path, _)))
       return commit(path, Seq.empty, replace = false, commitId) // replay fast-path
     val under = latest(path) // contract the in-scan staging validates against
     commit(path, stage(df, path), replace = false, commitId, appTxn,
@@ -2362,8 +2396,7 @@ object ManifestTable {
     requireNoWapSession(df.sparkSession, "overwrite")
     if (txnLanded(path, appTxn))
       return commit(path, Seq.empty, replace = true, commitId, appTxn)
-    if (appTxn.isEmpty && commitId.exists(id =>
-        versions(path).map(manifestAt(path, _)).exists(_.commitId.contains(id))))
+    if (appTxn.isEmpty && commitId.exists(commitLanded(path, _)))
       return commit(path, Seq.empty, replace = true, commitId)
     val under = latest(path)
     commit(path, stage(df, path), replace = true, commitId, appTxn,
@@ -2435,9 +2468,8 @@ object ManifestTable {
       "one TxnWrite per table: duplicate paths cannot claim one slot twice")
     writes.foreach(w => Files.createDirectories(manifestDir(w.path)))
     commitId.foreach { id =>
-      val landed = writes.map(w =>
-        versions(w.path).map(manifestAt(w.path, _)).find(_.commitId.contains(id)))
-      if (landed.forall(_.isDefined)) return landed.map(_.get.version)
+      val landed = writes.map(w => landedAt(w.path, id))
+      if (landed.forall(_.isDefined)) return landed.map(_.get)
       require(landed.forall(_.isEmpty),
         s"txn $id landed on a strict subset of its tables - run recoverTxn first")
     }
@@ -2655,9 +2687,8 @@ object ManifestTable {
     private var pending: Manifest = base
     // replay detected at OPEN: every action no-ops (zero re-staged
     // bytes — the single-op replay fast paths' economy, bundle-level)
-    private val replayedAtOpen: Option[Long] = commitId.flatMap(id =>
-      versions(path).map(manifestAt(path, _))
-        .find(_.commitId.contains(id)).map(_.version))
+    private val replayedAtOpen: Option[Long] =
+      commitId.flatMap(landedAt(path, _))
     private var committed: Option[Long] = replayedAtOpen
     // every rewrite action's predicate: the bundle-level delta-safety
     // scan at rebase must prove the winner added no row in ANY of them
@@ -2738,53 +2769,37 @@ object ManifestTable {
         deleteWhen: Option[org.apache.spark.sql.Column] = None): this.type = {
       if (skipAction()) return this
       import org.apache.spark.sql.functions.{broadcast, input_file_name}
-      require(keyCols.nonEmpty, "merge needs at least one key column")
-      require(pending.mergeKeys.isEmpty || pending.mergeKeys == keyCols,
-        s"table is keyed on ${pending.mergeKeys.mkString("(", ",", ")")}; " +
-          s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
-      val target = read()
-      val cols = target.columns.toSeq
-      require(keyCols.forall(cols.contains), s"key not in target: $keyCols")
-      require(cols.forall(source.columns.contains),
-        s"source is missing target columns: ${cols.diff(source.columns.toSeq)}")
-      val raw = source.localCheckpoint()
-      try {
-        val tombstones = deleteWhen.map(raw.where(_)).getOrElse(raw.limit(0))
-          .select(cols.map(col): _*)
-        val upserts = deleteWhen.map(c => raw.where(!coalesce(c, lit(false))))
-          .getOrElse(raw).select(cols.map(col): _*)
-        requireKeyedSplits(upserts, tombstones, keyCols)
-        val keys = tombstones.select(keyCols.map(col): _*)
-          .unionByName(upserts.select(keyCols.map(col): _*)).distinct()
+      withKeyedSource(source, read().columns.toSeq, pending.mergeKeys,
+          keyCols, deleteWhen) { s =>
         // sized by the key set's bytes (the CDF pin's rule): a few
         // blocks for a correction batch, never one serial task at scale
-        val srcKeys = keys.coalesce(stageTasks(keys)).localCheckpoint()
+        val srcKeys = s.keys.coalesce(stageTasks(s.keys)).localCheckpoint()
         try {
-        val touched =
-          if (pending.files.isEmpty) Set.empty[String]
-          else spark.read.schema(physicalSchemaAt(spark, path, base))
-            .parquet(pending.files.map(f =>
-              dataDir(path).resolve(f).toString): _*)
-            .withColumn("__file", input_file_name())
-            .join(broadcast(srcKeys), keyCols, "left_semi")
-            .select(col("__file")).distinct().collect()
-            .map(r => baseName(r.getString(0))).toSet
-        val untouched = pending.files.filterNot(f => touched(baseName(f)))
-        val rewriteStaged =
-          if (touched.isEmpty) Seq.empty[String]
-          else stagePending(reconcile(spark, path, pending,
-              pending.files.filter(f => touched(baseName(f))))
-            .join(broadcast(srcKeys), keyCols, "left_anti"))
-        val upsertStaged = stagePending(upserts)
-        fold(untouched, rewriteStaged ++ upsertStaged)
-        if (pending.mergeKeys != keyCols) {
-          pending = pending.copy(mergeKeys = keyCols)
-          keysSet = Some(keyCols)
-        }
-        hasMerge = true
-        this
+          val touched =
+            if (pending.files.isEmpty) Set.empty[String]
+            else spark.read.schema(physicalSchemaAt(spark, path, base))
+              .parquet(pending.files.map(f =>
+                dataDir(path).resolve(f).toString): _*)
+              .withColumn("__file", input_file_name())
+              .join(broadcast(srcKeys), keyCols, "left_semi")
+              .select(col("__file")).distinct().collect()
+              .map(r => baseName(r.getString(0))).toSet
+          val untouched = pending.files.filterNot(f => touched(baseName(f)))
+          val rewriteStaged =
+            if (touched.isEmpty) Seq.empty[String]
+            else stagePending(reconcile(spark, path, pending,
+                pending.files.filter(f => touched(baseName(f))))
+              .join(broadcast(srcKeys), keyCols, "left_anti"))
+          val upsertStaged = stagePending(s.upserts)
+          fold(untouched, rewriteStaged ++ upsertStaged)
+          if (pending.mergeKeys != keyCols) {
+            pending = pending.copy(mergeKeys = keyCols)
+            keysSet = Some(keyCols)
+          }
+          hasMerge = true
+          this
         } finally graft.operators.IndexScope.release(srcKeys)
-      } finally graft.operators.IndexScope.release(raw)
+      }
     }
 
     /** Tighten/replace the table contract inside the bundle: every
@@ -3306,16 +3321,19 @@ object ManifestTable {
         else keyFree(spark, path, delKeys, keyCols)))
   }
 
-  /** Column names a predicate references, resolved against `df` —
-    * Spark 4 Columns are lazy sql-api nodes whose `references` are
-    * empty until analysis, so the names come from an analyzed
-    * throwaway Filter over the actual frame. */
-  private def refNames(df: DataFrame,
-      c: org.apache.spark.sql.Column): Set[String] =
-    df.where(c).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.references.map(_.name).toSet
-    }.getOrElse(Set.empty)
+  /** The version a replayed main-table merge already landed at: the txn
+    * ledger answers O(1) from the head (a ledger hit whose version has
+    * been expired answers the head rather than re-merging); without a
+    * ledger, the commit-id scan stays the fallback for one-shot jobs. A
+    * replayed streaming micro-batch must not re-run the merge — re-merging
+    * is idempotent for pure upserts but NOT for a delete-then-reinsert
+    * batch, and every re-run burns a version. */
+  private def mergeReplayed(path: String, commitId: Option[String],
+      appTxn: Option[(String, Long)]): Option[Long] =
+    if (txnLanded(path, appTxn))
+      Some(commitId.flatMap(landedAt(path, _)).getOrElse(latestVersion(path)))
+    else if (appTxn.isDefined) None
+    else commitId.flatMap(landedAt(path, _))
 
   private def mergeAttempt(spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String],
@@ -3323,118 +3341,67 @@ object ManifestTable {
       commitId: Option[String], evolveSchema: Boolean = false,
       appTxn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions._
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    // idempotent replay (same contract as append/overwrite): a replayed
-    // streaming micro-batch must not re-run the merge — re-merging is
-    // semantically idempotent for pure upserts but NOT for a
-    // delete-then-reinsert batch, and every re-run burns a version
-    // replay detection: the txn ledger answers O(1) from the latest
-    // manifest; without one, the commit-id scan stays the O(versions)
-    // fallback for one-shot jobs. A ledger hit whose version has been
-    // expired returns the latest version rather than re-merging.
-    if (txnLanded(path, appTxn))
-      return commitId.flatMap(id => versions(path).map(manifestAt(path, _))
-          .find(_.commitId.contains(id)).map(_.version))
-        .getOrElse(latestVersion(path))
-    val landed = if (appTxn.isDefined) None else commitId.flatMap(id =>
-      versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
-    if (landed.isDefined) return landed.get.version
+    mergeReplayed(path, commitId, appTxn).foreach(return _)
     val base = latest(path).getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
     val target = read(spark, path, Some(base.version))
-    val cols = target.columns.toSeq
-    require(keyCols.forall(cols.contains), s"key not in target: $keyCols")
-    require(cols.forall(source.columns.contains),
-      s"source is missing target columns: ${cols.diff(source.columns.toSeq)}")
-    // a table keyed by an earlier merge stays keyed on THE SAME columns:
-    // silently re-keying would orphan every delete file's semantics and
-    // break the CDC path's keyed contract
-    require(base.mergeKeys.isEmpty || base.mergeKeys == keyCols,
-      s"table is keyed on ${base.mergeKeys.mkString("(", ",", ")")}; " +
-        s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
-    // schema evolution: extra source columns join the table; columns
-    // the tombstone predicate references (op markers) stay out
-    val delRefs: Set[String] =
-      deleteWhen.map(refNames(source, _)).getOrElse(Set.empty)
-    val extCols: Seq[String] =
-      if (!evolveSchema) Seq.empty
-      else source.columns.toSeq.filterNot(cols.contains)
-        .filterNot(delRefs.contains)
-    val allCols = cols ++ extCols
-    def pad(df: DataFrame): DataFrame = df.select(allCols.map(c =>
-      (if (df.columns.contains(c)) col(c)
-       else lit(null).cast(source.schema(c).dataType)).as(c)): _*)
-    // the tombstone split runs on the RAW source — deleteWhen may
-    // reference columns (an op marker) that are not part of the table.
-    // The checkpoint pins the source for its several consumers below and
-    // is RELEASED before returning (a long-running service doing many
-    // merges must not accumulate checkpoint blocks until GC).
-    val raw = source.localCheckpoint()
-    try {
-    val tombstones = deleteWhen.map(raw.where(_)).getOrElse(raw.limit(0))
-      .select(allCols.map(col): _*)
-    val upserts = deleteWhen.map(c => raw.where(!coalesce(c, lit(false))))
-      .getOrElse(raw).select(allCols.map(col): _*)
-    // the keyed contract holds AFTER the tombstone split: a delete and a
-    // re-insert of the same key in one batch is the legitimate CDC shape
-    // and processes unambiguously (delete first, then upsert-as-insert);
-    // a duplicate WITHIN either split would make "the" update ambiguous
-    requireKeyedSplits(upserts, tombstones, keyCols)
-    val src = raw.select(allCols.map(col): _*)
+    withKeyedSource(source, target.columns.toSeq, base.mergeKeys, keyCols,
+        deleteWhen, evolveSchema) { s =>
+      val allCols = s.cols
+      def pad(df: DataFrame): DataFrame = df.select(allCols.map(c =>
+        (if (df.columns.contains(c)) col(c)
+         else lit(null).cast(source.schema(c).dataType)).as(c)): _*)
 
-    // (1) which files contain a source key? (file names only — the
-    // driver never holds data rows)
-    val withFile = spark.read.schema(physicalSchemaAt(spark, path, base))
-      .parquet(base.files.map(f => dataDir(path).resolve(f).toString): _*)
-      .withColumn("__file", input_file_name())
-    val touched = withFile
-      .join(src.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .select(col("__file")).distinct().collect()
-      .map(r => r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1))
-      .toSet
+      // (1) which files contain a source key? (file names only — the
+      // driver never holds data rows)
+      val withFile = spark.read.schema(physicalSchemaAt(spark, path, base))
+        .parquet(base.files.map(f => dataDir(path).resolve(f).toString): _*)
+        .withColumn("__file", input_file_name())
+      val touched = withFile.join(s.keys, keyCols, "left_semi")
+        .select(col("__file")).distinct().collect()
+        .map(r => baseName(r.getString(0))).toSet
 
-    // (2) rewrite ONLY the touched files
-    // reconcile: a DV-hidden row in a touched file must not resurrect
-    // through the rewrite
-    val touchedRows =
-      if (touched.isEmpty) pad(target.limit(0))
-      else pad(reconcile(spark, path, base,
-        base.files.filter(f => touched(baseName(f)))))
-    val afterDelete = touchedRows.join(
-      tombstones.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val u = upserts.select(
-      keyCols.map(col) :+ struct(allCols.map(col): _*).as("__u"): _*)
-    // (3) updates AND inserts from ONE full-outer join: a key on both
-    // sides takes the upsert's values (update), a key only in the
-    // target survives unchanged, a key only in the source is an insert
-    // — one SURVIVING-row row set in one pass where the old
-    // left_outer(rewrites) + left_anti(inserts) pair referenced (and so
-    // re-executed) the touched-file read twice. Semantics unchanged: a
-    // key deleted and re-inserted in the same batch really re-inserts
-    // (its row left afterDelete via the tombstone anti-join, so the
-    // source side is unmatched), and untouched files hold no source key
-    // by construction of `touched`.
-    val rewritten = afterDelete.join(u, keyCols, "full_outer")
-      .select(allCols.map(c =>
-        when(col("__u").isNotNull, col(s"__u.$c")).otherwise(col(c)).as(c)): _*)
+      // (2) rewrite ONLY the touched files
+      // reconcile: a DV-hidden row in a touched file must not resurrect
+      // through the rewrite
+      val touchedRows =
+        if (touched.isEmpty) pad(target.limit(0))
+        else pad(reconcile(spark, path, base,
+          base.files.filter(f => touched(baseName(f)))))
+      val afterDelete = touchedRows.join(
+        s.tombstones.select(keyCols.map(col): _*), keyCols, "left_anti")
+      val u = s.upserts.select(
+        keyCols.map(col) :+ struct(allCols.map(col): _*).as("__u"): _*)
+      // (3) updates AND inserts from ONE full-outer join: a key on both
+      // sides takes the upsert's values (update), a key only in the
+      // target survives unchanged, a key only in the source is an insert
+      // — one SURVIVING-row row set in one pass where the old
+      // left_outer(rewrites) + left_anti(inserts) pair referenced (and so
+      // re-executed) the touched-file read twice. Semantics unchanged: a
+      // key deleted and re-inserted in the same batch really re-inserts
+      // (its row left afterDelete via the tombstone anti-join, so the
+      // source side is unmatched), and untouched files hold no source key
+      // by construction of `touched`.
+      val rewritten = afterDelete.join(u, keyCols, "full_outer")
+        .select(allCols.map(c => when(col("__u").isNotNull, col(s"__u.$c"))
+          .otherwise(col(c)).as(c)): _*)
 
-    // (4) stage + claim: untouched files CARRY their stats, seqs, and
-    // any delete files that apply to them; rewritten files sit at the
-    // claimed seq, above every existing delete, so old deletes can never
-    // re-hide rewritten rows. A merge's scope is its touched files PLUS
-    // its source keys: a winner that touched none of our files, landed
-    // no delete, and added no source key cannot change this merge's
-    // result under either ordering — the staged rewrite adopts
-    // metadata-only.
-    val staged = stage(rewritten, path)
-    val (stagedStats, stagedRows) = footerHarvest(path, staged)
-    val consumed = base.files.filter(f => touched(baseName(f))).toSet
-    claim(path, Some(base), Change(added = staged, stats = stagedStats,
-        rows = stagedRows, removed = consumed, mergeKeys = Some(keyCols),
-        txn = appTxn, commitId = commitId),
-      Rebase.rewrite(consumed,
-        keyFree(spark, path, src.select(keyCols.map(col): _*), keyCols)))
-    } finally graft.operators.IndexScope.release(raw)
+      // (4) stage + claim: untouched files CARRY their stats, seqs, and
+      // any delete files that apply to them; rewritten files sit at the
+      // claimed seq, above every existing delete, so old deletes can never
+      // re-hide rewritten rows. A merge's scope is its touched files PLUS
+      // its source keys: a winner that touched none of our files, landed
+      // no delete, and added no source key cannot change this merge's
+      // result under either ordering — the staged rewrite adopts
+      // metadata-only.
+      val staged = stage(rewritten, path)
+      val (stagedStats, stagedRows) = footerHarvest(path, staged)
+      val consumed = base.files.filter(f => touched(baseName(f))).toSet
+      claim(path, Some(base), Change(added = staged, stats = stagedStats,
+          rows = stagedRows, removed = consumed, mergeKeys = Some(keyCols),
+          txn = appTxn, commitId = commitId),
+        Rebase.rewrite(consumed, keyFree(spark, path, s.keys, keyCols)))
+    }
   }
 
   /** MERGE-ON-READ MERGE — same semantics as [[merge]] (keyed upsert +
@@ -3470,63 +3437,46 @@ object ManifestTable {
         deleteWhen, commitId).toLong
     }
     requireNoWapSession(spark, "mergeMoR")
-    rerun(mergeMoRAttempt(spark, path, source, keyCols,
+    rerun(mergeMoRAttempt(spark, path, None, source, keyCols,
       deleteWhen, commitId, evolveSchema, appTxn))
   }
 
+  /** The ONE merge-on-read planner, for main (`ref` None) and for branch
+    * ref `ref`: read the target, split the source, stage ONE delete file
+    * holding every source key (upsert keys delete their old row before
+    * the new one lands; a key absent from the table deletes nothing) and
+    * the upserts as new data files, then land them — on main through
+    * [[landMoR]]'s claim (the version), on a ref as one branch commit
+    * (its 1-based ordinal). Replays answer without staging. */
   private def mergeMoRAttempt(spark: SparkSession, path: String,
-      source: DataFrame, keyCols: Seq[String],
+      ref: Option[String], source: DataFrame, keyCols: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column],
       commitId: Option[String], evolveSchema: Boolean = false,
       appTxn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions._
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    // replay detection: the txn ledger answers O(1) from the latest
-    // manifest; without one, the commit-id scan stays the O(versions)
-    // fallback for one-shot jobs. A ledger hit whose version has been
-    // expired returns the latest version rather than re-merging.
-    if (txnLanded(path, appTxn))
-      return commitId.flatMap(id => versions(path).map(manifestAt(path, _))
-          .find(_.commitId.contains(id)).map(_.version))
-        .getOrElse(latestVersion(path))
-    val landed = if (appTxn.isDefined) None else commitId.flatMap(id =>
-      versions(path).map(manifestAt(path, _)).find(_.commitId.contains(id)))
-    if (landed.isDefined) return landed.get.version
-    val base = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val target = read(spark, path, Some(base.version))
-    val cols = target.columns.toSeq
-    require(keyCols.forall(cols.contains), s"key not in target: $keyCols")
-    require(cols.forall(source.columns.contains),
-      s"source is missing target columns: ${cols.diff(source.columns.toSeq)}")
-    // a table keyed by an earlier merge stays keyed on THE SAME columns:
-    // silently re-keying would orphan every delete file's semantics and
-    // break the CDC path's keyed contract
-    require(base.mergeKeys.isEmpty || base.mergeKeys == keyCols,
-      s"table is keyed on ${base.mergeKeys.mkString("(", ",", ")")}; " +
-        s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
-    val delRefs: Set[String] =
-      deleteWhen.map(refNames(source, _)).getOrElse(Set.empty)
-    val allCols = cols ++ (if (!evolveSchema) Seq.empty
-      else source.columns.toSeq.filterNot(cols.contains)
-        .filterNot(delRefs.contains))
-    val raw = source.localCheckpoint()
-    try {
-      val tombstones = deleteWhen.map(raw.where(_)).getOrElse(raw.limit(0))
-        .select(allCols.map(col): _*)
-      val upserts = deleteWhen.map(c => raw.where(!coalesce(c, lit(false))))
-        .getOrElse(raw).select(allCols.map(col): _*)
-      requireKeyedSplits(upserts, tombstones, keyCols)
-      // ONE delete file: every source key (upsert keys delete their old
-      // row before the new one lands; a key absent from the table deletes
-      // nothing — the anti-join just misses). distinct: a
-      // delete-then-reinsert batch repeats its key across the two splits.
-      val delKeys = tombstones.select(keyCols.map(col): _*)
-        .unionByName(upserts.select(keyCols.map(col): _*)).distinct()
-      val delFiles = stageDeletes(delKeys, path)
-      landMoR(spark, path, Some(base), stage(upserts, path), delFiles,
-        delKeys, keyCols, appTxn, commitId)
-    } finally graft.operators.IndexScope.release(raw)
+    val (tableKeys, target, land) = ref match {
+      case None =>
+        mergeReplayed(path, commitId, appTxn).foreach(return _)
+        val base = latest(path).getOrElse(
+          throw new IllegalStateException(s"no committed version at $path"))
+        (base.mergeKeys, read(spark, path, Some(base.version)),
+          (up: Seq[String], del: Seq[String], keys: DataFrame) =>
+            landMoR(spark, path, Some(base), up, del, keys, keyCols, appTxn,
+              commitId))
+      case Some(name) =>
+        val b = refHead(path, name)
+        replayOrdinal(b, commitId).foreach(o => return o.toLong)
+        require(b.keys.isEmpty || b.keys == keyCols,
+          s"branch '$name' is keyed on ${b.keys.mkString("(", ",", ")")}; " +
+            s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
+        (manifestAt(path, b.parent).mergeKeys, readBranch(spark, path, name),
+          (up: Seq[String], del: Seq[String], _: DataFrame) =>
+            commitToRef(path, name, up, del, Some(keyCols), commitId).toLong)
+    }
+    withKeyedSource(source, target.columns.toSeq, tableKeys, keyCols,
+        deleteWhen, evolveSchema) { s =>
+      val delFiles = stageDeletes(s.keys, path)
+      land(stage(s.upserts, path), delFiles, s.keys)
+    }
   }
 
   /** Stage merge keys as delete files (named `del-*` so a listing reads
@@ -3664,8 +3614,8 @@ object ManifestTable {
       val ks = branchDmlKeys(path, name)
       require(ks == keyCols, s"branch '$name' DML is keyed on " +
         s"${ks.mkString(",")}; delta write on ${keyCols.mkString(",")}")
-      return publishBranchCommit(path, name, upsertFiles, deleteFiles,
-        keyCols, None).toLong
+      return commitToRef(path, name, upsertFiles, deleteFiles, Some(keyCols),
+        None).toLong
     }
     if (upsertFiles.nonEmpty) {
       val staged = spark.read.parquet(
@@ -4447,8 +4397,7 @@ object ManifestTable {
     rerun {
       val base = latest(path).getOrElse(
         throw new IllegalStateException(s"no committed version at $path"))
-      commitId.flatMap(id => versions(path).map(manifestAt(path, _))
-        .find(_.commitId.contains(id))).foreach(m => return m.version)
+      commitId.flatMap(landedAt(path, _)).foreach(v => return v)
       // K's data state replaces the head's; the contract (constraints,
       // merge keys) and the txn ledger stay the head's. The label names
       // the slot, so a moved head re-runs (Strict) rather than rebases.
@@ -4994,15 +4943,24 @@ object ManifestTable {
 
   private def branchDir(path: String): Path = Paths.get(path, "_branch")
 
-  /** `deletes`: MoR delete-key files this commit carries — the branch
-    * DML door ([[mergeMoRBranch]]) stages corrections as keyed delete
-    * ledgers + upsert files, exactly the main-chain merge shape. */
+  /** One branch commit: data `files`, and `deletes`, the MoR delete-key
+    * files a branch DML commit ([[mergeMoRBranch]]) stages as keyed
+    * ledgers beside its upsert files — exactly the main-chain merge
+    * shape. SEQ RULE: in the branch's snapshot, commit i (1-based) sits
+    * at seq parent + i, its files and its ledger alike, so a commit's
+    * ledger hides the parent's rows and earlier commits' rows with its
+    * keys while its own upserts survive (strict dseq > fseq). On main,
+    * seq = version: a fast-forward lands every file and ledger it adds
+    * at the ONE version it claims, so files a later commit's ledger
+    * covers are rewritten from the snapshot first ([[fastForward]]). */
   final case class BranchCommit(files: Seq[String], ts: Long,
       commitId: Option[String], deletes: Seq[String] = Seq.empty)
-  /** `isSealed`: the ref is being consumed by fast-forward — the seal is
-    * itself a doc published at the next slot through the create-exclusive
-    * chain, so a racing [[appendBranch]] LOSES the slot and fails loudly
-    * instead of publishing a commit the ref removal would silently erase.
+  /** A ref's state: its fork `parent` on main and its commits, in
+    * order, under the [[BranchCommit]] seq rule. `isSealed`: the ref is
+    * being consumed by fast-forward — the seal is itself a doc published
+    * at the next slot through the create-exclusive chain, so a racing
+    * [[appendBranch]] LOSES the slot and fails loudly instead of
+    * publishing a commit the ref removal would silently erase.
     * `keys`: the merge keys the branch's DML commits are ledgered on —
     * set by the first [[mergeMoRBranch]] when the table itself is not
     * yet keyed, so branch readers and the fast-forward publish resolve
@@ -5099,14 +5057,74 @@ object ManifestTable {
       })
   }
 
-  private def branchHead(path: String, name: String): Option[BranchState] = {
-    val ks = branchDocVersions(path, name)
-    if (ks.isEmpty) return None
-    val doc = branchRefDir(path, name).resolve(f"b${ks.last}%08d.json")
-    try Some(parseBranchDoc(doc))
+  private def branchDoc(path: String, name: String, k: Long): BranchState = {
+    val doc = branchRefDir(path, name).resolve(f"b$k%08d.json")
+    try parseBranchDoc(doc)
     catch { case e: Exception => throw new IllegalStateException(
       s"unreadable branch doc $doc: $e - DROP BRANCH or remove it to force") }
   }
+
+  private def branchHead(path: String, name: String): Option[BranchState] =
+    branchDocVersions(path, name).lastOption.map(branchDoc(path, name, _))
+
+  /** The ref's head state; a missing ref refuses loudly. */
+  private def refHead(path: String, name: String): BranchState =
+    branchHead(path, name).getOrElse(throw new IllegalStateException(
+      s"no branch '$name' at $path - CREATE BRANCH first"))
+
+  /** THE ONE REF LOOP — every write of a ref after its creation. Read the
+    * head doc b<N>; `step` either answers without writing (Left) or
+    * returns the state to publish at slot N+1 with the answer (Right).
+    * A lost slot re-reads and re-runs `step` on the winner's state: a
+    * write's staged files are state-independent, so the retry is
+    * metadata-only. */
+  private def refClaim[A](path: String, name: String)(
+      step: BranchState => Either[A, (BranchState, A)]): A = {
+    var attempts = 0
+    while (attempts < ClaimAttempts) {
+      attempts += 1
+      val ks = branchDocVersions(path, name)
+      require(ks.nonEmpty, s"no branch '$name' at $path")
+      step(branchDoc(path, name, ks.last)) match {
+        case Left(a) => return a
+        case Right((next, a)) =>
+          val slot =
+            branchRefDir(path, name).resolve(f"b${ks.last + 1}%08d.json")
+          try { publish(slot, renderBranchDoc(next)); return a }
+          catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      }
+    }
+    throw new IllegalStateException(s"branch contention on '$name' at " +
+      s"$path: gave up after $attempts attempts")
+  }
+
+  /** The 1-based ordinal of the commit `commitId` already landed as. */
+  private def replayOrdinal(b: BranchState,
+      commitId: Option[String]): Option[Int] =
+    commitId.map(id => b.commits.indexWhere(_.commitId.contains(id)) + 1)
+      .filter(_ > 0)
+
+  /** Land one commit on ref `name` — data `files`, ledger `deletes` and,
+    * for a keyed commit, the `keys` they are ledgered on — and return
+    * its 1-based ordinal (a replayed `commitId` answers the ordinal it
+    * landed as). A sealed ref refuses: its commits are being published
+    * to main. */
+  private def commitToRef(path: String, name: String, files: Seq[String],
+      deletes: Seq[String], keys: Option[Seq[String]],
+      commitId: Option[String]): Int =
+    refClaim[Int](path, name) { b =>
+      replayOrdinal(b, commitId).toLeft {
+        if (b.isSealed) throw new IllegalStateException(
+          s"branch '$name' at $path is sealed for fast-forward - its " +
+            "commits are being published to main; re-run this write " +
+            "against main (or a new branch) once the publish resolves")
+        keys.foreach(k => require(b.keys.isEmpty || b.keys == k,
+          s"branch '$name' keyed on ${b.keys.mkString(",")} mid-write"))
+        (b.copy(commits = b.commits :+ BranchCommit(files,
+            System.currentTimeMillis(), commitId, deletes),
+          keys = keys.getOrElse(b.keys)), b.commits.size + 1)
+      }
+    }
 
   /** All branches of a table: name → state (each name's LATEST doc).
     * An unreadable doc throws — branches pin retention and vacuum, and
@@ -5165,89 +5183,26 @@ object ManifestTable {
     * the 1-based branch commit ordinal. */
   def appendBranch(df: DataFrame, path: String, name: String,
       commitId: Option[String] = None): Int = {
-    def replayOf(b: BranchState): Option[Int] = commitId.flatMap(id =>
-      b.commits.zipWithIndex.find(_._1.commitId.contains(id)))
-      .map(_._2 + 1)
-    val b0 = branchHead(path, name).getOrElse(throw new IllegalStateException(
-      s"no branch '$name' at $path - CREATE BRANCH first"))
-    val pre = replayOf(b0)
-    if (pre.isDefined) return pre.get
-    val staged = stage(df, path)
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
-      val ks = branchDocVersions(path, name)
-      require(ks.nonEmpty, s"no branch '$name' at $path - dropped mid-write")
-      val b = branchHead(path, name).get
-      val replayed = replayOf(b)
-      if (replayed.isDefined) return replayed.get
-      if (b.isSealed) throw new IllegalStateException(
-        s"branch '$name' at $path is sealed for fast-forward - " +
-          "its commits are being published to main; re-run this append " +
-          "against main (or a new branch) once the publish resolves")
-      val c = BranchCommit(staged, System.currentTimeMillis(), commitId)
-      val doc = branchRefDir(path, name).resolve(f"b${ks.last + 1}%08d.json")
-      try {
-        publish(doc, renderBranchDoc(b.copy(commits = b.commits :+ c)))
-        return b.commits.size + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          () // another appender won the slot: re-read, retry on top
-      }
-    }
-    throw new IllegalStateException(
-      s"branch contention on '$name': gave up after $attempts attempts")
+    replayOrdinal(refHead(path, name), commitId).foreach(return _)
+    commitToRef(path, name, stage(df, path), Seq.empty, None, commitId)
   }
 
   /** BRANCH DML — the keyed MoR merge routed onto a ref: corrections
     * (UPDATE-shaped upserts, DELETE-shaped tombstones) stage as delete
-    * ledgers + upsert files, exactly the main-chain [[mergeMoR]] shape,
-    * and publish as ONE branch commit. Main never moves; the branch
-    * snapshot reconciles them through the ONE shared read path (the
-    * commit's ledger rides one seq above the last, so parent rows and
-    * earlier branch commits with matching keys hide while the commit's
-    * own upserts survive). Fast-forward publishes data AND ledger in one
-    * STRICT main commit. This is the audit-a-CORRECTION flow: stage the
-    * fix on a branch, audit `VERSION AS OF '<name>'`, publish or drop.
-    * Returns the 1-based branch commit ordinal. */
+    * ledgers + upsert files, exactly the main-chain [[mergeMoR]] shape
+    * and through the same planner, and publish as ONE branch commit.
+    * Main never moves; the branch snapshot reconciles them through the
+    * ONE shared read path (the [[BranchCommit]] seq rule). Fast-forward
+    * publishes data AND ledger in one STRICT main commit. This is the
+    * audit-a-CORRECTION flow: stage the fix on a branch, audit
+    * `VERSION AS OF '<name>'`, publish or drop. Returns the 1-based
+    * branch commit ordinal. */
   def mergeMoRBranch(spark: SparkSession, path: String, name: String,
       source: DataFrame, keyCols: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column] = None,
-      commitId: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions._
-    require(keyCols.nonEmpty, "branch merge needs at least one key column")
-    def replayOf(b: BranchState): Option[Int] = commitId.flatMap(id =>
-      b.commits.zipWithIndex.find(_._1.commitId.contains(id)))
-      .map(_._2 + 1)
-    val b0 = branchHead(path, name).getOrElse(throw new IllegalStateException(
-      s"no branch '$name' at $path - CREATE BRANCH first"))
-    replayOf(b0).foreach(return _)
-    val parentM = manifestAt(path, b0.parent)
-    require(parentM.mergeKeys.isEmpty || parentM.mergeKeys == keyCols,
-      s"table is keyed on ${parentM.mergeKeys.mkString("(", ",", ")")}; " +
-        s"branch merge on ${keyCols.mkString("(", ",", ")")} rejected")
-    require(b0.keys.isEmpty || b0.keys == keyCols,
-      s"branch '$name' is keyed on ${b0.keys.mkString("(", ",", ")")}; " +
-        s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
-    val target = readBranch(spark, path, name)
-    val cols = target.columns.toSeq
-    require(keyCols.forall(cols.contains), s"key not in target: $keyCols")
-    require(cols.forall(source.columns.contains),
-      s"source is missing target columns: ${cols.diff(source.columns.toSeq)}")
-    val raw = source.localCheckpoint()
-    try {
-      val tombstones = deleteWhen.map(raw.where(_)).getOrElse(raw.limit(0))
-        .select(cols.map(col): _*)
-      val upserts = deleteWhen.map(c => raw.where(!coalesce(c, lit(false))))
-        .getOrElse(raw).select(cols.map(col): _*)
-      requireKeyedSplits(upserts, tombstones, keyCols)
-      val delKeys = tombstones.select(keyCols.map(col): _*)
-        .unionByName(upserts.select(keyCols.map(col): _*)).distinct()
-      val delFiles = stageDeletes(delKeys, path)
-      val staged = stage(upserts, path)
-      publishBranchCommit(path, name, staged, delFiles, keyCols, commitId)
-    } finally graft.operators.IndexScope.release(raw)
-  }
+      commitId: Option[String] = None): Int =
+    mergeMoRAttempt(spark, path, Some(name), source, keyCols, deleteWhen,
+      commitId).toInt
 
   /** The session's write-to-branch routing target, when set. */
   private def branchSession(spark: SparkSession): Option[String] =
@@ -5268,8 +5223,7 @@ object ManifestTable {
     * keys (an earlier branch DML set them), else the table's, else the
     * DDL declaration — refusing loudly when the table is unkeyed. */
   private def branchDmlKeys(path: String, name: String): Seq[String] = {
-    val b = branchHead(path, name).getOrElse(throw new IllegalStateException(
-      s"no branch '$name' at $path - CREATE BRANCH first"))
+    val b = refHead(path, name)
     val ks =
       if (b.keys.nonEmpty) b.keys
       else manifestAt(path, b.parent).mergeKeys match {
@@ -5279,43 +5233,6 @@ object ManifestTable {
     require(ks.nonEmpty, s"branch DML on '$name' needs the table keyed: " +
       "declare PRIMARY KEY / merge.keys, or run a keyed merge first")
     ks
-  }
-
-  /** Publish ONE keyed-DML branch commit (data + ledger files, already
-    * staged) onto the ref's doc chain — the shared tail of
-    * [[mergeMoRBranch]] and the SQL delta-write route. Returns the
-    * 1-based branch commit ordinal. */
-  private def publishBranchCommit(path: String, name: String,
-      staged: Seq[String], delFiles: Seq[String], keyCols: Seq[String],
-      commitId: Option[String]): Int = {
-    def replayOf(b: BranchState): Option[Int] = commitId.flatMap(id =>
-      b.commits.zipWithIndex.find(_._1.commitId.contains(id)))
-      .map(_._2 + 1)
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
-      val ks = branchDocVersions(path, name)
-      require(ks.nonEmpty, s"no branch '$name' at $path - dropped mid-write")
-      val b = branchHead(path, name).get
-      replayOf(b).foreach(return _)
-      if (b.isSealed) throw new IllegalStateException(
-        s"branch '$name' at $path is sealed for fast-forward - " +
-          "re-run this merge once the publish resolves")
-      require(b.keys.isEmpty || b.keys == keyCols,
-        s"branch '$name' keyed on ${b.keys.mkString(",")} mid-write")
-      val c = BranchCommit(staged, System.currentTimeMillis(), commitId,
-        delFiles)
-      val doc = branchRefDir(path, name).resolve(f"b${ks.last + 1}%08d.json")
-      try {
-        publish(doc, renderBranchDoc(
-          b.copy(commits = b.commits :+ c, keys = keyCols)))
-        return b.commits.size + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // retry on top
-      }
-    }
-    throw new IllegalStateException(
-      s"branch contention on '$name': gave up after $attempts attempts")
   }
 
   /** UPDATE … SET … WHERE on a branch: matching branch-snapshot rows
@@ -5351,44 +5268,43 @@ object ManifestTable {
   /** Resolve a branch name to its synthetic snapshot id (what
     * `VERSION AS OF '<name>'` reads through). */
   def resolveBranch(path: String, name: String): Option[Long] =
-    if (branchDocVersions(path, name).isEmpty) None
-    else branchHead(path, name).map(_.bid)
+    branchHead(path, name).map(_.bid)
 
-  /** The synthesized manifest behind a branch snapshot id: the parent
-    * version's manifest plus every branch commit's files, each commit
-    * riding one seq above the last (so branch rows sit ABOVE the
-    * parent's MoR delete ledger, exactly as they will after fast
-    * forward). Footer stats/rows are harvested once per branch state
-    * (cache keyed by the doc's size+mtime), so branch reads prune like
-    * any other snapshot. */
+  /** The snapshot ref `b` makes with `commits` (a prefix of its chain)
+    * over its parent version — the ONE branch snapshot builder: a branch
+    * read is it over every commit, an as-of read over the commits at or
+    * before the instant, and a fast-forward publishes from it. Files and
+    * ledgers sit at the [[BranchCommit]] seq rule's seqs, so branch rows
+    * sit ABOVE the parent's MoR delete ledger; footer stats and row
+    * counts are harvested, so branch reads prune like any snapshot. */
+  private def refSnapshot(path: String, b: BranchState,
+      commits: Seq[BranchCommit], version: Long, label: String): Manifest = {
+    val parent = manifestAt(path, b.parent)
+    val (st, rws) = footerHarvest(path, commits.flatMap(_.files))
+    val (dst, drws) = footerHarvest(path, commits.flatMap(_.deletes))
+    def bySeq(of: BranchCommit => Seq[String]) =
+      commits.zipWithIndex.flatMap { case (c, i) =>
+        of(c).map(_ -> (b.parent + i + 1)) }
+    parent.copy(version = version, parent = b.parent,
+      files = parent.files ++ commits.flatMap(_.files),
+      seqs = parent.seqs ++ bySeq(_.files),
+      stats = parent.stats ++ st, rows = parent.rows ++ rws ++ drws,
+      deletes = parent.deletes ++ bySeq(_.deletes),
+      deleteStats = parent.deleteStats ++ dst,
+      mergeKeys = if (parent.mergeKeys.nonEmpty) parent.mergeKeys else b.keys,
+      commitId = Some(label))
+  }
+
+  /** The manifest behind a branch snapshot id: the ref's whole chain,
+    * built once per branch state (cache keyed by the doc's size+mtime). */
   private def branchManifest(path: String, bid: Long): Manifest = {
-    val entry = branches(path).find(_._2.bid == bid).getOrElse(
+    val (name, b) = branches(path).find(_._2.bid == bid).getOrElse(
       throw new IllegalStateException(
         s"no branch with snapshot id $bid at $path (dropped or published?)"))
-    val (name, b) = entry
     val key = cacheKey(branchDocPath(path, name))
     val hit = branchManifestCache.get(key)
     if (hit != null) return hit
-    val parent = manifestAt(path, b.parent)
-    val (branchStats, branchRows) = footerHarvest(path, b.files)
-    val (delStats, delRows) = footerHarvest(path, b.deleteFiles)
-    val m = parent.copy(
-      version = bid,
-      parent = b.parent,
-      files = parent.files ++ b.files,
-      seqs = parent.seqs ++ b.commits.zipWithIndex.flatMap {
-        case (c, i) => c.files.map(_ -> (parent.version + i + 1)) },
-      stats = parent.stats ++ branchStats,
-      rows = parent.rows ++ branchRows ++ delRows,
-      // branch DML: each commit's delete ledger rides one seq above the
-      // last, exactly as it will after fast-forward — parent rows and
-      // earlier branch commits with matching keys reconcile away, the
-      // commit's own upserts survive (strict dseq > fseq)
-      deletes = parent.deletes ++ b.commits.zipWithIndex.flatMap {
-        case (c, i) => c.deletes.map(_ -> (parent.version + i + 1)) },
-      deleteStats = parent.deleteStats ++ delStats,
-      mergeKeys = if (parent.mergeKeys.nonEmpty) parent.mergeKeys else b.keys,
-      commitId = Some(s"branch:$name"))
+    val m = refSnapshot(path, b, b.commits, bid, s"branch:$name")
     if (branchManifestCache.size > 4096) branchManifestCache.clear()
     branchManifestCache.put(key, m)
     m
@@ -5429,28 +5345,15 @@ object ManifestTable {
 
   /** Resolve branch `name` AS OF `tsMillis` on the BRANCH'S OWN commit
     * clock (every branch commit stamps its publish wall time): the
-    * parent snapshot plus each branch commit at or before the instant —
-    * the wall-clock resolution main-chain consumers already get from
-    * `TIMESTAMP AS OF`, extended to refs. Returns a session-local
-    * snapshot id readable through the shared path. */
+    * parent snapshot plus the commits up to the first one stamped after
+    * the instant — the wall-clock resolution main-chain consumers
+    * already get from `TIMESTAMP AS OF`, extended to refs. Returns a
+    * session-local snapshot id readable through the shared path. */
   def resolveBranchAsOf(path: String, name: String, tsMillis: Long): Long = {
-    val b = branches(path).getOrElse(name, throw new IllegalStateException(
-      s"no branch '$name' at $path"))
-    val upTo = b.commits.filter(_.ts <= tsMillis)
-    val parent = manifestAt(path, b.parent)
-    val (st, rws) = footerHarvest(path, upTo.flatMap(_.files))
-    val (dst, drws) = footerHarvest(path, upTo.flatMap(_.deletes))
+    val b = refHead(path, name)
     val id = BranchAsOfBase - asOfIds.incrementAndGet()
-    val m = parent.copy(version = id, parent = b.parent,
-      files = parent.files ++ upTo.flatMap(_.files),
-      seqs = parent.seqs ++ upTo.zipWithIndex.flatMap { case (c, i) =>
-        c.files.map(_ -> (parent.version + i + 1)) },
-      stats = parent.stats ++ st, rows = parent.rows ++ rws ++ drws,
-      deletes = parent.deletes ++ upTo.zipWithIndex.flatMap { case (c, i) =>
-        c.deletes.map(_ -> (parent.version + i + 1)) },
-      deleteStats = parent.deleteStats ++ dst,
-      mergeKeys = if (parent.mergeKeys.nonEmpty) parent.mergeKeys else b.keys,
-      commitId = Some(s"branch:$name@$tsMillis"))
+    val m = refSnapshot(path, b, b.commits.takeWhile(_.ts <= tsMillis), id,
+      s"branch:$name@$tsMillis")
     trimAsOfRegistry(4096)
     asOfRegistry.put(id, m)
     id
@@ -5471,9 +5374,8 @@ object ManifestTable {
     * replays to the same version via the file-set-fingerprint commit
     * id. Returns the published main version. */
   def fastForward(path: String, name: String): Long = {
-    var b = branches(path).getOrElse(name, throw new IllegalStateException(
-      s"no branch '$name' at $path"))
-    require(b.commits.nonEmpty || b.isSealed,
+    val b0 = refHead(path, name)
+    require(b0.commits.nonEmpty || b0.isSealed,
       s"branch '$name' has no commits to publish - DROP it instead")
     def ffId(st: BranchState): String = {
       // delete-ledger files join the fingerprint with a marker prefix so
@@ -5486,133 +5388,119 @@ object ManifestTable {
         .take(8).map(x => f"$x%02x").mkString
       s"branch:$name:$digest"
     }
-    def landed(id: String): Option[Long] =
-      versions(path).map(manifestAt(path, _))
-        .find(_.commitId.contains(id)).map(_.version)
-    // UNSEAL the ref through the slot chain (recovery from a refused or
+    // a landed publish IS the answer, and the ref is consumed
+    def consumed(v: Long): Long = { removeBranchRef(path, name); v }
+    def landed(st: BranchState): Option[Long] =
+      landedAt(path, ffId(st)).map(consumed)
+    // UNSEAL the ref through the ref loop (recovery from a refused or
     // contended publish); Some(v) when a concurrent fast-forward landed
     // meanwhile — that version IS the answer and the ref is consumed.
-    def unsealRef(cur0: BranchState): Option[Long] = {
-      var unsealAttempts = 0
-      var cur = cur0
-      while (cur.isSealed) {
-        unsealAttempts += 1
-        require(unsealAttempts <= 64, s"branch contention unsealing " +
-          s"'$name': gave up after $unsealAttempts attempts")
-        landed(ffId(cur)).foreach { v =>
-          removeBranchRef(path, name); return Some(v) }
-        val uks = branchDocVersions(path, name)
-        require(uks.nonEmpty,
-          s"no branch '$name' at $path - dropped mid-publish")
-        cur = branchHead(path, name).get
-        if (cur.isSealed) {
-          val doc =
-            branchRefDir(path, name).resolve(f"b${uks.last + 1}%08d.json")
-          try { publish(doc, renderBranchDoc(cur.copy(isSealed = false)))
-                cur = cur.copy(isSealed = false) }
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        }
-      }
-      None
-    }
+    def unsealed(st: BranchState): Option[Long] = landed(st).orElse(
+      refClaim[Option[Long]](path, name) { cur =>
+        if (!cur.isSealed) Left(None)
+        else landedAt(path, ffId(cur)).map(Some(_))
+          .toLeft((cur.copy(isSealed = false), None))
+      }.map(consumed))
     // crash replay FIRST (before strictness or sealing): a leftover ref —
     // sealed by the new publish flow or unsealed from an older one —
     // whose commit already landed resolves idempotently to that version
-    landed(ffId(b)).foreach { v => removeBranchRef(path, name); return v }
+    landed(b0).foreach(return _)
     // strictness BEFORE the seal: a branch whose base main outran must
     // refuse WITHOUT sealing, or the refusal would leave a ref that can
     // neither append nor rebase. (A sealed ref skips this: it is either
     // a crash replay — resolved below post-seal — or mid-publish.)
-    if (!b.isSealed) {
+    if (!b0.isSealed) {
       val head0 = latestVersion(path)
-      require(head0 == b.parent,
-        s"main moved since branch '$name' forked (v${b.parent} -> " +
+      require(head0 == b0.parent,
+        s"main moved since branch '$name' forked (v${b0.parent} -> " +
           s"v$head0): rebaseBranch + re-audit, or DROP the branch")
     }
     // SEAL before consuming: the ref is about to be snapshotted, committed
     // to main, and deleted. An appendBranch racing that window would
     // publish a doc slot our snapshot never saw and removeBranchRef would
     // erase it — success returned, rows gone, staged files orphaned. The
-    // seal is a doc at the NEXT slot through the same create-exclusive
-    // chain, so the race is decided by the filesystem: either the appender
-    // wins the slot (we re-read and seal over its commit, including it in
-    // the publish) or we win and the appender fails loudly.
-    var attempts = 0
-    while (!b.isSealed) {
-      attempts += 1
-      require(attempts <= 64,
-        s"branch contention sealing '$name': gave up after $attempts attempts")
-      val ks = branchDocVersions(path, name)
-      require(ks.nonEmpty, s"no branch '$name' at $path - dropped mid-publish")
-      b = branchHead(path, name).get
-      if (!b.isSealed) {
-        val doc = branchRefDir(path, name).resolve(f"b${ks.last + 1}%08d.json")
-        try { publish(doc, renderBranchDoc(b.copy(isSealed = true)))
-              b = b.copy(isSealed = true) }
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
+    // seal is a doc at the NEXT slot of the ref loop, so the race is
+    // decided by the filesystem: either the appender wins the slot (we
+    // re-read and seal over its commit, including it in the publish) or
+    // we win and the appender fails loudly.
+    val b = refClaim[BranchState](path, name) { cur =>
+      if (cur.isSealed) Left(cur)
+      else { val s = cur.copy(isSealed = true); Right((s, s)) }
     }
     require(b.commits.nonEmpty,
       s"branch '$name' has no commits to publish - DROP it instead")
-    val files = b.files
-    val id = ffId(b)
     // crash replay, post-seal state: the commit landed but the ref
     // survived (the seal may have folded in commits the pre-seal check
     // never saw, so the id is recomputed)
-    landed(id).foreach { v => removeBranchRef(path, name); return v }
+    landed(b).foreach(return _)
     val head = latestVersion(path)
     if (head != b.parent) {
       // main moved inside the seal window: UNSEAL before refusing, or
       // the ref is stuck — appendBranch and rebaseBranch both refuse
       // sealed refs and every fastForward retry re-fails this same
-      // check, leaving the commits recoverable only by DROP. The unseal
-      // rides the same create-exclusive slot chain as the seal; losing
-      // a slot race re-reads (a concurrent fastForward may have
-      // published meanwhile — then ITS landed commit is the answer).
-      unsealRef(b).foreach(v => return v)
+      // check, leaving the commits recoverable only by DROP.
+      unsealed(b).foreach(return _)
       throw new IllegalStateException(
         s"main moved since branch '$name' forked (v${b.parent} -> " +
           s"v$head) during the fast-forward seal window; the ref has " +
           "been unsealed - rebaseBranch + re-audit, or DROP the branch")
     }
-    if (b.deleteFiles.nonEmpty) {
-      // DML branch: the ledger's seqs are computed against the parent
-      // chain, and a racing commit's files could land BELOW a branch
-      // delete seq — an append-style rebase would be UNSOUND here, so
-      // the claim is STRICT: exactly the parent's successor, each branch
-      // commit at its own seq, or unseal + refuse.
-      val parentM = manifestAt(path, b.parent)
-      val (st, rws) = footerHarvest(path, files)
-      val (dst, drws) = footerHarvest(path, b.deleteFiles)
-      def bySeq(of: BranchCommit => Seq[String]) =
-        b.commits.zipWithIndex.flatMap { case (c, i) =>
-          of(c).map(_ -> (b.parent + i + 1)) }
-      val v = try claim(path, Some(parentM), Change(added = files,
-          seqs = bySeq(_.files).toMap, stats = st, rows = rws ++ drws,
-          deletes = bySeq(_.deletes), deleteStats = dst,
-          mergeKeys = if (parentM.mergeKeys.nonEmpty) None else Some(b.keys),
-          commitId = Some(id)), Rebase.Strict)
+    // ONE claim for both shapes. A ref carrying a ledger is STRICT: its
+    // deletes were audited against the parent's rows, so landing on any
+    // other head could hide rows the audit never saw. An append-only
+    // ref is blind (its files are head-independent) and re-proves its
+    // rows only if a contract landed since the parent it staged under.
+    // (The claim fires beforePublishHook in the sealed-not-yet-committed
+    // window — the race-injection seam BranchSpec's seal test drives.)
+    val strict = b.deleteFiles.nonEmpty
+    val parentM = manifestAt(path, b.parent)
+    val v = try claim(path, if (strict) Some(parentM) else None,
+        publication(path, name, b, parentM, ffId(b)),
+        if (strict) Rebase.Strict else Rebase.Blind,
+        stagedUnder = Some(parentM), replay = !strict)
       catch {
-        case _: CommitConflict =>
-          landed(id).foreach { v => removeBranchRef(path, name); return v }
-          unsealRef(b).foreach(v => return v)
-          throw new IllegalStateException(
-            s"main moved during the fast-forward publish of DML branch " +
-              s"'$name' at $path; the ref has been unsealed - re-audit " +
-              "(rebase is refused for keyed-DML branches), or DROP it")
+        case e: CommitConflict =>
+          landed(b).foreach(return _)
+          unsealed(b).foreach(return _)
+          throw new IllegalStateException(s"${e.getMessage} - branch " +
+            s"'$name' was not published and the ref has been unsealed - " +
+            "re-audit (a keyed-DML branch cannot rebase), or DROP it")
       }
-      removeBranchRef(path, name)
-      return v
-    }
-    // (commit() fires beforePublishHook in the sealed-not-yet-committed
-    // window — the race-injection seam BranchSpec's seal test drives)
-    // branch appends validated in-scan against the parent-era contract
-    // (strictness pins head == parent, so no other contract can apply);
-    // a contract commit racing THIS window re-validates inside commit()
-    val v = commit(path, files, replace = false, Some(id),
-      stagedUnder = Some(manifestAt(path, b.parent)))
-    removeBranchRef(path, name)
-    v
+    consumed(v)
+  }
+
+  /** The one main commit that publishes sealed ref `b`, built from the
+    * ref's snapshot. Every data and delete file it adds sits at the
+    * claimed version's seq (seq = version: streaming tails, the change
+    * feed and later merges rely on it), which erases the chain's
+    * internal order — so a branch file
+    * a LATER commit's ledger covers is first rewritten through the
+    * snapshot's own reconcile (only the rows the branch read shows).
+    * Every other file lands byte-identical; an append-only or
+    * single-commit ref rewrites nothing. */
+  private def publication(path: String, name: String, b: BranchState,
+      parentM: Manifest, id: String): Change = {
+    val snap = refSnapshot(path, b, b.commits, b.bid, s"branch:$name")
+    val scope = deleteScope(snap, b.files)
+    val (covered, kept) = b.files.partition(f => scope(f).nonEmpty)
+    val rewritten =
+      if (covered.isEmpty) Seq.empty[String]
+      else stage(reconcile(requireSession(s"publishing branch '$name' " +
+        s"at $path rewrites rows a later branch commit deleted"),
+        path, snap, covered), path)
+    val (rwStats, rwRows) = footerHarvest(path, rewritten)
+    def of[V](m: Map[String, V], fs: Seq[String]) =
+      m.view.filterKeys(fs.toSet).toMap
+    Change(added = kept ++ rewritten,
+      stats = of(snap.stats, kept) ++ rwStats,
+      rows = of(snap.rows, kept ++ b.deleteFiles) ++ rwRows,
+      // only a strict (ledger-carrying) claim adds deletes, and it lands
+      // exactly at the parent's successor
+      deletes = b.deleteFiles.map(_ -> (b.parent + 1)),
+      deleteStats = of(snap.deleteStats, b.deleteFiles),
+      mergeKeys =
+        Some(b.keys).filter(_.nonEmpty && parentM.mergeKeys.isEmpty),
+      commitId = Some(id))
   }
 
   /** Remove a ref's whole doc chain (publish/abort resolution). A
@@ -5631,13 +5519,8 @@ object ManifestTable {
     * the audit contract is the caller's: branch reads now include
     * everything main gained since the old base, so re-audit before
     * fast-forwarding. Returns the new parent version. */
-  def rebaseBranch(path: String, name: String): Long = {
-    var attempts = 0
-    while (attempts < 64) {
-      attempts += 1
-      val ks = branchDocVersions(path, name)
-      require(ks.nonEmpty, s"no branch '$name' at $path")
-      val b = branchHead(path, name).get
+  def rebaseBranch(path: String, name: String): Long =
+    refClaim[Long](path, name) { b =>
       if (b.isSealed) throw new IllegalStateException(
         s"branch '$name' at $path is sealed for fast-forward - cannot rebase")
       if (b.deleteFiles.nonEmpty) throw new IllegalStateException(
@@ -5646,23 +5529,14 @@ object ManifestTable {
           "(sound only for append-shaped branches); re-stage the " +
           "correction on a fresh branch, or DROP this one")
       val head = latestVersion(path)
-      val doc = branchRefDir(path, name).resolve(f"b${ks.last + 1}%08d.json")
-      try {
-        publish(doc, renderBranchDoc(b.copy(parent = head)))
-        return head
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => () // retry on top
-      }
+      Right((b.copy(parent = head), head))
     }
-    throw new IllegalStateException(s"branch contention on '$name' rebase")
-  }
 
   /** Drop branch `name` unpublished. Its staged files become orphans;
     * the age-gated [[vacuum]] reclaims them. Returns the released
     * file names. */
   def dropBranch(path: String, name: String): Seq[String] = {
-    val b = branchHead(path, name).getOrElse(throw new IllegalStateException(
-      s"no branch '$name' at $path"))
+    val b = refHead(path, name)
     removeBranchRef(path, name)
     b.files ++ b.deleteFiles
   }

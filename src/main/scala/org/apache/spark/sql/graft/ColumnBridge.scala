@@ -105,4 +105,31 @@ object ColumnBridge {
       org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(spark)
+
+  /** The row schema Spark's parquet schema inference reads off one
+    * footer: the Spark schema the writer embedded, else the parquet
+    * schema converted under the session's conf. */
+  def footerSchema(spark: org.apache.spark.sql.SparkSession, file: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(
+        new org.apache.hadoop.fs.Path(file), footer),
+      new ParquetToSparkSchemaConverter(spark.asInstanceOf[
+        org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+  }
+
+  /** `mergeSchema` over file schemas in order, by Spark's own rules
+    * (`StructType.merge` and `asNullable` are private): first-seen
+    * field order, the session's case sensitivity, a loud error on
+    * incompatible types, every field nullable. */
+  def mergeSchemas(spark: org.apache.spark.sql.SparkSession,
+      schemas: Seq[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.types.StructType = {
+    val caseSensitive = spark.asInstanceOf[
+      org.apache.spark.sql.classic.SparkSession].sessionState.conf
+      .caseSensitiveAnalysis
+    schemas.reduceLeft(_.merge(_, caseSensitive)).asNullable
+  }
 }

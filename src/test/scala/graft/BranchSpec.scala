@@ -425,4 +425,152 @@ class BranchSpec extends SparkSpecBase {
     }
     assert(ManifestTable.dropBranch(path, "empty").isEmpty)
   }
+
+  test("a multi-commit DML fast-forward lands every file at its one " +
+      "version: a later main merge updates a branch-updated row") {
+    import spark.implicits._
+    val path = freshTable() // k in [0,100), g = k % 10
+    val v0 = ManifestTable.latestVersion(path)
+    ManifestTable.createBranch(path, "fix")
+    ManifestTable.deleteBranchWhere(spark, path, "fix", col("k") < 10, Seq("k"))
+    ManifestTable.updateBranchWhere(spark, path, "fix",
+      col("g") === 3L, Map("g" -> lit(300L)), Seq("k"))
+    ManifestTable.updateBranchWhere(spark, path, "fix",
+      col("g") === 300L, Map("g" -> lit(400L)), Seq("k"))
+    val audited = ManifestTable.readBranch(spark, path, "fix").collect().toSet
+    val last = ManifestTable.branches(path)("fix").commits.last.files
+    val v = ManifestTable.fastForward(path, "fix")
+    assert(v == v0 + 1)
+    assert(ManifestTable.read(spark, path).collect().toSet == audited,
+      "main reads exactly what the audit read")
+    val added = ManifestTable.dataFiles(path).toSet --
+      ManifestTable.dataFiles(path, Some(v0))
+    val atV = ManifestTable.appendSlice(path, v0, v, ignoreChanges = true)
+      .map(f => java.nio.file.Paths.get(f).getFileName.toString).toSet
+    ManifestTable.mergeMoR(spark, path, Seq((23L, 777L)).toDF("k", "g"),
+      Seq("k"))
+    assert(ManifestTable.read(spark, path).where(col("k") === 23L)
+      .select("g").as[Long].collect().toSeq == Seq(777L),
+      "the main merge must replace the branch-updated row")
+    // seq = version: every file the fast-forward added sits at v
+    assert(atV == added, "a file of the fast-forward sits above its version")
+    assert(last.forall(added), "the last commit's files land byte-identical")
+  }
+
+  test("after a DML fast-forward, a main append of a key the last branch " +
+      "ledger deleted stays visible, and a branch forked there reads right") {
+    import spark.implicits._
+    val path = freshTable()
+    ManifestTable.createBranch(path, "fix")
+    ManifestTable.updateBranchWhere(spark, path, "fix",
+      col("g") === 3L, Map("g" -> lit(300L)), Seq("k"))
+    ManifestTable.updateBranchWhere(spark, path, "fix",
+      col("g") === 300L, Map("g" -> lit(400L)), Seq("k"))
+    ManifestTable.deleteBranchWhere(spark, path, "fix", col("k") < 10, Seq("k"))
+    ManifestTable.fastForward(path, "fix")
+    ManifestTable.createBranch(path, "next")
+    ManifestTable.appendBranch(Seq((7L, 70L)).toDF("k", "g"), path, "next")
+    ManifestTable.append(Seq((5L, 55L)).toDF("k", "g"), path)
+    val main = ManifestTable.read(spark, path)
+    assert(main.where(col("k") < 10).as[(Long, Long)].collect().toSeq ==
+      Seq((5L, 55L)), "the appended key must not hide under the old ledger")
+    assert(main.count() == 91)
+    val next = ManifestTable.readBranch(spark, path, "next")
+    assert(next.where(col("k") < 10).as[(Long, Long)].collect().toSeq ==
+      Seq((7L, 70L)), "the forked branch's commit must read above the ledger")
+    assert(next.where(col("g") === 400L).count() == 9)
+  }
+
+  test("racing mergeMoRBranch and appendBranch on one ref: both land with " +
+      "their own ordinals; replayed commit ids answer them") {
+    val path = freshTable()
+    ManifestTable.createBranch(path, "mix")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    def racer(body: => Int) = pool.submit(
+      new java.util.concurrent.Callable[Int] {
+        def call(): Int = { gate.await(); body }
+      })
+    val merged = racer(ManifestTable.mergeMoRBranch(spark, path, "mix",
+      batch(0, 5).withColumn("g", lit(77L)), Seq("k"), None, Some("m1")))
+    val appended = racer(ManifestTable.appendBranch(batch(500, 510), path,
+      "mix", Some("a1")))
+    gate.countDown()
+    val (m, a) = (merged.get(), appended.get())
+    pool.shutdown()
+    assert(Set(m, a) == Set(1, 2), s"ordinals $m, $a")
+    assert(ManifestTable.mergeMoRBranch(spark, path, "mix",
+      batch(0, 5).withColumn("g", lit(77L)), Seq("k"), None, Some("m1")) == m)
+    assert(ManifestTable.appendBranch(batch(500, 510), path, "mix",
+      Some("a1")) == a)
+    val b = ManifestTable.branches(path)("mix")
+    assert(b.commits.size == 2 && b.keys == Seq("k"))
+    val br = ManifestTable.readBranch(spark, path, "mix")
+    assert(br.count() == 110 && br.where(col("g") === 77L).count() == 5)
+  }
+
+  test("rebaseBranch racing an append on one ref: both land") {
+    val path = freshTable()
+    ManifestTable.createBranch(path, "rb")
+    ManifestTable.appendBranch(batch(100, 110), path, "rb")
+    ManifestTable.append(batch(900, 905), path) // main moves
+    val head = ManifestTable.latestVersion(path)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val futs = Seq[() => Long](
+      () => ManifestTable.rebaseBranch(path, "rb"),
+      () => ManifestTable.appendBranch(batch(110, 120), path, "rb").toLong)
+      .map(f => pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = { gate.await(); f() }
+      }))
+    gate.countDown()
+    val Seq(rebasedTo, ordinal) = futs.map(_.get())
+    pool.shutdown()
+    assert(rebasedTo == head && ordinal == 2L)
+    val b = ManifestTable.branches(path)("rb")
+    assert(b.parent == head && b.commits.size == 2)
+    assert(ManifestTable.readBranch(spark, path, "rb").count() == 125)
+  }
+
+  test("readBranchAsOf(now) reads what readBranch does; an earlier " +
+      "instant reads the commits up to it") {
+    val path = freshTable()
+    ManifestTable.createBranch(path, "tt")
+    ManifestTable.appendBranch(batch(100, 120), path, "tt")
+    val first = ManifestTable.readBranch(spark, path, "tt").collect().toSet
+    Thread.sleep(5)
+    ManifestTable.updateBranchWhere(spark, path, "tt",
+      col("g") === 3L, Map("g" -> lit(300L)), Seq("k"))
+    ManifestTable.deleteBranchWhere(spark, path, "tt", col("k") < 10, Seq("k"))
+    val now = System.currentTimeMillis()
+    assert(ManifestTable.readBranchAsOf(spark, path, "tt", now)
+      .collect().toSet ==
+      ManifestTable.readBranch(spark, path, "tt").collect().toSet)
+    val ts = ManifestTable.branches(path)("tt").commits.map(_.ts)
+    assert(ts(1) > ts(0))
+    assert(ManifestTable.readBranchAsOf(spark, path, "tt", ts(0))
+      .collect().toSet == first)
+  }
+
+  test("the shared key split still sizes TableTxn.merge's key set by " +
+      "stageTasks, not one task") {
+    val path = freshTable()
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    // every byte is over the target: the key set keeps all its partitions
+    s2.conf.set("spark.graft.stage.targetFileBytes", "1")
+    val src = s2.range(0, 20, 1, 2)
+      .select(col("id").as("k"), lit(5L).as("g"))
+    val jobs = JobProbe.jobsOf(s2) {
+      ManifestTable.newTransaction(s2, path).merge(src, Seq("k")).commit()
+    }
+    // the key set's pin is the txn merge's only coalesce
+    val coalesced = jobs.flatMap(_.stageInfos)
+      .filter(_.rddInfos.exists(_.name == "CoalescedRDD"))
+    assert(coalesced.nonEmpty && coalesced.forall(_.numTasks > 1),
+      coalesced.map(st => st.name -> st.numTasks))
+    val t = ManifestTable.read(spark, path)
+    assert(t.count() == 100 &&
+      t.where(col("k") < 20 && col("g") === 5L).count() == 20)
+  }
 }

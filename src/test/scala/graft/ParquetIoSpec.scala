@@ -195,6 +195,63 @@ package graft {
       }
     }
 
+    test("a PARTITIONED BY table stages one file per value per task") {
+      val wh = tmp().toString
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+      s2.conf.set("spark.sql.catalog.graft.warehouse", wh)
+      s2.sql("CREATE TABLE graft.part (k BIGINT, g STRING) PARTITIONED BY (g)")
+      // 60 rows over 3 values from a 4-partition frame: one staging task
+      // (the data-sized count), so one file per value
+      val rows = s2.range(0, 60, 1, 4).select(col("id").as("k"),
+        concat(lit("g"), (col("id") % 3).cast("string")).as("g"))
+      ManifestTable.append(rows, s"$wh/part")
+      val files = ManifestTable.dataFiles(s"$wh/part")
+      assert(files.size == 3, files)
+      val perFile = ManifestTable.read(s2, s"$wh/part")
+        .groupBy(input_file_name()).agg(countDistinct(col("g")).as("n"),
+          count(lit(1)).as("rows")).collect()
+      assert(perFile.map(_.getLong(1)).toSeq == Seq(1L, 1L, 1L) &&
+        perFile.map(_.getLong(2)).sum == 60L, perFile.toSeq)
+    }
+
+    test("a version's schema is Spark's mergeSchema of its footers, " +
+        "folded on the driver without a Spark job") {
+      val path = tmp().toString + "/t"
+      // Spark's inference merges footers in file-path order, and data
+      // files are named by random UUIDs, so only the fields (name, type,
+      // nullability) are compared with it; the order is checked on its
+      // own below: first-seen in manifest order, the same every run
+      def merged(p: String) = spark.read.option("mergeSchema", "true")
+        .parquet(ManifestTable.dataFiles(p).map(f => s"$p/data/$f"): _*)
+        .schema.fields.sortBy(_.name).toSeq
+      def folded(p: String) =
+        ManifestTable.schemaAt(spark, p).fields.sortBy(_.name).toSeq
+      ManifestTable.append(spark.range(0, 10).select(col("id").as("k"),
+        lit(1.0).as("v")), path)
+      ManifestTable.read(spark, path)
+      // an evolved append: the next read opens only the new footer
+      ManifestTable.append(spark.range(10, 20).select(col("id").as("k"),
+        lit("x").as("note"), lit(2.0).as("v")), path)
+      val jobs = JobProbe.jobsOf(spark)(ManifestTable.read(spark, path))
+      assert(jobs.isEmpty, s"read after an append started ${jobs.size} jobs")
+      assert(folded(path) == merged(path))
+      assert(ManifestTable.schemaAt(spark, path).fieldNames.toSeq ==
+        Seq("k", "v", "note"), "field order is first-seen")
+      // an overwrite that drops a column drops it from the schema
+      ManifestTable.overwrite(spark.range(0, 5).select(col("id").as("k")), path)
+      assert(folded(path) == merged(path))
+      assert(ManifestTable.schemaAt(spark, path).fieldNames.toSeq == Seq("k"))
+      // incompatible types still fail loudly
+      val bad = tmp().toString + "/b"
+      ManifestTable.append(spark.range(0, 3).select(col("id").as("k"),
+        lit(1.0).as("v")), bad)
+      ManifestTable.append(spark.range(3, 6).select(col("id").as("k"),
+        lit("one").as("v")), bad)
+      val e = intercept[Exception](ManifestTable.read(spark, bad))
+      assert(e.getMessage.toLowerCase.contains("merg"), e.getMessage)
+    }
+
     test("a staged write goes through no Hadoop FileSystem") {
       import org.apache.hadoop.fs.FileSystem
       def written(): (Long, Long) = {
