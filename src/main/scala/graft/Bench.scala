@@ -166,10 +166,14 @@ object Bench {
     // FULL record → bench_last.json: the driver's artifact keeps only the
     // last ~2000 chars of stdout, so a 258-query map (~8 KB) can never
     // survive there — the file is the durable per-query measurement.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_last.json"), line + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write bench_last.json: $e") }
+    // bench_last_c<cpus>.json keeps one record per core count, so an
+    // 8-core cross-check never overwrites the 32-core run of record.
+    Seq("bench_last.json", s"bench_last_c$cpus.json").foreach { f =>
+      try java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(f), line + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $f: $e") }
+    }
     // stdout gets a COMPACT final line sized to fit INSIDE that 2000-char
     // tail even with sbt's trailing "[success] ..." line: headline totals
     // + as many per-query timings as fit (slowest first — the informative

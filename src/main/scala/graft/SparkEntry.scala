@@ -2607,7 +2607,6 @@ object SparkEntry {
       s2.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
       s2.conf.set("spark.sql.catalog.graft.warehouse", wh)
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", (128 * 1024).toString)
-      plans.GraftJoinSize.install(s2)
       val orders = Tables(s2, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
       ManifestTable.overwrite(orders, s"$wh/big")
@@ -3137,9 +3136,8 @@ object SparkEntry {
       // COST-BASED OPTIMIZATION OVER ANALYZE STATISTICS — `ANALYZE
       // TABLE … COMPUTE STATISTICS FOR ALL COLUMNS` (one map-side-
       // combined HLL++/min-max pass) persists advisory column stats the
-      // scan reports through DSv2 `columnStats()`; the pre-CBO stats
-      // bridge (ForwardV1ScanStats) carries them past Spark's V1 scan
-      // wrapper so CostBasedJoinReorder and filter estimation see them.
+      // scan reports through DSv2 `columnStats()`, and the scan relation
+      // hands them to CostBasedJoinReorder and filter estimation.
       // At 100 TB this is the decision layer that joins two dimension
       // tables before touching the fact table — wrong order = a
       // petabyte-scale intermediate. Gates: (a) with CBO off the
@@ -3153,9 +3151,8 @@ object SparkEntry {
       s2.conf.set("spark.sql.catalog.graft.warehouse", wh)
       s2.conf.set("spark.sql.cbo.enabled", "true")
       s2.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      // isolate reorder: broadcast HINTS (GraftJoinSizeRule) pin the
-      // join order, and CostBasedJoinReorder only touches hint-free
-      // joins — the realistic fact×fact regime at scale
+      // no broadcasts: the fact×fact regime at scale, where the join
+      // order alone decides how much each shuffle moves
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       Tables(s2, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),

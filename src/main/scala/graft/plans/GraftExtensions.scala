@@ -22,13 +22,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // fires only on scans whose root path is registered, so sessions
     // with no registered MV plan exactly as before
     ext.injectOptimizerRule(_ => new MvRewriteRule)
-    // size-based join planning for catalog scans (V1ScanWrapper reports
-    // no statistics — without this a graft side never broadcasts)
-    ext.injectOptimizerRule(_ => new GraftJoinSizeRule)
-    // post-pushdown, pre-join-reorder: re-wrap V1 scans so row counts
-    // and ANALYZE column statistics reach CBO estimation
-    ext.injectPreCBORule(_ =>
-      new org.apache.spark.sql.graft.ForwardV1ScanStats)
+    // catalog reads plan as the manifest read plan (and manifest-only
+    // aggregates as local rows) in place of the DSv2 scan
+    ext.injectPlannerStrategy(_ => GraftReadStrategy)
     // SQL maintenance statements (OPTIMIZE / VACUUM) — parser injection
     // only takes effect on sessions BUILT with the extension
     // (spark.sql.extensions conf or .withExtensions); register() on an
@@ -143,6 +139,6 @@ object GraftExtensions {
       spark, "graft_detail", GraftTableFunction.buildDetail _)
     org.apache.spark.sql.graft.ColumnBridge.registerTableFunction(
       spark, "graft_changes", GraftTableFunction.buildChanges _)
-    GraftJoinSize.install(spark)
+    GraftReadStrategy.install(spark)
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -252,11 +252,9 @@ object GraftMaterializedView {
       throw new IllegalStateException(s"$mvPath has no committed view"))
     require(m.deletes.isEmpty, "join-view registration requires a " +
       "folded ledger (refresh compacts before registering)")
-    val files = m.files.map(f =>
-      java.nio.file.Paths.get(mvPath, "data").resolve(f).toString)
     MvRewrite.registerJoin(spark, spec.source, spec.source2,
-      joinKeysOf(spec),
-      spark.read.parquet(files: _*), spec.version, spec.version2)
+      joinKeysOf(spec), liveFiles(spark, mvPath, m), spec.version,
+      spec.version2)
   }
 
   /** JOIN-view REFRESH — q190's two-sided delta fold as a maintained
@@ -375,6 +373,14 @@ object GraftMaterializedView {
     (curL, mode)
   }
 
+  /** The view's live files as one parquet relation — the plan a
+    * registration pins (built from the manifest: no listing, no schema
+    * inference). */
+  private def liveFiles(spark: SparkSession, mvPath: String,
+      m: ManifestTable.Manifest): DataFrame =
+    ManifestTable.frameOf(spark, mvPath, Some(m), m.files,
+      ManifestTable.physicalSchemaAt(spark, mvPath, m))
+
   /** Re-register the session's transparent rewrite onto the CURRENT
     * live rollup files (the registration pins a concrete file listing,
     * so every CREATE/REFRESH re-registers). */
@@ -386,10 +392,8 @@ object GraftMaterializedView {
     // double-count them
     val m = ManifestTable.snapshotAt(mvPath, None).getOrElse(
       throw new IllegalStateException(s"$mvPath has no committed rollup"))
-    val files = m.files.map(f =>
-      java.nio.file.Paths.get(mvPath, "data").resolve(f).toString)
     MvRewrite.register(spark, spec.source,
-      spark.read.parquet(files: _*), spec.dims, spec.measures,
+      liveFiles(spark, mvPath, m), spec.dims, spec.measures,
       // version-ARMED: the rewrite re-checks the source head at
       // substitution time, so a post-registration base write de-arms
       // this registration instead of serving a pre-write rollup

@@ -381,8 +381,7 @@ class MvRewriteRule extends Rule[LogicalPlan] {
 
   /** A graft CATALOG scan is rewritable too (the SQL MV door's base):
     * only the LATEST snapshot (a time-travel read must never answer
-    * from the current rollup), only batch reads, and only through the
-    * V1 wrapper shapes the graft source plans as. Filter pushdown is
+    * from the current rollup), and only batch reads. Filter pushdown is
     * safe here because [[graft.sources.GraftScanBuilder.pushFilters]]
     * keeps EVERY filter as a Spark-side residual (pushdown prunes
     * files, never rows) — any predicate is still in the plan above,
@@ -393,8 +392,6 @@ class MvRewriteRule extends Rule[LogicalPlan] {
       case g: graft.sources.GraftScan
           if g.version.isEmpty && g.streamOpts.isEmpty =>
         Some(MvRewrite.norm(g.path))
-      case w: org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper =>
-        graftScanPath(w.v1Scan)
       case _ => None
     }
 

@@ -6,14 +6,14 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -36,18 +36,20 @@ import graft.conditions.{Condition, Op}
   * table remains readable by the path API (`ManifestTable.read`) and
   * the `graft_table` TVF — one format, three doors.
   *
-  * Reads go through a [[V1Scan]] that delegates to
-  * [[ManifestTable.readWhere]]: manifest min/max FILE SKIPPING on the
-  * pushed predicates, per-file-scoped MoR delete reconciliation, and
-  * merged-footer schema evolution all apply to SQL identically to the
-  * DataFrame API — one read path, no semantic fork. Pushed filters are
-  * also kept as Spark-side residuals, so pruning can only ever skip
-  * whole provably-dead files, never change results. The scan reports
-  * LIVE row/byte statistics (manifest row counts minus scoped delete
-  * bounds, scaled to the pruned column set), so join planning sees
-  * through both pruning and a delete ledger — a post-delete table
-  * broadcasts when its live size says it should, where raw file-size
-  * estimation would shuffle.
+  * Reads plan as [[ManifestTable.readWhere]]'s own plan: the scan
+  * ([[GraftScan]]) collects the pushed predicates and columns, and at
+  * physical planning [[graft.plans.GraftReadStrategy]] inlines the
+  * optimized read plan in its place — manifest min/max FILE SKIPPING,
+  * per-file-scoped MoR delete reconciliation, and merged-footer schema
+  * evolution apply to SQL identically to the DataFrame API, as one
+  * Spark plan over the parquet files. Pushed filters are also kept as
+  * Spark-side residuals, so pruning can only ever skip whole
+  * provably-dead files, never change results. The scan reports LIVE
+  * row/byte statistics (manifest row counts minus scoped delete
+  * bounds, scaled to the pruned column set) and ANALYZE column
+  * statistics, so join planning and CBO see through both pruning and a
+  * delete ledger — a post-delete table broadcasts when its live size
+  * says it should, where raw file-size estimation would shuffle.
   *
   * Writes implement [[V1Write]]: `INSERT INTO` → [[ManifestTable.append]],
   * `INSERT OVERWRITE` → [[ManifestTable.overwrite]] — the same staged
@@ -1530,33 +1532,70 @@ class GraftScanBuilder(path: String, version: Option[Long], fullSchema: StructTy
   }
 
   override def build(): Scan = {
+    // a session configured with the catalog alone (no GraftExtensions)
+    // still needs the strategy that plans these scans
+    val spark = SparkSession.active
+    graft.plans.GraftReadStrategy.install(spark)
     metaAgg.foreach { case (schema, rows) =>
       return new GraftMetaAggScan(path, schema, rows)
     }
-    val v1 = GraftScan(path, version, required, conds, streamOpts)
+    val scan = GraftScan(path, version, required, conds, streamOpts)
     // STORAGE-PARTITIONED JOIN door: strictly opt-in via Spark's own v2
     // bucketing conf, and only when the snapshot proves eligible — the
-    // V1 scan stays the universal fallback (MoR reconcile, column
-    // mapping, DDL null-fill, arbitrary types)
-    val spark = SparkSession.active
+    // read-plan scan stays the universal fallback (MoR reconcile,
+    // column mapping, DDL null-fill, arbitrary types)
     val spjOn = spark.conf
       .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
-    if (!spjOn) v1
+    if (!spjOn) scan
     else GraftGroupedScan
-      .build(spark, path, version, required, conds, v1).getOrElse(v1)
+      .build(spark, path, version, required, conds, scan).getOrElse(scan)
   }
 }
 
 /** The scan: file pruning + MoR reconcile via the ONE shared read path
-  * ([[ManifestTable.readWhere]]), surfaced to Spark through [[V1Scan]]
-  * (the same official bridge Spark's own JDBC v2 connector uses), with
-  * live statistics for join planning. */
+  * ([[ManifestTable.readWhere]]), planned by
+  * [[graft.plans.GraftReadStrategy]] as that path's own plan
+  * ([[readPlan]]), with live statistics for join planning and CBO. */
 case class GraftScan(path: String, version: Option[Long],
     required: StructType, conds: Seq[Condition],
     streamOpts: Map[String, String] = Map.empty)
-  extends V1Scan with SupportsReportStatistics {
+  extends Scan with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
+
+  /** `readWhere` over the pushed conditions, projected to `required`
+    * (DDL-declared columns no data file carries yet — ALTER TABLE ADD
+    * COLUMN — null-fill, the semantics a written file would get from
+    * mergeSchema one commit earlier), optimized once per scan: adaptive
+    * re-planning then meets the same plan. None for a table with no
+    * committed version. */
+  @transient private lazy val optimizedRead
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+    if (ManifestTable.versions(path).isEmpty) None
+    else {
+      import org.apache.spark.sql.functions.{col, lit}
+      val df = ManifestTable.readWhere(SparkSession.active, path, conds, version)
+      Some(df.select(required.map(f =>
+        if (df.columns.contains(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)): _*)
+        .queryExecution.optimizedPlan)
+    }
+
+  /** The logical plan this scan stands for, re-aliased to the scan
+    * relation's `output` attributes (the catalog's schema is the read
+    * schema, so names and types line up by position); an empty relation
+    * when the table has no version yet. */
+  private[graft] def readPlan(
+      output: Seq[org.apache.spark.sql.catalyst.expressions.AttributeReference])
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    optimizedRead.fold[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan](
+        LocalRelation(output)) { p =>
+      Project(output.zip(p.output).map { case (a, f) =>
+        Alias(f, a.name)(exprId = a.exprId) }, p)
+    }
+  }
 
   /** `spark.readStream.table("graft.t")`: the catalog table is ALSO the
     * streaming source — delegates to the graft-table micro-batch stream
@@ -1590,10 +1629,6 @@ case class GraftScan(path: String, version: Option[Long],
       streamOpts.get("ignorechanges").exists(_.toBoolean), maxV,
       readChangeFeed = false, startingVersion = startTs.getOrElse(math.max(0L, startV)))
   }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftSqlRelation(context, path, version, required, conds).asInstanceOf[T]
 
   /** ANALYZE-computed column statistics for the columns this scan
     * emits, keyed the way `DataSourceV2Relation.transformV2Stats`
@@ -1653,7 +1688,13 @@ case class GraftScan(path: String, version: Option[Long],
     m
   }
 
-  override def estimateStatistics(): Statistics = {
+  // computed once per scan: the optimizer and the planner ask each
+  // relation for its statistics many times
+  @transient private lazy val statistics: Statistics = liveStatistics()
+
+  override def estimateStatistics(): Statistics = statistics
+
+  private def liveStatistics(): Statistics = {
     import java.util.OptionalLong
     if (ManifestTable.versions(path).isEmpty)
       return new Statistics {
@@ -1687,32 +1728,6 @@ case class GraftScan(path: String, version: Option[Long],
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
         colStats
     }
-  }
-}
-
-class GraftSqlRelation(ctx: SQLContext, path: String, version: Option[Long],
-    required: StructType, conds: Seq[Condition])
-  extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val spark = ctx.sparkSession
-    if (ManifestTable.versions(path).isEmpty)
-      return spark.sparkContext.emptyRDD
-    val df = ManifestTable.readWhere(spark, path, conds, version)
-    // DDL-declared columns no data file carries yet (ALTER TABLE ADD
-    // COLUMN) null-fill here — same semantics a written file would get
-    // from mergeSchema, one commit earlier
-    val projected =
-      if (required.isEmpty) df.select()
-      else df.select(required.map(f =>
-        if (df.columns.contains(f.name))
-          org.apache.spark.sql.functions.col(f.name)
-        else org.apache.spark.sql.functions.lit(null).cast(f.dataType)
-          .as(f.name)): _*)
-    projected.rdd
   }
 }
 
@@ -2333,21 +2348,19 @@ trait GraftPartitionListing
 /** The pushed-aggregate result — one row for global aggregates, one per
   * partition tuple for partition-column GROUP BYs — computed entirely
   * from the manifest: the scan never opens a data file (the spec proves
-  * it by answering with the data directory moved aside). */
+  * it by answering with the data directory moved aside).
+  * [[graft.plans.GraftReadStrategy]] plans it as a local relation of
+  * [[internalRows]], so the answer starts no Spark job. */
 class GraftMetaAggScan(path: String, aggSchema: StructType,
-    rows: Seq[Seq[Any]]) extends V1Scan {
+    rows: Seq[Seq[Any]]) extends Scan {
   override def readSchema(): StructType = aggSchema
   override def description(): String =
     s"GraftMetaAggScan path=$path (manifest-only aggregate, ${rows.size} rows)"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val rel = new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = aggSchema
-      override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-        context.sparkSession.sparkContext.parallelize(
-          rows.map(org.apache.spark.sql.Row.fromSeq), 1)
-    }
-    rel.asInstanceOf[T]
+
+  private[graft] def internalRows: Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(aggSchema)
+    rows.map(r => toCatalyst(org.apache.spark.sql.Row.fromSeq(r))
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
   }
 }

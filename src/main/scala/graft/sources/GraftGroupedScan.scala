@@ -42,8 +42,8 @@ import graft.sources.v2.RowGroupReader
   * column present in the committed data schema with a type the
   * row-group reader decodes, and every stats-surviving file
   * single-valued on every partition column. Anything else falls back to
-  * the V1 scan ([[GraftScan]]), whose DataFrame path reconciles those
-  * cases. Reference behavior anchor: the co-located source/target sync
+  * the read-plan scan ([[GraftScan]]), whose DataFrame path reconciles
+  * those cases. Reference behavior anchor: the co-located source/target sync
   * loop (core/pipeline.py:83) is the reference's join-shaped hot path.
   */
 final class GraftGroupedScan(
@@ -97,7 +97,7 @@ final class GraftGroupedScan(
       s"groups=${groups.size}"
 
   // the table stays streamable with the bucketing conf on: delegate to
-  // the V1 scan's micro-batch door (version offsets, admission control)
+  // the read-plan scan's micro-batch door (version offsets, admission control)
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     fallback.toMicroBatchStream(checkpointLocation)
@@ -379,7 +379,7 @@ object GraftGroupedScan {
   }
 
   /** The grouped scan for this snapshot, or None when any eligibility
-    * condition fails (the caller keeps the V1 scan — correctness never
+    * condition fails (the caller keeps the read-plan scan — correctness never
     * depends on taking this path). */
   def build(spark: org.apache.spark.sql.SparkSession, path: String,
       version: Option[Long], required: StructType, conds: Seq[Condition],
@@ -390,7 +390,7 @@ object GraftGroupedScan {
     if (m.deletes.nonEmpty || m.renames.nonEmpty || m.droppedCols.nonEmpty)
       return None
     // every required column must be data-backed (DDL-added columns that
-    // no file carries yet null-fill on the V1 path) with a readable type
+    // no file carries yet null-fill on the read-plan path) with a readable type
     val dataSchema =
       try ManifestTable.schemaAt(spark, path, version)
       catch { case _: Exception => return None }
@@ -451,7 +451,7 @@ object GraftGroupedScan {
     * file names) — grouping needs no stats, and a point predicate on
     * the bucket column prunes to ONE bucket's files before the scan
     * plans. A file without the prefix (a pre-bucketing write, a delta
-    * file) fails eligibility and the V1 path reads the table. */
+    * file) fails eligibility and the read-plan scan reads the table. */
   private def buildBucketed(path: String, version: Option[Long],
       required: StructType, conds: Seq[Condition],
       m: ManifestTable.Manifest, n: Int, c: String, keyType: Option[DataType],
@@ -488,7 +488,7 @@ object GraftGroupedScan {
           if (id >= n) return None // stale prefix from an older layout
           if (allowedBuckets.forall(_.contains(id)))
             grouped.updateWith(id)(cur => Some(f :: cur.getOrElse(Nil)))
-        case None => return None // unprefixed file → V1 path
+        case None => return None // unprefixed file → read-plan scan
       }
     }
     val groups = grouped.toSeq.sortBy(_._1).map { case (id, fs) =>

@@ -831,7 +831,7 @@ object ManifestTable {
   private val physSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private[sources] def physicalSchemaAt(spark: SparkSession, path: String,
+  private[graft] def physicalSchemaAt(spark: SparkSession, path: String,
       m: Manifest): org.apache.spark.sql.types.StructType = {
     val key = manifestCacheKey(path, m)
     val hit = physSchemaCache.get(key)
@@ -877,6 +877,67 @@ object ManifestTable {
     physSchemaCache.clear()
   }
 
+  /** THE scan of table files — data, delete and change-data files
+    * alike: a parquet relation over exactly `files` (entries of the
+    * table's `data/`, or absolute paths), read with `schema`. Its file
+    * index serves each file at the size the manifest recorded
+    * ([[sizeOf]]; a file no manifest names yet, `m` = None, is statted),
+    * so building the frame lists no directory, infers no schema and
+    * starts no job, at any file count — where `spark.read.parquet`
+    * stats every path and, past 32 of them, runs a listing job. */
+  private[graft] def frameOf(spark: SparkSession, path: String,
+      m: Option[Manifest], files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val index = ManifestFileIndex(files.map { f =>
+      val file = dataDir(path).resolve(f)
+      file.toAbsolutePath.toString -> m.fold(Files.size(file))(sizeOf(path, _, f))
+    })
+    org.apache.spark.sql.graft.ColumnBridge.ofRows(spark, LogicalRelation(
+      HadoopFsRelation(index, org.apache.spark.sql.types.StructType(Nil), schema,
+        None, new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** Files read with their footers' merged schema, each statted for
+    * its size — files a write in flight staged, or a delta whose own
+    * schema (not the version's) is the one to check. */
+  private def footerFrame(spark: SparkSession, path: String,
+      files: Seq[String]): DataFrame =
+    frameOf(spark, path, None, files,
+      org.apache.spark.sql.graft.ColumnBridge.mergeSchemas(spark,
+        files.map(fileSchema(spark, path, _))))
+
+  /** One delete file of `m`, read with its footer schema. */
+  private def fileFrame(spark: SparkSession, path: String, m: Manifest,
+      f: String): DataFrame =
+    frameOf(spark, path, Some(m), Seq(f), fileSchema(spark, path, f))
+
+  /** The file listing of [[frameOf]]: (absolute path, size) pairs
+    * served as one unpartitioned directory, the root paths being the
+    * files themselves — the shape Spark's in-memory index reports for
+    * a list of file paths. A value, so equal listings plan equal scans. */
+  private final case class ManifestFileIndex(files: Seq[(String, Long)])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, PartitionDirectory}
+    @transient private lazy val statuses = files.collect {
+      case (f, n) if n > 0 => FileStatusWithMetadata(
+        new FileStatus(n, false, 1, 32L << 20, 0L, new HPath("file", null, f)))
+    }
+    override def rootPaths: Seq[HPath] = files.map(f => new HPath("file", null, f._1))
+    override def listFiles(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+        : Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
+    override def inputFiles: Array[String] =
+      statuses.map(_.getPath.toUri.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_._2).sum
+    override def partitionSchema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType(Nil)
+  }
+
   private def reconcileRaw(spark: SparkSession, path: String, m: Manifest,
       scanFiles: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -886,8 +947,7 @@ object ManifestTable {
     // an unpruned read
     val refSchema = physicalSchemaAt(spark, path, m)
     def scan(fs: Seq[String]): DataFrame =
-      spark.read.schema(refSchema)
-        .parquet(fs.map(f => dataDir(path).resolve(f).toString): _*)
+      frameOf(spark, path, Some(m), fs, refSchema)
     if (m.deletes.isEmpty) return scan(scanFiles)
     val scope = deleteScope(m, scanFiles)
     val dirty = scanFiles.filter(f => scope(f).nonEmpty)
@@ -912,8 +972,7 @@ object ManifestTable {
     }
     val out = groups.values.foldLeft(withSeq) { case (cur, dels) =>
       val delDf = dels.map { case (f, seq) =>
-        spark.read.parquet(dataDir(path).resolve(f).toString)
-          .withColumn("__graft_dseq", lit(seq))
+        fileFrame(spark, path, m, f).withColumn("__graft_dseq", lit(seq))
       }.reduce(_.unionByName(_))
       val keys = delDf.columns.filterNot(_ == "__graft_dseq")
       val cond = keys.map(k => cur(k) === delDf(k)).reduce(_ && _) &&
@@ -925,23 +984,12 @@ object ManifestTable {
     else align(scan(clean)).unionByName(reconciled)
   }
 
-  /** Delete files are immutable once committed, so their key schema is
-    * probed (a driver-side footer read) at most once per JVM — a table
-    * accumulating hundreds of MoR deletes must not pay a probe per
-    * delete file per READ. */
-  private val deleteSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
+  /** A delete file's key columns, off its (cached) footer schema — a
+    * table accumulating hundreds of MoR deletes pays one footer read
+    * per delete file per JVM, never one per read. */
   private def deleteKeyCols(spark: SparkSession, path: String,
-      file: String): Seq[String] = {
-    val abs = dataDir(path).resolve(file).toAbsolutePath.toString
-    val hit = deleteSchemaCache.get(abs)
-    if (hit != null) return hit
-    val cols = spark.read.parquet(abs).columns.toSeq.sorted
-    if (deleteSchemaCache.size > 65536) deleteSchemaCache.clear()
-    deleteSchemaCache.put(abs, cols)
-    cols
-  }
+      file: String): Seq[String] =
+    fileSchema(spark, path, file).fieldNames.toSeq.sorted
 
   /** Attach each row's data-file commit seq as `__graft_seq`. Small
     * manifests inline a literal map (zero joins, codegen-friendly); past
@@ -1375,15 +1423,22 @@ object ManifestTable {
         org.apache.spark.sql.graft.ColumnBridge.expression(c)))
 
   /** The table's declared CHECK constraints (empty if none/absent). */
-  def constraints(path: String): Seq[String] =
-    latest(path).map(_.constraints)
+  def constraints(path: String): Seq[String] = constraintsAt(path, latest(path))
+
+  /** [[constraints]] with the head manifest already in hand. */
+  private def constraintsAt(path: String, head: Option[Manifest]): Seq[String] =
+    head.map(_.constraints)
       .getOrElse(GraftCatalog.readDeclaredConstraints(Paths.get(path)))
 
   /** The table's declared generated columns (empty if none/absent):
     * manifest metadata once any commit landed, the CREATE-time DDL
     * declaration before. */
   def generatedColumns(path: String): Seq[(String, String)] =
-    latest(path).map(_.generated)
+    generatedAt(path, latest(path))
+
+  private def generatedAt(path: String,
+      head: Option[Manifest]): Seq[(String, String)] =
+    head.map(_.generated)
       .getOrElse(GraftCatalog.readDeclaredGenerated(Paths.get(path)))
 
   /** Declare GENERATED columns — a metadata-only commit, the
@@ -1588,8 +1643,8 @@ object ManifestTable {
     * constraints speak LOGICAL names and run first; the parquet bytes
     * carry the frozen physical names so every file of the table shares
     * one physical schema regardless of renames. */
-  private def toPhysical(df: DataFrame, path: String): DataFrame =
-    latest(path) match {
+  private def toPhysical(df: DataFrame, head: Option[Manifest]): DataFrame =
+    head match {
       case Some(m) if m.renames.nonEmpty =>
         df.select(df.columns.map(c =>
           df.col(c).as(m.renames.getOrElse(c, c))).toIndexedSeq: _*)
@@ -1747,8 +1802,11 @@ object ManifestTable {
       CommitProfile.timed("stage") {
     Files.createDirectories(dataDir(path))
     val keepLayout = callerSized(df.queryExecution.analyzed)
+    // one read of the head serves the whole contract
+    val head = latest(path)
     val processed = toPhysical(enforceConstraints(
-      applyGenerated(df, generatedColumns(path)), constraints(path)), path)
+      applyGenerated(df, generatedAt(path, head)), constraintsAt(path, head)),
+      head)
     val dd = dataDir(path).toAbsolutePath.toString
     val codec = GraftCatalog.readDeclaredCompression(Paths.get(path))
     // bucket layouts route rows by floorMod(xxhash64(col), n) — the
@@ -2777,9 +2835,8 @@ object ManifestTable {
         try {
           val touched =
             if (pending.files.isEmpty) Set.empty[String]
-            else spark.read.schema(physicalSchemaAt(spark, path, base))
-              .parquet(pending.files.map(f =>
-                dataDir(path).resolve(f).toString): _*)
+            else frameOf(spark, path, Some(pending), pending.files,
+                physicalSchemaAt(spark, path, base))
               .withColumn("__file", input_file_name())
               .join(broadcast(srcKeys), keyCols, "left_semi")
               .select(col("__file")).distinct().collect()
@@ -2850,8 +2907,8 @@ object ManifestTable {
       val scanFiles = candidates.filterNot(dropped)
       val touched =
         if (scanFiles.isEmpty) Set.empty[String]
-        else spark.read.schema(physicalSchemaAt(spark, path, base))
-          .parquet(scanFiles.map(f => dataDir(path).resolve(f).toString): _*)
+        else frameOf(spark, path, Some(pending), scanFiles,
+            physicalSchemaAt(spark, path, base))
           .withColumn("__file",
             org.apache.spark.sql.functions.input_file_name())
           .where(cond)
@@ -2907,9 +2964,8 @@ object ManifestTable {
             "added rows - their keys cannot be proven disjoint; re-run " +
             "the bundle")
         else if (rewriteScopes.nonEmpty && winnerAdded.nonEmpty &&
-            spark.read.schema(physicalSchemaAt(spark, path, head))
-              .parquet(winnerAdded.map(f =>
-                dataDir(path).resolve(f).toString): _*)
+            frameOf(spark, path, Some(head), winnerAdded,
+              physicalSchemaAt(spark, path, head))
               .where(rewriteScopes.map(c => coalesce(c, lit(false)))
                 .reduce(_ || _)).limit(1).collect().nonEmpty)
           Some("a concurrent commit added rows inside this bundle's " +
@@ -3161,8 +3217,9 @@ object ManifestTable {
     val ranges: Seq[(Long, String, Option[(Any, Any)])] =
       base.deletes.groupBy { case (f, _) => firstColOf(f) }.toSeq.flatMap {
         case (k0, group) =>
-          val byName = spark.read
-            .parquet(group.map(g => dataDir(path).resolve(g._1).toString): _*)
+          val byName = frameOf(spark, path, Some(base), group.map(_._1),
+              org.apache.spark.sql.graft.ColumnBridge.mergeSchemas(spark,
+                group.map(g => fileSchema(spark, path, g._1))))
             .groupBy(input_file_name().as("__f"))
             .agg(min(col(k0)), max(col(k0)))
             .collect()
@@ -3258,8 +3315,7 @@ object ManifestTable {
       renames: Map[String, String], droppedCols: Seq[String]): Boolean = {
     import org.apache.spark.sql.functions._
     if (files.isEmpty || (cons.isEmpty && gens.isEmpty)) return true
-    var df = spark.read.parquet(
-      files.map(f => dataDir(path).resolve(f).toString): _*)
+    var df = footerFrame(spark, path, files)
     renames.foreach { case (logical, physical) =>
       if (df.columns.contains(physical) && logical != physical)
         df = df.withColumnRenamed(physical, logical) }
@@ -3291,8 +3347,8 @@ object ManifestTable {
   private def keyFree(spark: SparkSession, path: String, keys: => DataFrame,
       keyCols: Seq[String]): (Manifest, Seq[String]) => Option[String] =
     (head, added) =>
-      if (added.isEmpty || spark.read.schema(physicalSchemaAt(spark, path, head))
-          .parquet(added.map(f => dataDir(path).resolve(f).toString): _*)
+      if (added.isEmpty || frameOf(spark, path, Some(head), added,
+            physicalSchemaAt(spark, path, head))
           .join(keys, keyCols, "left_semi").limit(1).collect().isEmpty) None
       else Some("a concurrent commit added rows with keys this write touches")
 
@@ -3354,8 +3410,8 @@ object ManifestTable {
 
       // (1) which files contain a source key? (file names only — the
       // driver never holds data rows)
-      val withFile = spark.read.schema(physicalSchemaAt(spark, path, base))
-        .parquet(base.files.map(f => dataDir(path).resolve(f).toString): _*)
+      val withFile = frameOf(spark, path, Some(base), base.files,
+          physicalSchemaAt(spark, path, base))
         .withColumn("__file", input_file_name())
       val touched = withFile.join(s.keys, keyCols, "left_semi")
         .select(col("__file")).distinct().collect()
@@ -3525,8 +3581,7 @@ object ManifestTable {
     val cons = constraints(path)
     val gens = generatedColumns(path)
     if (files.isEmpty || (cons.isEmpty && gens.isEmpty)) return
-    val staged = spark.read.parquet(
-      files.map(f => dataDir(path).resolve(f).toString): _*)
+    val staged = footerFrame(spark, path, files)
     if (cons.nonEmpty) {
       val bad = staged.where(!cons.map(c => gated(expr(c))).reduce(_ && _))
         .limit(1).collect()
@@ -3618,8 +3673,7 @@ object ManifestTable {
         None).toLong
     }
     if (upsertFiles.nonEmpty) {
-      val staged = spark.read.parquet(
-        upsertFiles.map(f => dataDir(path).resolve(f).toString): _*)
+      val staged = footerFrame(spark, path, upsertFiles)
       val dup = staged.groupBy(keyCols.map(col): _*).count()
         .where(col("count") > 1).limit(1).collect()
       require(dup.isEmpty,
@@ -3631,8 +3685,7 @@ object ManifestTable {
         .mkString("(", ",", ")")}; delta write on ${keyCols
         .mkString("(", ",", ")")} rejected")
     landMoR(spark, path, base, upsertFiles, deleteFiles,
-      spark.read.parquet(
-        deleteFiles.map(f => dataDir(path).resolve(f).toString): _*),
+      footerFrame(spark, path, deleteFiles),
       keyCols, None, None)
   }
 
@@ -3696,9 +3749,8 @@ object ManifestTable {
       // (rare) pin the KB-scale key frames via localCheckpoint so the
       // folds don't re-execute the union lineage per join.
       val groupKeys: Seq[DataFrame] = groups.map { dels =>
-        val k = dels.map { case (f, _) =>
-          spark.read.parquet(dataDir(path).resolve(f).toString)
-        }.reduce(_.unionByName(_)).distinct()
+        val k = dels.map { case (f, _) => fileFrame(spark, path, mt, f) }
+          .reduce(_.unionByName(_)).distinct()
         if (groups.size > 1) k.localCheckpoint() else k
       }
       // per key-schema group: semi-join shared rows on the group's keys,
@@ -3885,7 +3937,7 @@ object ManifestTable {
     }
     var redacted = 0L
     files.foreach { p =>
-      val df = spark.read.parquet(p.toString)
+      val df = cdfFrame(spark, path, p)
       val cols = df.columns.toSet
       if (cols.contains(keyCol) && attrCols.forall(cols.contains)) {
         val hit = col(keyCol).isin(keys: _*)
@@ -3922,6 +3974,14 @@ object ManifestTable {
     }
     redacted
   }
+
+  /** A `_change_data` file, read with its footer schema. Not cached:
+    * redaction rewrites the file in place, and a table re-created at
+    * the same path writes new files under the same names. */
+  private def cdfFrame(spark: SparkSession, path: String, p: Path): DataFrame =
+    frameOf(spark, path, None, Seq(p.toAbsolutePath.toString),
+      org.apache.spark.sql.graft.ColumnBridge.footerSchema(spark,
+        p.toAbsolutePath.toString, footerOf(p)))
 
   private[graft] def cdfFile(path: String, v: Long): Path =
     Paths.get(path, "_change_data").resolve(f"v$v%08d.parquet")
@@ -3960,7 +4020,7 @@ object ManifestTable {
       else {
         val cdf = cdfFile(path, v)
         if (Files.exists(cdf))
-          Some(spark.read.parquet(cdf.toString))
+          Some(cdfFrame(spark, path, cdf))
         else if (isAppendOnly(path, v)) {
           // the version's OWN files, read through reconcile so clone
           // initials (carried seqs), inherited delete ledgers, and

@@ -108,7 +108,8 @@ object ColumnBridge {
 
   /** The row schema Spark's parquet schema inference reads off one
     * footer: the Spark schema the writer embedded, else the parquet
-    * schema converted under the session's conf. */
+    * schema converted under the session's conf; every field nullable,
+    * as inference hands it to a relation. */
   def footerSchema(spark: org.apache.spark.sql.SparkSession, file: String,
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
       : org.apache.spark.sql.types.StructType = {
@@ -118,6 +119,7 @@ object ColumnBridge {
         new org.apache.hadoop.fs.Path(file), footer),
       new ParquetToSparkSchemaConverter(spark.asInstanceOf[
         org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+      .asNullable
   }
 
   /** `mergeSchema` over file schemas in order, by Spark's own rules

@@ -13,9 +13,8 @@ import graft.sources.ColumnStats
   * The chain under test: `ANALYZE TABLE … COMPUTE STATISTICS FOR
   * COLUMNS` (one sketch-aggregation pass, [[ColumnStats.analyze]]) →
   * `_colstats.json` sidecar → DSv2 `Statistics.columnStats()`
-  * ([[graft.sources.GraftScan]]) → the pre-CBO stats bridge
-  * ([[org.apache.spark.sql.graft.ForwardV1ScanStats]]) → Spark's
-  * filter-cardinality estimation and CostBasedJoinReorder. */
+  * ([[graft.sources.GraftScan]]) → the scan relation's statistics →
+  * Spark's filter-cardinality estimation and CostBasedJoinReorder. */
 class CboStatsSpec extends SparkSpecBase {
 
   private def cboSession(wh: String): SparkSession = {
@@ -93,8 +92,7 @@ class CboStatsSpec extends SparkSpecBase {
   test("CostBasedJoinReorder restructures a graft three-way join") {
     val wh = Files.createTempDirectory("graft-cbo-").toString
     val s2 = cboSession(wh)
-    // isolate reorder: broadcast HINTS (GraftJoinSizeRule) pin the join
-    // order, and CostBasedJoinReorder only touches hint-free joins
+    // no broadcasts: the join order alone decides the shuffle sizes
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import s2.implicits._
     (0L until 200000L).map(i => (i, i % 1000)).toDF("k", "g")

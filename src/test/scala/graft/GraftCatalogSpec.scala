@@ -66,8 +66,7 @@ class GraftCatalogSpec extends SparkSpecBase {
     assert(filtered.collect().map(_.getLong(0)).toSeq == Seq(5L))
 
     // the scan's reported statistics, with and without a pushed filter
-    // (Spark's V1ScanWrapper hides them from plan.stats, so the rule in
-    // GraftJoinSize reads them exactly this way)
+    // (what DataSourceV2ScanRelation.computeStats hands join planning)
     import graft.sources.{GraftScanBuilder, GraftScan}
     val schema = s2.table("graft.t").schema
     def scanRows(filters: Array[org.apache.spark.sql.sources.Filter]): Long = {
@@ -260,7 +259,6 @@ class GraftCatalogSpec extends SparkSpecBase {
     val wh = freshWh()
     val s2 = catalogSession(wh)
     import s2.implicits._
-    graft.plans.GraftJoinSize.install(s2)
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", (256 * 1024).toString)
     val path = s"$wh/big"
     // physically above-threshold table (padded strings)…
