@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
 
@@ -120,8 +121,14 @@ object Bench {
         timeOnce(name, fn)
       } else r
     }
+    // classes compiled per query: the codegen cache misses of its first
+    // pass (a structural counter — a plan shape compiles once, so a
+    // query that recompiles per run shows up here, not in wall time)
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val firstPass = selected.map { case (name, fn) =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (dt, ok) = time(name, fn)
+      compiles(name) = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       System.err.println(f"[bench] $name%-20s $dt%8.2f s")
       (name, fn, dt, ok)
     }
@@ -159,9 +166,11 @@ object Bench {
       s"\"" + k + "\":[" + a + "," + b + "]"
     }.mkString("{", ",", "}")
     val total = results.filter(_._3).map(_._2).sum
+    val codegen = compiles.map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,""" +
-      s""""retimings":$retimings,"context_restarts":$contextRestarts,""" +
+      s""""retimings":$retimings,"codegen_compiles":$codegen,""" +
+      s""""context_restarts":$contextRestarts,""" +
       s""""load_before":$loadBefore,"load_after":${loadAvg()},"sf":"$sfDir"}"""
     // FULL record → bench_last.json: the driver's artifact keeps only the
     // last ~2000 chars of stdout, so a 258-query map (~8 KB) can never

@@ -11,6 +11,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * session build; `GraftExtensions.register(spark)` injects them into an
   * already-built session (used by tests/notebooks). After either,
   * `SELECT graft_dot(a, b)` works from plain SQL.
+  *
+  * Two injections only take effect on a session BUILT with the
+  * extension, and `register()` cannot retrofit them: the SQL parser
+  * and the columnar rule [[HoistLiterals]], which keeps generated code
+  * the same across literal values so Spark's compile cache serves every
+  * repeat of a plan shape.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,6 +36,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (spark.sql.extensions conf or .withExtensions); register() on an
     // already-built session cannot retrofit a parser
     ext.injectParser((_, delegate) => new GraftSqlParser(delegate))
+    // compile once per plan shape: numeric literals of projections and
+    // filters leave the generated source. A pre-transition columnar rule
+    // runs in both QueryExecution.preparations and AQE's post-stage
+    // rules, right before CollapseCodegenStages
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = HoistLiterals
+    })
     // SHOW CREATE TABLE that round-trips (Spark's V2 renderer drops
     // GENERATED ALWAYS AS and doubles constraints via TBLPROPERTIES)
     ext.injectPlannerStrategy(_ => new GraftShowCreateStrategy)

@@ -75,9 +75,7 @@ object BloomIndex {
     val missingByCol: Map[String, Set[String]] =
       cols.map(c => c -> files.filterNot(indexedFiles(path, c)).toSet).toMap
     if (missingByCol.values.forall(_.isEmpty)) return 0
-    val dataDir = Paths.get(path, "data")
-    val scan = spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => dataDir.resolve(f).toString): _*)
+    val scan = ManifestTable.footerFrame(spark, path, files)
     val schema = scan.schema
     val colTypes: Map[String, org.apache.spark.sql.types.DataType] =
       cols.map(c => c -> schema(c).dataType).toMap

@@ -174,8 +174,7 @@ object ColumnStats {
     }
     // schema from the NEW files only — the whole point is that nothing
     // else gets touched (old files may be archived cold by now)
-    val df = spark.read.option("mergeSchema", "true").parquet(newFiles.map(f =>
-      ManifestTable.dataDirFor(path).resolve(f).toString): _*)
+    val df = ManifestTable.footerFrame(spark, path, newFiles)
     val schema = df.schema
     colNames.foreach(n =>
       if (!schema.fieldNames.contains(n)) return None)

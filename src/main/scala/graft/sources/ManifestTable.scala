@@ -585,8 +585,12 @@ object ManifestTable {
         .getOrElse(s"branch-gone:$path:${m.version}")
     else cacheKey(manifestDir(path).resolve(f"v${m.version}%08d.json"))
 
+  /** The head manifest: one listing of `_manifests` (counted as the
+    * `headRead` phase of [[CommitProfile]]). */
   private def latest(path: String): Option[Manifest] =
-    versions(path).lastOption.map(manifestAt(path, _))
+    CommitProfile.timed("headRead") {
+      versions(path).lastOption.map(manifestAt(path, _))
+    }
 
   /** Latest committed version, 0 for an empty/absent table (versions
     * start at 1) — the streaming source's offset domain. */
@@ -900,9 +904,10 @@ object ManifestTable {
   }
 
   /** Files read with their footers' merged schema, each statted for
-    * its size — files a write in flight staged, or a delta whose own
-    * schema (not the version's) is the one to check. */
-  private def footerFrame(spark: SparkSession, path: String,
+    * its size — files a write in flight staged, a delta whose own
+    * schema (not the version's) is the one to check, or the files an
+    * index build reads. */
+  private[graft] def footerFrame(spark: SparkSession, path: String,
       files: Seq[String]): DataFrame =
     frameOf(spark, path, None, files,
       org.apache.spark.sql.graft.ColumnBridge.mergeSchemas(spark,
@@ -1797,13 +1802,17 @@ object ManifestTable {
     * behind `localCheckpoint`/`checkpoint` is NOT seen — the checkpoint
     * truncates the plan to its RDD — so a checkpointed frame is folded
     * to its data size like any other: repartition after the checkpoint
-    * to keep a deliberate file layout. */
-  private def stage(df: DataFrame, path: String): Seq[String] =
-      CommitProfile.timed("stage") {
+    * to keep a deliberate file layout.
+    *
+    * `head` is the manifest whose contract (generated columns,
+    * constraints, column mapping) the rows are staged under: the one the
+    * caller's commit names as `stagedUnder` or claims against, so the
+    * contract enforced here is exactly the one the commit re-validates
+    * from when the head moves. */
+  private def stage(df: DataFrame, path: String,
+      head: Option[Manifest]): Seq[String] = CommitProfile.timed("stage") {
     Files.createDirectories(dataDir(path))
     val keepLayout = callerSized(df.queryExecution.analyzed)
-    // one read of the head serves the whole contract
-    val head = latest(path)
     val processed = toPhysical(enforceConstraints(
       applyGenerated(df, generatedAt(path, head)), constraintsAt(path, head)),
       head)
@@ -2444,7 +2453,7 @@ object ManifestTable {
     if (appTxn.isEmpty && commitId.exists(commitLanded(path, _)))
       return commit(path, Seq.empty, replace = false, commitId) // replay fast-path
     val under = latest(path) // contract the in-scan staging validates against
-    commit(path, stage(df, path), replace = false, commitId, appTxn,
+    commit(path, stage(df, path, under), replace = false, commitId, appTxn,
       stagedUnder = under)
   }
 
@@ -2457,7 +2466,7 @@ object ManifestTable {
     if (appTxn.isEmpty && commitId.exists(commitLanded(path, _)))
       return commit(path, Seq.empty, replace = true, commitId)
     val under = latest(path)
-    commit(path, stage(df, path), replace = true, commitId, appTxn,
+    commit(path, stage(df, path, under), replace = true, commitId, appTxn,
       stagedUnder = under)
   }
 
@@ -2533,7 +2542,7 @@ object ManifestTable {
     }
     // the contracts the staging validates against (as append's `under`)
     val unders = writes.map(w => latest(w.path))
-    val stagedData = writes.map(w => stage(w.df, w.path))
+    val stagedData = writes.zip(unders).map { case (w, u) => stage(w.df, w.path, u) }
     val statsRows = writes.zip(stagedData).map { case (w, fs) =>
       footerHarvest(w.path, fs) }
     val proven = writes.map(_ => noneProven)
@@ -2779,7 +2788,8 @@ object ManifestTable {
       * stage through the shared layout-aware writer. */
     private def stagePending(df: DataFrame): Seq[String] =
       stage(enforceConstraints(
-        applyGenerated(df, pending.generated), pending.constraints), path)
+        applyGenerated(df, pending.generated), pending.constraints), path,
+        latest(path))
 
     private def fold(untouched: Seq[String], staged: Seq[String]): Unit = {
       val (st, rws) = footerHarvest(path, staged)
@@ -3052,7 +3062,7 @@ object ManifestTable {
       throw new IllegalStateException(s"no committed version at $path"))
     val staged = stage(compactionLayout(read(spark, path, Some(base.version)),
       path, base.files.map(f => sizeOf(path, base, f)).sum, targetBytes,
-      zorderBy), path)
+      zorderBy), path, Some(base))
     // the rewrite read was MoR-reconciled, so the compacted files carry
     // the deletes' effect in data — the new manifest folds them away
     landCompaction(path, base, base.files, staged, foldDeletes = true,
@@ -3115,7 +3125,7 @@ object ManifestTable {
       return base.version
     val staged = stage(compactionLayout(reconcile(spark, path, base, scope),
       path, scope.map(f => sizeOf(path, base, f)).sum, targetBytes,
-      zorderBy), path)
+      zorderBy), path, Some(base))
     landCompaction(path, base, scope, staged, foldDeletes = false,
       s"compact-where-of-v${base.version}")
   }
@@ -3176,7 +3186,7 @@ object ManifestTable {
       return base.version // nothing worth folding
     val staged = stage(compactionLayout(reconcile(spark, path, base, toFold),
       path, sized.filter(p => toFold.contains(p._1)).map(_._2).sum,
-      targetBytes, zorderBy), path)
+      targetBytes, zorderBy), path, Some(base))
     landCompaction(path, base, toFold, staged, foldDeletes = false,
       s"compact-incr-of-v${base.version}")
   }
@@ -3253,7 +3263,7 @@ object ManifestTable {
       base: Manifest, affected: Seq[String]): Long =
     landCompaction(path, base, affected,
       if (affected.isEmpty) Seq.empty
-      else stage(reconcile(spark, path, base, affected), path),
+      else stage(reconcile(spark, path, base, affected), path, Some(base)),
       foldDeletes = true, s"fold-deletes-of-v${base.version}")
 
   /** MERGE INTO — the upsert/delete commit every sync loop needs once a
@@ -3450,7 +3460,7 @@ object ManifestTable {
       // no delete, and added no source key cannot change this merge's
       // result under either ordering — the staged rewrite adopts
       // metadata-only.
-      val staged = stage(rewritten, path)
+      val staged = stage(rewritten, path, Some(base))
       val (stagedStats, stagedRows) = footerHarvest(path, staged)
       val consumed = base.files.filter(f => touched(baseName(f))).toSet
       claim(path, Some(base), Change(added = staged, stats = stagedStats,
@@ -3509,12 +3519,13 @@ object ManifestTable {
       deleteWhen: Option[org.apache.spark.sql.Column],
       commitId: Option[String], evolveSchema: Boolean = false,
       appTxn: Option[(String, Long)] = None): Long = {
-    val (tableKeys, target, land) = ref match {
+    // `under`: the manifest whose contract the upserts stage under
+    val (tableKeys, target, under, land) = ref match {
       case None =>
         mergeReplayed(path, commitId, appTxn).foreach(return _)
         val base = latest(path).getOrElse(
           throw new IllegalStateException(s"no committed version at $path"))
-        (base.mergeKeys, read(spark, path, Some(base.version)),
+        (base.mergeKeys, read(spark, path, Some(base.version)), Some(base),
           (up: Seq[String], del: Seq[String], keys: DataFrame) =>
             landMoR(spark, path, Some(base), up, del, keys, keyCols, appTxn,
               commitId))
@@ -3525,13 +3536,13 @@ object ManifestTable {
           s"branch '$name' is keyed on ${b.keys.mkString("(", ",", ")")}; " +
             s"merge on ${keyCols.mkString("(", ",", ")")} rejected")
         (manifestAt(path, b.parent).mergeKeys, readBranch(spark, path, name),
-          (up: Seq[String], del: Seq[String], _: DataFrame) =>
+          latest(path), (up: Seq[String], del: Seq[String], _: DataFrame) =>
             commitToRef(path, name, up, del, Some(keyCols), commitId).toLong)
     }
     withKeyedSource(source, target.columns.toSeq, tableKeys, keyCols,
         deleteWhen, evolveSchema) { s =>
       val delFiles = stageDeletes(s.keys, path)
-      land(stage(s.upserts, path), delFiles, s.keys)
+      land(stage(s.upserts, path, under), delFiles, s.keys)
     }
   }
 
@@ -4810,7 +4821,7 @@ object ManifestTable {
     validWapId(wapId)
     val head = latest(path).getOrElse(throw new IllegalStateException(
       s"no committed version at $path - commit the table before staging"))
-    val staged = stage(df, path)
+    val staged = stage(df, path, Some(head))
     Files.createDirectories(wapDir(path))
     val json = s"""{"wapId":${q(wapId)},"parent":${head.version},""" +
       s""""files":[${staged.map(q).mkString(",")}]}"""
@@ -5244,7 +5255,7 @@ object ManifestTable {
   def appendBranch(df: DataFrame, path: String, name: String,
       commitId: Option[String] = None): Int = {
     replayOrdinal(refHead(path, name), commitId).foreach(return _)
-    commitToRef(path, name, stage(df, path), Seq.empty, None, commitId)
+    commitToRef(path, name, stage(df, path, latest(path)), Seq.empty, None, commitId)
   }
 
   /** BRANCH DML — the keyed MoR merge routed onto a ref: corrections
@@ -5547,7 +5558,7 @@ object ManifestTable {
       if (covered.isEmpty) Seq.empty[String]
       else stage(reconcile(requireSession(s"publishing branch '$name' " +
         s"at $path rewrites rows a later branch commit deleted"),
-        path, snap, covered), path)
+        path, snap, covered), path, latest(path))
     val (rwStats, rwRows) = footerHarvest(path, rewritten)
     def of[V](m: Map[String, V], fs: Seq[String]) =
       m.view.filterKeys(fs.toSet).toMap

@@ -78,9 +78,7 @@ object TrigramIndex {
   private def buildPass(spark: SparkSession, path: String, col: String,
       files: Seq[String], fpp: Double, expectedPerRow: Long): Int = {
     val rowsByFile = ManifestTable.fileRows(path)
-    val dataDir = Paths.get(path, "data")
-    val scan = spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => dataDir.resolve(f).toString): _*)
+    val scan = ManifestTable.footerFrame(spark, path, files)
       .select(element_at(split(input_file_name(), "/"), -1).as("__f"),
         org.apache.spark.sql.functions.col(col).cast("string").as("__v"))
     val expected = files.map(f => f -> math.min(1L << 22, math.max(1024L,

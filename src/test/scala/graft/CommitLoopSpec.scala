@@ -157,6 +157,24 @@ class CommitLoopSpec extends SparkSpecBase {
     assert(v > racer, s"the entry must land after the racing append (v$v)")
   }
 
+  test("an append reads the head once to stage and once to claim; a txn once per table each") {
+    val path = mk()
+    val other = mk()
+    def headReads(body: => Any): Long = {
+      def n = ManifestTable.CommitProfile.snapshot.get("headRead").fold(0L)(_._1)
+      val before = n
+      body
+      n - before
+    }
+    assert(headReads(ManifestTable.append(batch(200, 240), path)) == 2)
+    assert(headReads(ManifestTable.overwrite(batch(0, 240), path)) == 2)
+    assert(headReads(ManifestTable.commitTxn(Seq(
+      ManifestTable.TxnWrite(batch(240, 280), path),
+      ManifestTable.TxnWrite(batch(200, 240), other)))) == 4)
+    assert(ManifestTable.read(spark, path).count() == 280L)
+    assert(ManifestTable.read(spark, other).count() == 240L)
+  }
+
   test("the hook seam: append and overwrite") {
     val p1 = mk()
     landsAfter(p1) { ManifestTable.append(batch(500, 510), p1) }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.conditions.{Condition, Op}
 import graft.plans.GraftReadStrategy
-import graft.sources.ManifestTable
+import graft.sources.{BloomIndex, ManifestTable, TrigramIndex}
 
 /** Catalog SQL reads plan as ManifestTable's own read plan, and that
   * plan is built from the manifest: a parquet file scan in the query's
@@ -99,6 +99,25 @@ class ReadPlanSpec extends SparkSpecBase {
     val readJobs = JobProbe.jobsOf(spark) { got = df.collect() }
     assert(metadataJobs(readJobs).isEmpty, metadataJobs(readJobs))
     assert(got.length == 4000 && got.count(_.getLong(1) == -1L) == 40)
+  }
+
+  test("a 40-file Bloom and trigram index build starts no listing or schema job") {
+    val path = s"${freshWh()}/t"
+    ManifestTable.overwrite(spark.range(0, 4000)
+      .select(col("id").as("k"), concat(lit("u"), col("id")).as("s")).repartition(40), path)
+    val jobs = JobProbe.jobsOf(spark) {
+      assert(BloomIndex.build(spark, path, Seq("k")) == 40)
+      assert(TrigramIndex.build(spark, path, "s") == 40)
+    }
+    val listings = jobs.flatMap(j => Option(j.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description"))))
+      .filter(_.startsWith("Listing leaf files"))
+    assert(listings.isEmpty && metadataJobs(jobs).isEmpty,
+      (listings ++ metadataJobs(jobs)).mkString("; "))
+    // one scan job per build
+    assert(jobs.size == 2, jobs.flatMap(_.stageInfos.map(_.name)))
+    val conds = Seq(Condition("k", Op.Eq, 1234L))
+    assert(ManifestTable.readWhereBloom(spark, path, conds).count() == 1L)
   }
 
   test("a session with only the catalog conf plans its SQL reads itself") {
