@@ -16,40 +16,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def build(): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // parser + rules + functions at session BUILD: the injected
-        // parser (SQL OPTIMIZE/VACUUM) cannot be retrofitted later
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        // Hadoop's file:// default is ChecksumFileSystem: every file the
-        // streaming machinery writes (state-store deltas, offset/commit
-        // logs, sink metadata) is written TWICE — payload + .crc sidecar
-        // — and re-verified on read. Production checkpoints live on
-        // HDFS/object stores whose integrity is server-side (no client
-        // sidecar per file), so local mode double-paying is a bench
-        // artifact, not a real cost. Measured on the 18-query stream
-        // subset: 0.79× total by min-of-pair (q78 0.37×, q47 0.46×,
-        // q46 0.52×). Overridable via SPARK_GRAFT_CONF.
-        .config("spark.hadoop.fs.file.impl",
-          "org.apache.hadoop.fs.RawLocalFileSystem")
-      // rule): `SPARK_GRAFT_CONF="k=v;k2=v2"` lets the driver (or a
-      // cluster deployment) override any session conf without editing
-      // the bench; absent, the defaults above hold and the measurement
-      // stays comparable round over round.
-      sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-        val i = kv.indexOf('=')
-        if (i > 0) b.config(kv.take(i).trim, kv.drop(i + 1).trim)
-      })
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val cpus = GraftSession.cpus("4")
+    def build(): SparkSession = GraftSession.build(cpus, GraftSession.envOverrides)
     var spark = build()
     // the suite must survive a fatal error mid-run: a contended full-suite
     // run once lost the DAGScheduler event loop (Spark then stops the

@@ -13,29 +13,9 @@ object Verify {
     val names = args.drop(2)
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // events.ts is parquet TIMESTAMP(NANOS): Spark has no nanos
-        // timestamp type, so read as long nanos and do exact integer
-        // time arithmetic
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // parser + rules + functions at session BUILD: the injected
-        // parser (SQL OPTIMIZE/VACUUM) cannot be retrofitted later
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        // checksum-free local FS, same as Bench: correctness must be
-        // proven under the exact session the bench times (see Bench for
-        // the measured rationale)
-        .config("spark.hadoop.fs.file.impl",
-          "org.apache.hadoop.fs.RawLocalFileSystem")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    // the session Bench times, SPARK_GRAFT_CONF overrides included
+    def build(): SparkSession =
+      GraftSession.build(GraftSession.cpus("4"), GraftSession.envOverrides)
     var spark = build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -1428,23 +1428,20 @@ object ManifestTable {
         org.apache.spark.sql.graft.ColumnBridge.expression(c)))
 
   /** The table's declared CHECK constraints (empty if none/absent). */
-  def constraints(path: String): Seq[String] = constraintsAt(path, latest(path))
-
-  /** [[constraints]] with the head manifest already in hand. */
-  private def constraintsAt(path: String, head: Option[Manifest]): Seq[String] =
-    head.map(_.constraints)
-      .getOrElse(GraftCatalog.readDeclaredConstraints(Paths.get(path)))
+  def constraints(path: String): Seq[String] =
+    latest(path).getOrElse(genesis(path)).constraints
 
   /** The table's declared generated columns (empty if none/absent):
     * manifest metadata once any commit landed, the CREATE-time DDL
     * declaration before. */
   def generatedColumns(path: String): Seq[(String, String)] =
-    generatedAt(path, latest(path))
+    latest(path).getOrElse(genesis(path)).generated
 
-  private def generatedAt(path: String,
-      head: Option[Manifest]): Seq[(String, String)] =
-    head.map(_.generated)
-      .getOrElse(GraftCatalog.readDeclaredGenerated(Paths.get(path)))
+  /** What a table's first commit builds on: no files, and the contract
+    * its CREATE-time DDL declared. */
+  private def genesis(path: String): Manifest = Manifest(0L, Seq.empty,
+    None, 0L, constraints = GraftCatalog.readDeclaredConstraints(Paths.get(path)),
+    generated = GraftCatalog.readDeclaredGenerated(Paths.get(path)))
 
   /** Declare GENERATED columns — a metadata-only commit, the
     * [[setConstraints]] shape: existing rows must already satisfy every
@@ -1666,14 +1663,16 @@ object ManifestTable {
     * `cols` (the target's columns plus, with schema evolution, the
     * source's extra ones), and `keys`, every distinct source key. */
   private final case class KeyedSource(upserts: DataFrame,
-      tombstones: DataFrame, keys: DataFrame, cols: Seq[String])
+      tombstones: DataFrame, keys: DataFrame, cols: Seq[String],
+      pin: DataFrame)
 
-  /** The source handling every keyed merge shares — CoW, MoR, bundle and
-    * branch. Validates the keys against the target's columns `cols` and
+  /** The source handling every keyed merge shares — the CoW merge
+    * (standalone or in a bundle) and the MoR merge (main or branch).
+    * Validates the keys against the target's columns `cols` and
     * the table's existing keys (a table keyed by an earlier merge stays
     * keyed on THE SAME columns: re-keying would orphan every delete
     * file's semantics), pins the source with `localCheckpoint` for its
-    * several consumers and RELEASES it after `body` (a long-running
+    * several consumers (`pin`, which the caller releases: a long-running
     * service must not accumulate checkpoint blocks), and splits it on
     * `deleteWhen`, which may reference columns outside the table (an op
     * marker — never evolved into it).
@@ -1683,10 +1682,10 @@ object ManifestTable {
     * then upsert-as-insert), a duplicate WITHIN either split would make
     * "the" update ambiguous. One guard job: grouping includes the side
     * tag, so a key once per side passes. */
-  private def withKeyedSource[A](source: DataFrame, cols: Seq[String],
+  private def keyedSource(source: DataFrame, cols: Seq[String],
       tableKeys: Seq[String], keyCols: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column],
-      evolveSchema: Boolean = false)(body: KeyedSource => A): A = {
+      evolveSchema: Boolean): KeyedSource = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(tableKeys.isEmpty || tableKeys == keyCols,
@@ -1714,11 +1713,13 @@ object ManifestTable {
       require(dup.isEmpty, s"source has duplicate " +
         s"${dup.headOption.map(_.getString(0)).getOrElse("")} merge key " +
         s"${dup.headOption.map(_.get(1))}")
-      body(KeyedSource(upserts, tombstones,
+      KeyedSource(upserts, tombstones,
         (tombstones.select(keyCols.map(col): _*)
           .unionByName(upserts.select(keyCols.map(col): _*))).distinct(),
-        allCols))
-    } finally graft.operators.IndexScope.release(raw)
+        allCols, raw)
+    } catch { case e: Throwable =>
+      graft.operators.IndexScope.release(raw); throw e
+    }
   }
 
   /** Column names a predicate references, resolved against `df` —
@@ -1813,9 +1814,9 @@ object ManifestTable {
       head: Option[Manifest]): Seq[String] = CommitProfile.timed("stage") {
     Files.createDirectories(dataDir(path))
     val keepLayout = callerSized(df.queryExecution.analyzed)
+    val contract = head.getOrElse(genesis(path))
     val processed = toPhysical(enforceConstraints(
-      applyGenerated(df, generatedAt(path, head)), constraintsAt(path, head)),
-      head)
+      applyGenerated(df, contract.generated), contract.constraints), head)
     val dd = dataDir(path).toAbsolutePath.toString
     val codec = GraftCatalog.readDeclaredCompression(Paths.get(path))
     // bucket layouts route rows by floorMod(xxhash64(col), n) — the
@@ -2199,11 +2200,17 @@ object ManifestTable {
   //   3. staged rows re-prove against a drifted contract (constraints,
   //      generated columns) with one O(staged) scan — the metadata
   //      commit validated every other row at its own version; column
-  //      mapping drift is free (physical names are frozen at birth);
+  //      mapping drift is free (physical names are frozen at birth).
+  //      Files a writer streamed straight to `data/` are staged under
+  //      NO contract ([[Unproven]]): whenever the table has one, they
+  //      prove here against the head's (the CREATE-time one before the
+  //      first commit);
   //   4. the change's own check ([[Rebase.admits]]) accepts the files
   //      the winner ADDED: a predicate-scoped rewrite proves none holds
   //      an in-scope row, a keyed write that none holds one of its keys
-  //      — scans over only the winner's delta, O(winner's commit).
+  //      — scans over only the winner's delta, O(winner's commit). A
+  //      [[TableTxn]] bundle runs every action's check: each keyed merge
+  //      its own key set (its source stays pinned until the claim).
   //
   // Appends and overwrites are BLIND (their staged files are
   // head-independent: only rule 3 applies); metadata-only commits re-run
@@ -2251,9 +2258,7 @@ object ManifestTable {
     * inherited. */
   private def successor(path: String, head: Option[Manifest], next: Long,
       c: Change, rebasedFrom: Option[Long] = None): Manifest = {
-    val h = head.getOrElse(Manifest(0L, Seq.empty, None, 0L,
-      constraints = GraftCatalog.readDeclaredConstraints(Paths.get(path)),
-      generated = GraftCatalog.readDeclaredGenerated(Paths.get(path))))
+    val h = head.getOrElse(genesis(path))
     // per-file maps update by the change alone — O(change), not
     // O(table): render writes entries for live files only
     def carry[V](m: Map[String, V]) = if (c.replace) Map.empty[String, V]
@@ -2318,7 +2323,8 @@ object ManifestTable {
     * and a moved head is judged by `rebase`. Without a base the commit
     * is blind and reads the head on every attempt. `stagedUnder` is the
     * contract the staged rows validated against when it is not the
-    * base's (None without a base: no re-validation context). */
+    * base's ([[Unproven]] for rows no contract checked; None without a
+    * base: no re-validation context). */
   private def claim(path: String, base: Option[Manifest], c: Change,
       rebase: Rebase = Rebase.Blind, stagedUnder: Option[Manifest] = None,
       replay: Boolean = false): Long = {
@@ -2354,7 +2360,7 @@ object ManifestTable {
           rebase.admits(h, h.files.filterNot(baseFiles)).foreach(conflict)
           b.version
         }
-      reprove(path, under, head, c.added, proven)
+      reprove(path, under, head, c.added, proven, c.mapping)
       val next = head.fold(1L)(_.version + 1)
       beforePublishHook() // race-injection seam (specs/gates; no-op live)
       try {
@@ -2375,29 +2381,46 @@ object ManifestTable {
     scala.collection.mutable.Set[(Seq[String], Seq[(String, String)])]
   private def noneProven: Proven = scala.collection.mutable.Set.empty
 
+  /** `stagedUnder` of files a writer streamed straight to `data/` (the
+    * streaming sink, RTAS, SQL UPDATE/MERGE delta writes): no contract
+    * checked their rows, so rule 3 proves them against the table's. */
+  private val Unproven = Manifest(0L, Seq.empty, None, 0L)
+
   /** Rule 3 of the commit loop: rows staged under `under`'s contract
-    * re-prove against `head`'s when a constraint/generated-column commit
-    * landed in between — one scan over only the `added` files. A
-    * violation is a [[CommitConflict]]; nothing is claimed. */
+    * re-prove against `head`'s (the CREATE-time contract before the first
+    * commit) when the two differ — one scan over only the `added` files,
+    * read under `mapping` when the commit re-declares it. A violation of
+    * rows staged under a drifted contract is a [[CommitConflict]] (a
+    * re-run re-stages under the new one); of [[Unproven]] rows, a plain
+    * refusal. Either way nothing is claimed. */
   private def reprove(path: String, under: Option[Manifest],
-      head: Option[Manifest], added: Seq[String], proven: Proven): Unit =
+      head: Option[Manifest], added: Seq[String], proven: Proven,
+      mapping: Option[(Map[String, String], Seq[String])] = None): Unit =
     for {
       u <- under
-      h <- head
+      h = head.getOrElse(genesis(path))
       contract = (h.constraints, h.generated)
       if added.nonEmpty && contract != ((u.constraints, u.generated)) &&
         !proven(contract)
     } {
-      // drift with rows staged: validation is mandatory — a missing
-      // session must fail the commit, not skip the exact check
-      val spark = requireSession(s"a contract commit landed at $path " +
-        "while this write was staging")
-      if (!filesSatisfy(spark, path, added, h.constraints, h.generated,
-          h.renames, h.droppedCols))
+      // validation is mandatory — a missing session must fail the
+      // commit, not skip the exact check
+      val spark = requireSession(s"rows written to $path must be proven " +
+        "against the table contract")
+      val (renames, dropped) = mapping.getOrElse((h.renames, h.droppedCols))
+      if (!CommitProfile.timed("validateStaged")(filesSatisfy(spark, path,
+          added, h.constraints, h.generated, renames, dropped))) {
+        val contractText = (h.constraints ++ h.generated.map {
+          case (c, e) => s"$c = $e" }).mkString("[", "; ", "]")
+        if (u eq Unproven) throw new IllegalArgumentException(
+          s"rows written to $path violate the table contract $contractText " +
+            "(CHECK constraints must evaluate to true, not NULL; a " +
+            "generated column must equal its expression)")
         throw new CommitConflict(s"commit conflict at $path: a " +
           "constraint/generated-column commit landed while this write was " +
-          "staging, and the staged rows do not satisfy the new contract " +
-          h.constraints.mkString("[", "; ", "]"))
+          s"staging, and the staged rows do not satisfy the new contract " +
+          contractText)
+      }
       proven += contract
     }
 
@@ -2726,16 +2749,20 @@ object ManifestTable {
   // entire bundle — adopted metadata-only iff the winner provably
   // touched nothing the txn consumed (txn-removed inputs still live at
   // the head, delete ledger / merge keys untouched, no winner-added row
-  // inside any txn rewrite scope, staged rows re-proven against a
-  // drifted contract). Any doubt = refuse loudly; the caller re-runs
-  // the bundle. Replay is bundle-level through `commitId`.
+  // inside any txn rewrite scope, none holding a key of any txn merge,
+  // staged rows re-proven against a drifted contract). Any doubt =
+  // refuse loudly; the caller re-runs the bundle. Replay is bundle-level
+  // through `commitId`.
 
   /** Open a transaction on `path`. Actions stage immediately; nothing
     * is visible until [[TableTxn.commit]]. Actions after commit throw.
-    * V1 scope: append / deleteWhere / updateWhere / replaceWhere /
-    * setConstraints — no schema evolution, no MoR merge, no branch
-    * routing inside a bundle (each of those is its own versioned
-    * commit with its own conflict rules). */
+    * Scope: append / deleteWhere / updateWhere / replaceWhere / merge /
+    * setConstraints — no MoR merge and no branch routing inside a
+    * bundle (each is its own versioned commit with its own conflict
+    * rules); schema evolution only through the standalone
+    * [[ManifestTable.merge]], which runs as a one-action bundle. A
+    * bundle carrying keyed merges rebases across a winner whose added
+    * files hold none of their keys and refuses on any key overlap. */
   def newTransaction(spark: SparkSession, path: String,
       commitId: Option[String] = None): TableTxn = {
     requireNoWapSession(spark, "newTransaction")
@@ -2744,6 +2771,9 @@ object ManifestTable {
 
   final class TableTxn private[ManifestTable] (spark: SparkSession,
       path: String, commitId: Option[String],
+      // a streaming writer's epoch: recorded in the txn ledger, replayed
+      // at open ([[ManifestTable.merge]]'s `appTxn`)
+      appTxn: Option[(String, Long)] = None,
       // re-check the commit id at commit (a bundle may stay open long);
       // a one-action standalone rewrite checks once, at open
       replayAtCommit: Boolean = true) {
@@ -2751,23 +2781,23 @@ object ManifestTable {
 
     private val base: Manifest = latest(path).getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
+    // base plus every action so far: actions stage under its contract
+    // (the txn may tighten it); drift against the head re-proves at the
+    // claim
     private var pending: Manifest = base
     // replay detected at OPEN: every action no-ops (zero re-staged
     // bytes — the single-op replay fast paths' economy, bundle-level)
     private val replayedAtOpen: Option[Long] =
-      commitId.flatMap(landedAt(path, _))
+      mergeReplayed(path, commitId, appTxn)
     private var committed: Option[Long] = replayedAtOpen
     // every rewrite action's predicate: the bundle-level delta-safety
     // scan at rebase must prove the winner added no row in ANY of them
     private val rewriteScopes =
       scala.collection.mutable.Buffer.empty[org.apache.spark.sql.Column]
     private var consChanged = false
-    // a keyed merge's scope is a KEY SET, not a predicate — the rebase
-    // delta-safety scan cannot prove a winner's rows key-disjoint
-    // against it, so a merge-carrying bundle refuses rebase across any
-    // winner data addition (conservative; the caller re-runs)
-    private var hasMerge = false
-    private var keysSet: Option[Seq[String]] = None
+    // every merge's pinned source: its key set is the merge's scope,
+    // which the rebase proves the winner's added files free of
+    private val merges = scala.collection.mutable.Buffer.empty[KeyedSource]
 
     /** True = this action should silently no-op (replayed bundle);
       * throws when the CALLER's own commit() already ran (re-use of a
@@ -2783,14 +2813,6 @@ object ManifestTable {
       * What the next action (and the caller's own validation) sees. */
     def read(): DataFrame = reconcile(spark, path, pending, pending.files)
 
-    /** Pre-apply the PENDING contract (the txn may have tightened it
-      * after open — [[stage]] only knows the committed head's), then
-      * stage through the shared layout-aware writer. */
-    private def stagePending(df: DataFrame): Seq[String] =
-      stage(enforceConstraints(
-        applyGenerated(df, pending.generated), pending.constraints), path,
-        latest(path))
-
     private def fold(untouched: Seq[String], staged: Seq[String]): Unit = {
       val (st, rws) = footerHarvest(path, staged)
       val nextSeq = base.version + 1 // retargeted at publish if the slot moves
@@ -2805,7 +2827,7 @@ object ManifestTable {
     }
 
     def append(df: DataFrame): this.type = { if (skipAction()) return this
-      fold(pending.files, stagePending(df)); this }
+      fold(pending.files, stage(df, path, Some(pending))); this }
 
     def deleteWhere(cond: org.apache.spark.sql.Column,
         scopeConds: Seq[graft.conditions.Condition] = Seq.empty): this.type =
@@ -2829,43 +2851,53 @@ object ManifestTable {
       * never outrank the first's upserts (MoR hiding is strictly
       * dseq > fseq). The CoW shape sidesteps the ordering entirely:
       * files holding a source key (found by ONE exact semi-probe scan,
-      * names only) rewrite with those keys folded out, upserts stage on
-      * top, and the pending ledger keeps covering the untouched files.
-      * Correction-batch economics: touched files are bounded by the
-      * source's key spread, everything else carries byte-identical. */
+      * names only) rewrite with those keys folded out, the upserts
+      * stage with them in ONE staging job, and the pending ledger keeps
+      * covering the untouched files. Correction-batch economics: touched
+      * files are bounded by the source's key spread, everything else
+      * carries byte-identical. The source stays pinned until the bundle
+      * commits: its key set is what the rebase proves a winner's added
+      * files free of. */
     def merge(source: DataFrame, keyCols: Seq[String],
-        deleteWhen: Option[org.apache.spark.sql.Column] = None): this.type = {
+        deleteWhen: Option[org.apache.spark.sql.Column] = None): this.type =
+      keyedMerge(source, keyCols, deleteWhen, evolveSchema = false)
+
+    /** [[merge]], with [[ManifestTable.merge]]'s schema evolution: extra
+      * source columns land on the staged rows, the kept rows of touched
+      * files null-filled. */
+    private[ManifestTable] def keyedMerge(source: DataFrame,
+        keyCols: Seq[String], deleteWhen: Option[org.apache.spark.sql.Column],
+        evolveSchema: Boolean): this.type = {
       if (skipAction()) return this
-      import org.apache.spark.sql.functions.{broadcast, input_file_name}
-      withKeyedSource(source, read().columns.toSeq, pending.mergeKeys,
-          keyCols, deleteWhen) { s =>
-        // sized by the key set's bytes (the CDF pin's rule): a few
-        // blocks for a correction batch, never one serial task at scale
-        val srcKeys = s.keys.coalesce(stageTasks(s.keys)).localCheckpoint()
-        try {
-          val touched =
-            if (pending.files.isEmpty) Set.empty[String]
-            else frameOf(spark, path, Some(pending), pending.files,
-                physicalSchemaAt(spark, path, base))
-              .withColumn("__file", input_file_name())
-              .join(broadcast(srcKeys), keyCols, "left_semi")
-              .select(col("__file")).distinct().collect()
-              .map(r => baseName(r.getString(0))).toSet
-          val untouched = pending.files.filterNot(f => touched(baseName(f)))
-          val rewriteStaged =
-            if (touched.isEmpty) Seq.empty[String]
-            else stagePending(reconcile(spark, path, pending,
-                pending.files.filter(f => touched(baseName(f))))
-              .join(broadcast(srcKeys), keyCols, "left_anti"))
-          val upsertStaged = stagePending(s.upserts)
-          fold(untouched, rewriteStaged ++ upsertStaged)
-          if (pending.mergeKeys != keyCols) {
-            pending = pending.copy(mergeKeys = keyCols)
-            keysSet = Some(keyCols)
-          }
-          hasMerge = true
-          this
-        } finally graft.operators.IndexScope.release(srcKeys)
+      import org.apache.spark.sql.functions.input_file_name
+      val s = keyedSource(source, read().columns.toSeq, pending.mergeKeys,
+        keyCols, deleteWhen, evolveSchema)
+      try {
+        val touched =
+          if (pending.files.isEmpty) Set.empty[String]
+          else frameOf(spark, path, Some(pending), pending.files,
+              physicalSchemaAt(spark, path, base))
+            .withColumn("__file", input_file_name())
+            .join(s.keys, keyCols, "left_semi")
+            .select(col("__file")).distinct().collect()
+            .map(r => baseName(r.getString(0))).toSet
+        val (rewritten, untouched) =
+          pending.files.partition(f => touched(baseName(f)))
+        // reconcile: a row the ledger hides must not resurrect
+        val kept =
+          if (rewritten.isEmpty) read().limit(0)
+          else reconcile(spark, path, pending, rewritten)
+            .join(s.keys, keyCols, "left_anti")
+        val padded = kept.select(s.cols.map(c =>
+          (if (kept.columns.contains(c)) col(c)
+           else lit(null).cast(source.schema(c).dataType)).as(c)): _*)
+        fold(untouched, stage(padded.unionByName(s.upserts), path,
+          Some(pending)))
+        pending = pending.copy(mergeKeys = keyCols)
+        merges += s
+        this
+      } catch { case e: Throwable =>
+        graft.operators.IndexScope.release(s.pin); throw e
       }
     }
 
@@ -2940,12 +2972,12 @@ object ManifestTable {
               m.get(c).map(nc => when(matches, nc).otherwise(col(c)).as(c))
                 .getOrElse(col(c))).toIndexedSeq: _*)
           }
-          stagePending(rewritten)
+          stage(rewritten, path, Some(pending))
         }
       val insertStaged = insert.map { ins =>
-        stagePending(ins.where(gated(assert_true(matches,
+        stage(ins.where(gated(assert_true(matches,
           lit("replaceWhere: an inserted row does not satisfy the " +
-            "replaced predicate")).isNull)))
+            "replaced predicate")).isNull)), path, Some(pending))
       }.getOrElse(Seq.empty)
       fold(untouched, rewriteStaged ++ insertStaged)
       this
@@ -2954,7 +2986,7 @@ object ManifestTable {
     /** Publish the whole bundle as ONE version. Idempotent through
       * `commitId`; a moved head triggers the whole-bundle rebase or a
       * loud refusal ([[CommitConflict]]) — never a partial landing. */
-    def commit(): Long = {
+    def commit(): Long = try {
       committed.foreach(v => return v)
       if (pending == base) { // every action no-opped: nothing to commit
         committed = Some(base.version); return base.version
@@ -2969,43 +3001,48 @@ object ManifestTable {
             head.generated != base.generated))
           Some("both this bundle and a concurrent commit changed the " +
             "table contract")
-        else if (hasMerge && winnerAdded.nonEmpty)
-          Some("the bundle carries a keyed merge and a concurrent commit " +
-            "added rows - their keys cannot be proven disjoint; re-run " +
-            "the bundle")
-        else if (rewriteScopes.nonEmpty && winnerAdded.nonEmpty &&
-            frameOf(spark, path, Some(head), winnerAdded,
-              physicalSchemaAt(spark, path, head))
-              .where(rewriteScopes.map(c => coalesce(c, lit(false)))
-                .reduce(_ || _)).limit(1).collect().nonEmpty)
-          Some("a concurrent commit added rows inside this bundle's " +
-            "rewrite scope - re-run the bundle")
-        // drift in the OTHER direction too: the bundle's new contract
-        // must hold for rows the winner added — the delta proof the
-        // standalone setConstraints runs on a lost race
-        else if (consChanged && winnerAdded.nonEmpty &&
-            !filesSatisfy(spark, path, winnerAdded, pending.constraints,
-              pending.generated, head.renames, head.droppedCols))
-          Some("rows a concurrent commit added violate this bundle's new " +
-            "contract " + pending.constraints.mkString("[", "; ", "]"))
-        else None
+        else if (winnerAdded.isEmpty) None
+        // a merge's scope is its key set: the winner's rows must hold
+        // none of its keys (its source stays pinned for this proof)
+        else merges.iterator.flatMap(s => keyFree(spark, path, s.keys,
+            pending.mergeKeys)(head, winnerAdded)).nextOption().orElse(
+          if (rewriteScopes.nonEmpty &&
+              frameOf(spark, path, Some(head), winnerAdded,
+                physicalSchemaAt(spark, path, head))
+                .where(rewriteScopes.map(c => coalesce(c, lit(false)))
+                  .reduce(_ || _)).limit(1).collect().nonEmpty)
+            Some("a concurrent commit added rows inside this bundle's " +
+              "rewrite scope - re-run the bundle")
+          // drift in the OTHER direction too: the bundle's new contract
+          // must hold for rows the winner added — the delta proof the
+          // standalone setConstraints runs on a lost race
+          else if (consChanged &&
+              !filesSatisfy(spark, path, winnerAdded, pending.constraints,
+                pending.generated, head.renames, head.droppedCols))
+            Some("rows a concurrent commit added violate this bundle's new " +
+              "contract " + pending.constraints.mkString("[", "; ", "]"))
+          else None)
       val v = claim(path, Some(base), Change(added = addedByTxn,
           stats = addedByTxn.flatMap(f => pending.stats.get(f).map(f -> _)).toMap,
           rows = addedByTxn.flatMap(f => pending.rows.get(f).map(f -> _)).toMap,
           removed = removedByTxn,
           constraints = if (consChanged) Some(pending.constraints) else None,
-          mergeKeys = keysSet, commitId = commitId),
+          mergeKeys = Some(pending.mergeKeys), txn = appTxn,
+          commitId = commitId),
         Rebase.rewrite(removedByTxn, admits), replay = replayAtCommit)
       committed = Some(v)
       v
-    }
+    } finally merges.foreach(s => graft.operators.IndexScope.release(s.pin))
   }
 
-  /** Run a one-action [[TableTxn]] — the standalone row-level rewrites —
-    * reopened on the head and re-run while its claim conflicts. */
+  /** Run a one-action [[TableTxn]] — the standalone row-level rewrites
+    * and CoW merge — reopened on the head and re-run while its claim
+    * conflicts. */
   private def rewriteTxn(spark: SparkSession, path: String,
-      commitId: Option[String])(action: TableTxn => Unit): Long = rerun {
-    val txn = new TableTxn(spark, path, commitId, replayAtCommit = false)
+      commitId: Option[String], appTxn: Option[(String, Long)] = None)(
+      action: TableTxn => Unit): Long = rerun {
+    val txn = new TableTxn(spark, path, commitId, appTxn,
+      replayAtCommit = false)
     action(txn)
     txn.commit()
   }
@@ -3285,14 +3322,13 @@ object ManifestTable {
     * a duplicate key would make "the" update ambiguous (checked, loud).
     *
     * Steps: (1) semi-join target×source finds touched files — only file
-    * NAMES reach the driver; (2) touched files are re-read (a scan of
-    * just those files), tombstone keys anti-joined away, upserts
-    * left-joined in (source wins); (3) inserts = source rows matching no
-    * touched row — by construction untouched files hold no source key,
-    * so this equals an anti-join against the whole target; (4) rewritten
-    * + inserted rows stage as new files; the new manifest = untouched
-    * files + staged files, published with the same optimistic lock
-    * (conflict ⇒ throw, staged files become vacuum-able orphans).
+    * NAMES reach the Spark driver; (2) the touched files' reconciled rows
+    * anti-join every source key away and the upserts are added: by
+    * construction untouched files hold no source key, so that row set,
+    * staged as new files, replaces the touched files. It runs as a
+    * one-action [[TableTxn]]: a winner whose added files hold none of the
+    * source's keys (and that left the touched files and the ledger
+    * alone) is adopted metadata-only; any other re-runs the merge.
     *
     * Returns the new version. */
   def merge(spark: SparkSession, path: String, source: DataFrame,
@@ -3307,8 +3343,8 @@ object ManifestTable {
       evolveSchema: Boolean = false,
       appTxn: Option[(String, Long)] = None): Long = {
     requireNoWapSession(spark, "merge")
-    rerun(mergeAttempt(spark, path, source, keyCols,
-      deleteWhen, commitId, evolveSchema, appTxn))
+    rewriteTxn(spark, path, commitId, appTxn)(
+      _.keyedMerge(source, keyCols, deleteWhen, evolveSchema))
   }
 
   /** Do `files`' rows satisfy `cons` and `gens` (the head's contract)?
@@ -3374,7 +3410,8 @@ object ManifestTable {
   private def landMoR(spark: SparkSession, path: String,
       base: Option[Manifest], upserts: Seq[String], delFiles: Seq[String],
       delKeys: => DataFrame, keyCols: Seq[String],
-      appTxn: Option[(String, Long)], commitId: Option[String]): Long = {
+      appTxn: Option[(String, Long)], commitId: Option[String],
+      stagedUnder: Option[Manifest] = None): Long = {
     val (upStats, upRows) = footerHarvest(path, upserts)
     val (delStats, delRows) = footerHarvest(path, delFiles)
     val dseq = base.fold(0L)(_.version) + 1
@@ -3384,10 +3421,12 @@ object ManifestTable {
         commitId = commitId),
       Rebase.rewrite(base.fold(Set.empty[String])(_.files.toSet),
         if (delFiles.isEmpty) (_, _) => None
-        else keyFree(spark, path, delKeys, keyCols)))
+        else keyFree(spark, path, delKeys, keyCols)),
+      stagedUnder = stagedUnder)
   }
 
-  /** The version a replayed main-table merge already landed at: the txn
+  /** The version a replayed main-table merge (or [[TableTxn]] bundle)
+    * already landed at: the txn
     * ledger answers O(1) from the head (a ledger hit whose version has
     * been expired answers the head rather than re-merging); without a
     * ledger, the commit-id scan stays the fallback for one-shot jobs. A
@@ -3400,75 +3439,6 @@ object ManifestTable {
       Some(commitId.flatMap(landedAt(path, _)).getOrElse(latestVersion(path)))
     else if (appTxn.isDefined) None
     else commitId.flatMap(landedAt(path, _))
-
-  private def mergeAttempt(spark: SparkSession, path: String, source: DataFrame,
-      keyCols: Seq[String],
-      deleteWhen: Option[org.apache.spark.sql.Column],
-      commitId: Option[String], evolveSchema: Boolean = false,
-      appTxn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions._
-    mergeReplayed(path, commitId, appTxn).foreach(return _)
-    val base = latest(path).getOrElse(
-      throw new IllegalStateException(s"no committed version at $path"))
-    val target = read(spark, path, Some(base.version))
-    withKeyedSource(source, target.columns.toSeq, base.mergeKeys, keyCols,
-        deleteWhen, evolveSchema) { s =>
-      val allCols = s.cols
-      def pad(df: DataFrame): DataFrame = df.select(allCols.map(c =>
-        (if (df.columns.contains(c)) col(c)
-         else lit(null).cast(source.schema(c).dataType)).as(c)): _*)
-
-      // (1) which files contain a source key? (file names only — the
-      // driver never holds data rows)
-      val withFile = frameOf(spark, path, Some(base), base.files,
-          physicalSchemaAt(spark, path, base))
-        .withColumn("__file", input_file_name())
-      val touched = withFile.join(s.keys, keyCols, "left_semi")
-        .select(col("__file")).distinct().collect()
-        .map(r => baseName(r.getString(0))).toSet
-
-      // (2) rewrite ONLY the touched files
-      // reconcile: a DV-hidden row in a touched file must not resurrect
-      // through the rewrite
-      val touchedRows =
-        if (touched.isEmpty) pad(target.limit(0))
-        else pad(reconcile(spark, path, base,
-          base.files.filter(f => touched(baseName(f)))))
-      val afterDelete = touchedRows.join(
-        s.tombstones.select(keyCols.map(col): _*), keyCols, "left_anti")
-      val u = s.upserts.select(
-        keyCols.map(col) :+ struct(allCols.map(col): _*).as("__u"): _*)
-      // (3) updates AND inserts from ONE full-outer join: a key on both
-      // sides takes the upsert's values (update), a key only in the
-      // target survives unchanged, a key only in the source is an insert
-      // — one SURVIVING-row row set in one pass where the old
-      // left_outer(rewrites) + left_anti(inserts) pair referenced (and so
-      // re-executed) the touched-file read twice. Semantics unchanged: a
-      // key deleted and re-inserted in the same batch really re-inserts
-      // (its row left afterDelete via the tombstone anti-join, so the
-      // source side is unmatched), and untouched files hold no source key
-      // by construction of `touched`.
-      val rewritten = afterDelete.join(u, keyCols, "full_outer")
-        .select(allCols.map(c => when(col("__u").isNotNull, col(s"__u.$c"))
-          .otherwise(col(c)).as(c)): _*)
-
-      // (4) stage + claim: untouched files CARRY their stats, seqs, and
-      // any delete files that apply to them; rewritten files sit at the
-      // claimed seq, above every existing delete, so old deletes can never
-      // re-hide rewritten rows. A merge's scope is its touched files PLUS
-      // its source keys: a winner that touched none of our files, landed
-      // no delete, and added no source key cannot change this merge's
-      // result under either ordering — the staged rewrite adopts
-      // metadata-only.
-      val staged = stage(rewritten, path, Some(base))
-      val (stagedStats, stagedRows) = footerHarvest(path, staged)
-      val consumed = base.files.filter(f => touched(baseName(f))).toSet
-      claim(path, Some(base), Change(added = staged, stats = stagedStats,
-          rows = stagedRows, removed = consumed, mergeKeys = Some(keyCols),
-          txn = appTxn, commitId = commitId),
-        Rebase.rewrite(consumed, keyFree(spark, path, s.keys, keyCols)))
-    }
-  }
 
   /** MERGE-ON-READ MERGE — same semantics as [[merge]] (keyed upsert +
     * tombstones, source wins), different cost model: instead of
@@ -3539,11 +3509,12 @@ object ManifestTable {
           latest(path), (up: Seq[String], del: Seq[String], _: DataFrame) =>
             commitToRef(path, name, up, del, Some(keyCols), commitId).toLong)
     }
-    withKeyedSource(source, target.columns.toSeq, tableKeys, keyCols,
-        deleteWhen, evolveSchema) { s =>
+    val s = keyedSource(source, target.columns.toSeq, tableKeys, keyCols,
+      deleteWhen, evolveSchema)
+    try {
       val delFiles = stageDeletes(s.keys, path)
       land(stage(s.upserts, path, under), delFiles, s.keys)
-    }
+    } finally graft.operators.IndexScope.release(s.pin)
   }
 
   /** Stage merge keys as delete files (named `del-*` so a listing reads
@@ -3584,46 +3555,14 @@ object ManifestTable {
     dataDir(path)
   }
 
-  /** CHECK-constraint validation over freshly staged files only —
-    * O(delta), never the table. Throws on the first violating row. */
-  private def validateStagedConstraints(spark: SparkSession, path: String,
-      files: Seq[String]): Unit = CommitProfile.timed("validateStaged") {
-    import org.apache.spark.sql.functions._
-    val cons = constraints(path)
-    val gens = generatedColumns(path)
-    if (files.isEmpty || (cons.isEmpty && gens.isEmpty)) return
-    val staged = footerFrame(spark, path, files)
-    if (cons.nonEmpty) {
-      val bad = staged.where(!cons.map(c => gated(expr(c))).reduce(_ && _))
-        .limit(1).collect()
-      require(bad.isEmpty,
-        s"row ${bad.headOption.orNull} violates table constraints " +
-          cons.mkString("[", "; ", "]"))
-    }
-    // GENERATED columns on directly-staged files (SQL UPDATE/MERGE delta
-    // writes, the streaming sink): the bytes are already on disk, so a
-    // stale or absent value cannot be recomputed here — mismatches are
-    // REJECTED loudly (assign the generated column its expression in the
-    // statement). stage()-routed writes never hit this: applyGenerated
-    // computed/validated before the bytes were written.
-    val present = gens.filter { case (c, _) => staged.columns.contains(c) }
-    if (present.nonEmpty) {
-      val badG = staged.where(!present.map { case (c, e) =>
-        col(c) <=> expr(e) }.reduce(_ && _)).limit(1).collect()
-      require(badG.isEmpty,
-        s"row ${badG.headOption.orNull} violates generated columns " +
-          present.map { case (c, e) => s"$c = $e" }.mkString("[", "; ", "]") +
-          " (delta writes cannot recompute them — assign the expression explicitly)")
-    }
-  }
-
   /** Land ALREADY-WRITTEN data files as one append (or replace) commit —
     * the commit half of [[append]]/[[overwrite]] for writers that
     * streamed their files directly (the catalog's native streaming
-    * sink): per-epoch idempotence rides the ordinary `commitId` replay
-    * check, constraints validate O(new files) first. Returns the landed
-    * version; a REPLAYED commit id returns the original version and the
-    * caller owns deleting its redundant staged files. */
+    * sink, RTAS): per-epoch idempotence rides the ordinary `commitId`
+    * replay check, and the claim proves the [[Unproven]] rows against
+    * the table contract, O(new files). Returns the landed version; a
+    * REPLAYED commit id returns the original version and the caller
+    * owns deleting its redundant staged files. */
   private[sources] def commitStagedFiles(spark: SparkSession, path: String,
       files: Seq[String], replace: Boolean, commitId: Option[String],
       appTxn: Option[(String, Long)] = None,
@@ -3631,10 +3570,8 @@ object ManifestTable {
     // streaming epochs and RTAS replace data directly; neither can be
     // WAP-isolated (epoch idempotence rides the COMMIT txn ledger)
     requireNoWapSession(spark, "a streaming epoch / CTAS commit")
-    val under = latest(path) // head the validation below runs against
-    validateStagedConstraints(spark, path, files)
     commit(path, files, replace, commitId, appTxn, resetMapping,
-      stagedUnder = under)
+      stagedUnder = Some(Unproven))
   }
 
   /** The highest epoch `app` has applied to this table (Delta's
@@ -3660,9 +3597,9 @@ object ManifestTable {
     * instead of being hidden by its delete file. None (an empty table
     * at scan time) lands on the head.
     *
-    * Validation is O(delta), reading ONLY the staged files: CHECK
-    * constraints and duplicate-upsert-key probes run as one scan over
-    * the new upserts — never the table. */
+    * Validation is O(delta), reading ONLY the staged files: the
+    * duplicate-upsert-key probe here, and the claim's proof of the
+    * [[Unproven]] upserts against the table contract — never the table. */
   private[sources] def commitStagedDelta(spark: SparkSession, path: String,
       upsertFiles: Seq[String], deleteFiles: Seq[String],
       keyCols: Seq[String], baseVersion: Option[Long]): Long = {
@@ -3671,15 +3608,16 @@ object ManifestTable {
     require(keyCols.nonEmpty, "delta commit needs the table's merge keys")
     if (upsertFiles.isEmpty && deleteFiles.isEmpty)
       return latest(path).map(_.version).getOrElse(0L)
-    validateStagedConstraints(spark, path, upsertFiles)
     // write-to-branch session: the SQL UPDATE/MERGE's discovery scan
     // already resolved the BRANCH snapshot (the catalog's read door),
     // and its staged delta files ARE the branch-DML commit shape —
-    // publish them as ONE branch commit instead of claiming a version
+    // publish them as ONE branch commit instead of claiming a version,
+    // its rows proven against main's contract as branch DML stages under
     branchSession(spark).foreach { name =>
       val ks = branchDmlKeys(path, name)
       require(ks == keyCols, s"branch '$name' DML is keyed on " +
         s"${ks.mkString(",")}; delta write on ${keyCols.mkString(",")}")
+      reprove(path, Some(Unproven), latest(path), upsertFiles, noneProven)
       return commitToRef(path, name, upsertFiles, deleteFiles, Some(keyCols),
         None).toLong
     }
@@ -3697,7 +3635,7 @@ object ManifestTable {
         .mkString("(", ",", ")")} rejected")
     landMoR(spark, path, base, upsertFiles, deleteFiles,
       footerFrame(spark, path, deleteFiles),
-      keyCols, None, None)
+      keyCols, None, None, stagedUnder = Some(Unproven))
   }
 
   /** Whether a version is a DATA change (true) or a maintenance commit

@@ -552,23 +552,34 @@ class BranchSpec extends SparkSpecBase {
       .collect().toSet == first)
   }
 
-  test("the shared key split still sizes TableTxn.merge's key set by " +
-      "stageTasks, not one task") {
+  test("no stage of TableTxn.merge runs as one task over a " +
+      "multi-partition key set") {
     val path = freshTable()
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    // every byte is over the target: the key set keeps all its partitions
+    // every byte is over the target: staging keeps every partition
     s2.conf.set("spark.graft.stage.targetFileBytes", "1")
     val src = s2.range(0, 20, 1, 2)
       .select(col("id").as("k"), lit(5L).as("g"))
     val jobs = JobProbe.jobsOf(s2) {
       ManifestTable.newTransaction(s2, path).merge(src, Seq("k")).commit()
     }
-    // the key set's pin is the txn merge's only coalesce
-    val coalesced = jobs.flatMap(_.stageInfos)
-      .filter(_.rddInfos.exists(_.name == "CoalescedRDD"))
-    assert(coalesced.nonEmpty && coalesced.forall(_.numTasks > 1),
-      coalesced.map(st => st.name -> st.numTasks))
+    // the key set derives from the pinned two-partition source: within
+    // each stage, no RDD on that lineage may collapse to one partition
+    // (a limit probe's partial scan runs fewer tasks, never fewer
+    // partitions)
+    val stages = jobs.flatMap(_.stageInfos)
+    val collapsed = stages.flatMap { st =>
+      val byId = st.rddInfos.map(r => r.id -> r).toMap
+      def fromSource(r: org.apache.spark.storage.RDDInfo): Boolean =
+        r.name == "LocalCheckpointRDD" ||
+          r.parentIds.flatMap(byId.get).exists(fromSource)
+      st.rddInfos.filter(r => r.numPartitions == 1 && fromSource(r))
+        .map(r => s"${st.name}: ${r.name}")
+    }
+    assert(stages.exists(_.rddInfos.exists(_.name == "LocalCheckpointRDD")),
+      "the merge reads its pinned source")
+    assert(collapsed.isEmpty, collapsed)
     val t = ManifestTable.read(spark, path)
     assert(t.count() == 100 &&
       t.where(col("k") < 20 && col("g") === 5L).count() == 20)

@@ -173,6 +173,11 @@ class CommitLoopSpec extends SparkSpecBase {
       ManifestTable.TxnWrite(batch(200, 240), other)))) == 4)
     assert(ManifestTable.read(spark, path).count() == 280L)
     assert(ManifestTable.read(spark, other).count() == 240L)
+    // a one-action rewrite reads it once, at open: it stages under its
+    // pending manifest and claims against its base
+    assert(headReads(ManifestTable.deleteWhere(spark, path,
+      col("k") >= 270)) == 1)
+    assert(ManifestTable.read(spark, path).count() == 270L)
   }
 
   test("the hook seam: append and overwrite") {

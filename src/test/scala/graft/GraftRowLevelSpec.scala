@@ -281,4 +281,82 @@ class GraftRowLevelSpec extends SparkSpecBase {
     assert(rows() == Map(1L -> 111.0, 2L -> -2.0, 3L -> 30.0, 4L -> 40.0),
       "both the racing append and the UPDATE must land")
   }
+
+  /** Every message of `e`'s cause chain. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).mkString(" <- ")
+
+  test("NULL is a CHECK violation for SQL UPDATE, as for the path API") {
+    val wh = freshWh()
+    val s2 = catalogSession(wh)
+    val path = s"$wh/t"
+    s2.sql("CREATE TABLE graft.t (k BIGINT, v DOUBLE) TBLPROPERTIES ('merge.keys'='k')")
+    s2.sql("INSERT INTO graft.t VALUES (1, 1.0), (2, 2.0)")
+    ManifestTable.setConstraints(s2, path, Seq("v >= 0"))
+    val vs = ManifestTable.versions(path)
+    val e = intercept[Exception](
+      s2.sql("UPDATE graft.t SET v = NULL WHERE k = 1"))
+    assert(messages(e).contains("violate the table contract [v >= 0]"),
+      messages(e))
+    assert(ManifestTable.versions(path) == vs, "the refused UPDATE landed")
+    intercept[Exception](ManifestTable.updateWhere(s2, path,
+      col("k") === 1L, Map("v" -> lit(null).cast("double"))))
+    assert(s2.sql("SELECT count(*) FROM graft.t WHERE v IS NULL")
+      .head().getLong(0) == 0L)
+  }
+
+  test("a streaming-sink epoch carrying a NULL under CHECK (x >= 0) does not commit") {
+    val wh = freshWh()
+    val s2 = catalogSession(wh)
+    import s2.implicits._
+    val src = s"$wh/src"
+    val out = s"$wh/out"
+    val ck = Files.createTempDirectory("graft-rl-ck3-").toString
+    ManifestTable.append(Seq(Some(1), None).toDF("x"), src)
+    s2.sql("CREATE TABLE graft.out (x INT)")
+    ManifestTable.overwrite(Seq(0).toDF("x"), out)
+    ManifestTable.setConstraints(s2, out, Seq("x >= 0"))
+    val vs = ManifestTable.versions(out)
+    val q = s2.readStream.format("graft-table").load(src)
+      .writeStream.option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .toTable("graft.out")
+    val e = intercept[Exception](q.awaitTermination())
+    assert(messages(e).contains("violate the table contract [x >= 0]"),
+      messages(e))
+    assert(ManifestTable.versions(out) == vs, "the NULL epoch committed")
+  }
+
+  test("a CTAS whose rows carry a NULL under its declared CHECK is refused") {
+    val wh = freshWh()
+    val s2 = catalogSession(wh)
+    import s2.implicits._
+    Seq((1L, Some(1.0)), (2L, None)).toDF("k", "v").createOrReplaceTempView("nsrc")
+    val e = intercept[Exception](s2.sql("CREATE TABLE graft.c " +
+      "TBLPROPERTIES ('check.pos'='v >= 0') AS SELECT * FROM nsrc"))
+    assert(messages(e).contains("violate the table contract [v >= 0]"),
+      messages(e))
+    assert(ManifestTable.versions(s"$wh/c").isEmpty)
+  }
+
+  test("SQL UPDATE lands under a CHECK added after RENAME COLUMN, which " +
+      "names the column by its new name") {
+    val wh = freshWh()
+    val s2 = catalogSession(wh)
+    val path = s"$wh/t"
+    s2.sql("CREATE TABLE graft.t (k BIGINT, v DOUBLE) TBLPROPERTIES ('merge.keys'='k')")
+    s2.sql("INSERT INTO graft.t VALUES (1, 1.0), (2, 2.0)")
+    s2.sql("ALTER TABLE graft.t RENAME COLUMN v TO value")
+    s2.sql("ALTER TABLE graft.t SET TBLPROPERTIES ('check.pos'='value >= 0')")
+    assert(ManifestTable.constraints(path) == Seq("value >= 0"))
+    s2.sql("UPDATE graft.t SET value = 5.0 WHERE k = 1")
+    assert(s2.sql("SELECT value FROM graft.t WHERE k = 1").head()
+      .getDouble(0) == 5.0)
+    val e = intercept[Exception](
+      s2.sql("UPDATE graft.t SET value = -1.0 WHERE k = 2"))
+    assert(messages(e).contains("constraint") ||
+      messages(e).contains("CHECK"), messages(e))
+    assert(s2.sql("SELECT sum(value) FROM graft.t").head().getDouble(0) == 7.0)
+  }
 }

@@ -37,4 +37,9 @@ object JobProbe {
       seen.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
+
+  /** A job that writes staged table files: `runStage`'s `runJob`, the
+    * one job every staging call starts once its plan is built. */
+  def isStaging(j: SparkListenerJobStart): Boolean =
+    j.stageInfos.exists(_.name.startsWith("runJob at ManifestTable.scala"))
 }

@@ -4,29 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (mirrors Verify's session config). */
+/** Shared local SparkSession for specs: [[GraftSession]]'s shape. */
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf0001 = "/root/testdata/sf0.001"
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // parser + rules + functions at session BUILD: the injected
-      // parser (SQL OPTIMIZE/VACUUM) cannot be retrofitted later
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // checksum-free local FS, mirroring Bench/Verify (specs must
-      // exercise the session shape the bench times)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4] whatever the environment: specs pin partition-dependent
+  // shapes, and the suite's command exports SPARK_GRAFT_CPUS=nproc
+  lazy val session: SparkSession = GraftSession.build("4")
 }

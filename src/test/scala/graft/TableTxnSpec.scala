@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.sources.ManifestTable
@@ -296,24 +298,85 @@ class TableTxnSpec extends SparkSpecBase {
     assert(e.getMessage.contains("keyed on"), e.getMessage)
   }
 
-  test("a merge-carrying bundle REFUSES rebase across any winner data " +
-      "addition (keys cannot be proven disjoint)") {
+  /** Arm a one-shot racing append of keys [from, until) at the claim. */
+  private def raceAppend(path: String, from: Long, until: Long): Unit =
+    ManifestTable.beforePublishHook = () => {
+      ManifestTable.beforePublishHook = () => ()
+      ManifestTable.append(batch(from, until), path)
+    }
+
+  private def dataDirFiles(path: String): Set[String] = {
+    val st = Files.list(java.nio.file.Paths.get(path, "data"))
+    try st.iterator().asScala.map(_.getFileName.toString).toSet
+    finally st.close()
+  }
+
+  test("a merge-carrying bundle REFUSES rebase across a winner that " +
+      "added one of its keys") {
     val path = mk()
     val txn = ManifestTable.newTransaction(spark, path)
     txn.merge(spark.range(0, 5).select(col("id").as("k"),
       (col("id") % 4).as("g"), lit(-9.0).as("v")), Seq("k"))
-    @volatile var fired = false
-    ManifestTable.beforePublishHook = () => {
-      if (!fired) { fired = true
-        ManifestTable.beforePublishHook = () => ()
-        ManifestTable.append(batch(9000, 9003), path)
-      }
-    }
+    raceAppend(path, 3, 4) // key 3 again: a possible new match
     val e = try intercept[IllegalArgumentException] { txn.commit() }
       finally ManifestTable.beforePublishHook = () => ()
-    assert(e.getMessage.contains("keyed merge"), e.getMessage)
+    assert(e.getMessage.contains("added rows with keys this write touches"),
+      e.getMessage)
     assert(ManifestTable.read(spark, path).where(col("v") === -9.0)
       .count() == 0, "the refused bundle landed nothing")
+  }
+
+  test("a merge-carrying bundle racing a key-disjoint append rebases " +
+      "metadata-only and reuses its staged files") {
+    val path = mk()
+    val v0 = ManifestTable.latestVersion(path)
+    val before = dataDirFiles(path)
+    val txn = ManifestTable.newTransaction(spark, path)
+    txn.merge(spark.range(0, 5).select(col("id").as("k"),
+      (col("id") % 4).as("g"), lit(-9.0).as("v")), Seq("k"))
+    val staged = dataDirFiles(path) -- before
+    raceAppend(path, 9000, 9003)
+    val v = try txn.commit() finally ManifestTable.beforePublishHook = () => ()
+    assert(v == v0 + 2, "the winner lands first, the bundle on top")
+    val winnerM = ManifestTable.snapshotAt(path, Some(v0 + 1)).get
+    val finalM = ManifestTable.snapshotAt(path, Some(v)).get
+    val loserAdded = finalM.files.toSet -- winnerM.files.toSet
+    assert(loserAdded.nonEmpty && loserAdded.subsetOf(staged),
+      "the bundle must adopt the files its merge staged, not re-stage")
+    assert(finalM.rebasedFrom == Some(v0))
+    val t = ManifestTable.read(spark, path)
+    assert(t.count() == 403)
+    assert(t.where(col("v") === -9.0).count() == 5, "the merge landed")
+    assert(t.where(col("k") >= 9000).count() == 3, "the winner carried")
+  }
+
+  /** Keys 0..4 update rows of the table's first file, 500..502 insert. */
+  private def upsertSrc = batch(0, 5).withColumn("v", lit(-9.0))
+    .unionByName(batch(500, 503).withColumn("v", lit(-9.0)))
+
+  private def stageNames(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
+    jobs.map(_.stageInfos.map(st => s"${st.name}[${st.numTasks}]").mkString(" | "))
+
+  test("a bundle merge stages its kept rows and its upserts in ONE " +
+      "staging job") {
+    val path = mk()
+    val txn = ManifestTable.newTransaction(spark, path)
+    val jobs = JobProbe.jobsOf(spark)(txn.merge(upsertSrc, Seq("k")))
+    assert(jobs.count(JobProbe.isStaging) == 1, stageNames(jobs))
+    txn.commit()
+    val t = ManifestTable.read(spark, path)
+    assert(t.count() == 403 && t.where(col("v") === -9.0).count() == 8)
+  }
+
+  test("a standalone CoW merge starts at most 10 jobs, exactly one of " +
+      "them a staging job") {
+    val path = mk()
+    val jobs = JobProbe.jobsOf(spark)(
+      ManifestTable.merge(spark, path, upsertSrc, Seq("k")))
+    assert(jobs.count(JobProbe.isStaging) == 1, stageNames(jobs))
+    assert(jobs.size <= 10, stageNames(jobs))
+    val t = ManifestTable.read(spark, path)
+    assert(t.count() == 403 && t.where(col("v") === -9.0).count() == 8)
   }
 
   test("a constraint SET both by the bundle and by a concurrent commit " +
